@@ -3,6 +3,37 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 object Bench {
+  /** One query's timing in one pass: (name, signed wall sec — negative on
+    * failure, executor task sec). */
+  private[graft] type Timing = (String, Double, Double)
+
+  /** Per-query min of two primary passes; the task column follows the
+    * pass that supplied the min (task time of the same execution window).
+    * A failure in either pass stays negative. */
+  private[graft] def merge(a: Seq[Timing], b: Seq[Timing]): Seq[Timing] =
+    a.zip(b).map { case ((name, x, tx), (_, y, ty)) =>
+      val m = math.min(math.abs(x), math.abs(y))
+      val t = if (math.abs(x) <= math.abs(y)) tx else ty
+      (name, if (x >= 0 && y >= 0) m else -math.max(m, 0.01), t)
+    }
+
+  /** Merge of the contention pass into the primary result. Unlike
+    * [[merge]], the extra pass can only IMPROVE a query's standing: a
+    * transient failure in it must not flip a query that was clean in both
+    * primary passes, and a clean window in it redeems a previously-failed
+    * query. The task column follows the pass that supplied the wall
+    * figure — the min-|wall| pass when both failed. */
+  private[graft] def mergeExtra(a: Seq[Timing], b: Seq[Timing]): Seq[Timing] =
+    a.zip(b).map { case ((name, x, tx), (_, y, ty)) =>
+      val keepA =
+        if ((x >= 0) == (y >= 0)) math.abs(x) <= math.abs(y) else x >= 0
+      val w = if (x >= 0 && y >= 0) math.min(x, y)
+              else if (x >= 0) x
+              else if (y >= 0) y
+              else -math.max(math.min(-x, -y), 0.01)
+      (name, w, if (keepA) tx else ty)
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -69,7 +100,7 @@ object Bench {
     // column is additive reporting only — the driver's schema fields
     // (metric/value/unit/queries/sf) are computed from wall exactly as
     // before.
-    def runAll(): Seq[(String, Double, Double)] = selected.zipWithIndex.map {
+    def runAll(): Seq[Timing] = selected.zipWithIndex.map {
       case ((name, fn), i) =>
         if (i % 25 == 0) probe() // interleave the sentinel with real work
         val tt0 = taskMs.get()
@@ -95,21 +126,15 @@ object Bench {
         // shared-query total (95.8→107.2 s) with the probe drift
         // unchanged — the block-manager churn costs more than the
         // residual blocks do, and the drift (0.18→0.6 s over ~320 query
-        // executions) is JVM aging, not block pressure.
+        // executions) is JVM aging, not block pressure. The frames the
+        // query itself materialized are already gone: its Watchdog scope
+        // released them (graft.util.Materialize).
         // Clamp failures away from zero, matching the 2-decimal per-query
         // format: a fast failure must never round to -0.00 (which
         // JSON-parses equal to 0.0).
         val tsec = (taskMs.get() - tt0) / 1e3
         (name, if (ok) sec else -math.max(sec, 0.01), tsec)
     }
-    // Per-query min of the wall passes; the task column follows the pass
-    // that supplied the min (task time of the same execution window).
-    def merge(a: Seq[(String, Double, Double)], b: Seq[(String, Double, Double)]) =
-      a.zip(b).map { case ((name, x, tx), (_, y, ty)) =>
-        val m = math.min(math.abs(x), math.abs(y))
-        val t = if (math.abs(x) <= math.abs(y)) tx else ty
-        (name, if (x >= 0 && y >= 0) m else -math.max(m, 0.01), t)
-      }
     // Contended = any probe ran >2.5x the series median (and slow in absolute
     // terms, so GC jitter on a ~0.05 s probe never trips it). The median —
     // not the min — anchors the test: sustained load inflates the whole
@@ -140,20 +165,7 @@ object Bench {
     var passes = 2
     // If the sentinel tripped, buy one more pass: min-of-passes recovers the
     // true number for every query that got at least one clean window, and
-    // the probe series still records that the run needed defending. Unlike
-    // the primary merge, the extra pass can only IMPROVE a query's standing:
-    // a transient failure in it must not flip a query that was clean in both
-    // primary passes, and a clean window in it redeems a previously-failed
-    // query.
-    def mergeExtra(a: Seq[(String, Double, Double)], b: Seq[(String, Double, Double)]) =
-      a.zip(b).map { case ((name, x, tx), (_, y, ty)) =>
-        val keepA = if (x >= 0 && y >= 0) x <= y else x >= 0
-        val w = if (x >= 0 && y >= 0) math.min(x, y)
-                else if (x >= 0) x
-                else if (y >= 0) y
-                else -math.max(math.min(-x, -y), 0.01)
-        (name, w, if (keepA) tx else ty)
-      }
+    // the probe series still records that the run needed defending.
     if (contended()) {
       val pass3 = runAll()
       results = mergeExtra(results, pass3)

@@ -22,7 +22,7 @@ object Explain {
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         println(s"\n========== $n ==========")
-        fn(spark, sfDir).explain("formatted")
+        graft.util.Materialize.scoped(fn(spark, sfDir).explain("formatted"))
       }
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.Materialize
 
 /** Internal-plan inspector: the committed plan evidence for operator
   * INTERNALS that the declared queries hide behind terminal checkpoints
@@ -34,11 +35,10 @@ object PlanDump {
       val td = graft.Tables.documents(spark, sfDir)
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"), expr(s"array_distinct($shingles3)").as("td"))
-        .persist()
+        .transform(Materialize.persist(_))
       td.count()
       println("\n========== ppjoin t=1/2 ==========")
       graft.operators.TextOps.prefixJaccardPairs(td, 1, 2).explain("formatted")
-      td.unpersist(blocking = false)
     }
 
     if (want("bitext_margin")) {
@@ -92,7 +92,7 @@ object PlanDump {
         .distinct()
       val edges = edges0
         .unionByName(edges0.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint()
+        .distinct().transform(Materialize.localCheckpoint(_))
       val m = edges.count()
       val alive0 = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= 4).select(col("src").as("node"))
@@ -112,7 +112,7 @@ object PlanDump {
       // r18 composition assigned the corpus three times)
       import org.apache.spark.sql.functions._
       val ops = operators.VectorOps
-      val t2p = ops.top2CellsFor(spark, sfDir).persist()
+      val t2p = Materialize.persist(ops.top2CellsFor(spark, sfDir))
       t2p.count()
       val assigned = t2p.select(col("vec_id"), col("v"), col("c1").as("cell"))
       val edges = ops.knnGraphEdgesFrom(t2p, 3)
@@ -124,7 +124,6 @@ object PlanDump {
       exact.join(beam, Seq("q_id", "vec_id"), "left")
         .groupBy(col("q_id"))
         .agg(count(lit(1)).as("k")).explain("formatted")
-      t2p.unpersist(blocking = false)
     }
 
     if (want("pq_encode")) {

@@ -22,7 +22,8 @@ object Profile {
     })
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)
-    (1 to reps).foreach { i =>
+    // each rep is one query scope, so no rep inherits another's cache
+    (1 to reps).foreach { i => graft.util.Materialize.scoped {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -30,7 +31,7 @@ object Profile {
       val t2 = System.nanoTime()
       println(f"[profile] $name rep $i: build ${(t1 - t0) / 1e9}%.3f s + " +
         f"count ${(t2 - t1) / 1e9}%.3f s ($n rows)")
-    }
+    }}
     spark.stop()
   }
 }

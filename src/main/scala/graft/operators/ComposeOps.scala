@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.{Skew, TripleStore}
+import graft.util.Materialize
 
 /** Composed operators: the career render (G6 — the reference's most complex
   * generator, combining role typing, event minting, time-span expansion G1,
@@ -227,7 +228,7 @@ object ComposeOps {
     graft.multimodal.Multimodal.aHash(media)
       .groupBy(col("ahash"))
       .agg(count(lit(1)).as("n_media"), min(col("media_id")).as("rep_media"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
   }
 
   /** Near-dup hash pairs over the DISTINCT-hash table: 16-bit band keys,

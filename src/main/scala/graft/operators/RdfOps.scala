@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.{Closure, SparqlAlgebra, TripleStore}
+import graft.util.Materialize
 
 /** SPARQL-subset algebra over the derived triple store: BGP joins (J1),
   * label service (J7), property-path closure (J4/J5), inverse-property rule
@@ -1100,22 +1101,18 @@ object RdfOps {
     * across iterations. Top-20 under the total (pr desc, node) order
     * via TakeOrderedAndProject. */
   def q198Pagerank(sp: SparkSession, dir: String): DataFrame = {
-    // single terminal job over a 3-round chain: staged AQE re-planning at
-    // every exchange is pure overhead here (graft.util.LoopConf)
-    graft.util.LoopConf.noAqe(sp) {
     // localCheckpoint (eager), not persist: the loop's lazy per-round
     // checkpoints re-analyze this table's logical plan every round, and
     // the TripleStore union behind it is a deep tree — checkpointed it
     // plans as one leaf (same one-pass materialization as persist+count)
-    val e = TripleStore.triples(sp, dir)
+    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
       .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().persist()
+      .select(col("s").as("src"), col("o").as("dst")))
+    val nodes = Materialize.persist(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
     var pr: DataFrame = nodes.withColumn("pr", lit(1.0) / n)
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     (1 to 3).foreach { _ =>
       val dangling = pr.join(deg, pr("node") === deg("src"), "left_anti")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
@@ -1128,26 +1125,14 @@ object RdfOps {
         .select(nodes("node"), round(
           lit(0.15) / n + lit(0.85) *
             (coalesce(col("cin"), lit(0.0)) + col("dm") / n), 10).as("pr"))
-        .localCheckpoint(false) // lazy: out's one terminal job materializes
-      rounds += pr
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: the terminal job materializes
     }
     // the cut sorts on the SAME 8dp key it emits (round-before-use):
     // sorting on the 10dp iteration state would let two 8dp-equal nodes
     // straddling rank 20 resolve differently from the oracle's
     // (rounded alias, node) order
-    val out = pr
-      .orderBy(round(col("pr"), 8).desc, col("node").asc).limit(20)
+    pr.orderBy(round(col("pr"), 8).desc, col("node").asc).limit(20)
       .select(col("node"), round(col("pr"), 8).as("pr"))
-      .localCheckpoint()
-    nodes.unpersist(blocking = false)
-    // out is an eager checkpoint: e's blocks (and every mid-loop lazy-ckpt
-    // round's, all materialized by out's one job) are dead — drop them
-    // instead of leaking per-query blocks across a long session (ADVICE
-    // r18).
-    graft.util.CkptBlocks.release(e)
-    rounds.foreach(graft.util.CkptBlocks.release)
-    out
-    }
   }
 
   /** PERSONALIZED PageRank from a seed set (the topic-sensitive variant,
@@ -1164,27 +1149,23 @@ object RdfOps {
     * round to 10dp before reuse; the top-20 sorts on the 8dp emitted
     * key (q198's round-before-use cut). */
   def q298PersonalizedPagerank(sp: SparkSession, dir: String): DataFrame = {
-    // single terminal job over a 3-round chain: staged AQE re-planning at
-    // every exchange is pure overhead here (graft.util.LoopConf)
-    graft.util.LoopConf.noAqe(sp) {
     // localCheckpoint (eager), not persist: the loop's lazy per-round
     // checkpoints re-analyze this table's logical plan every round, and
     // the TripleStore union behind it is a deep tree — checkpointed it
     // plans as one leaf (same one-pass materialization as persist+count)
-    val e = TripleStore.triples(sp, dir)
+    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
       .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().persist()
-    val seeds = e.filter(col("dst") === "R1")
-      .select(col("src").as("node")).distinct().localCheckpoint()
+      .select(col("s").as("src"), col("o").as("dst")))
+    val nodes = Materialize.persist(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val seeds = Materialize.localCheckpoint(e.filter(col("dst") === "R1")
+      .select(col("src").as("node")).distinct())
     val ns = seeds.count().toDouble
     val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
     val seedTag = broadcast(seeds.withColumn("inS", lit(1.0)))
     var pr: DataFrame = nodes.join(seedTag, Seq("node"), "left")
       .select(col("node"),
         (coalesce(col("inS"), lit(0.0)) / ns).as("pr"))
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     (1 to 3).foreach { _ =>
       val dangling = pr.join(deg, pr("node") === deg("src"), "left_anti")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
@@ -1199,20 +1180,10 @@ object RdfOps {
           coalesce(col("inS"), lit(0.0)) *
             (lit(0.15) / ns + lit(0.85) * col("dm") / ns) +
             lit(0.85) * coalesce(col("cin"), lit(0.0)), 10).as("pr"))
-        .localCheckpoint(false) // lazy: out's one terminal job materializes
-      rounds += pr
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: the terminal job materializes
     }
-    val out = pr
-      .orderBy(round(col("pr"), 8).desc, col("node").asc).limit(20)
+    pr.orderBy(round(col("pr"), 8).desc, col("node").asc).limit(20)
       .select(col("node"), round(col("pr"), 8).as("pr"))
-      .localCheckpoint()
-    nodes.unpersist(blocking = false)
-    // dead after the eager terminal checkpoint (q198 rationale)
-    graft.util.CkptBlocks.release(e)
-    graft.util.CkptBlocks.release(seeds)
-    rounds.foreach(graft.util.CkptBlocks.release)
-    out
-    }
   }
 
   /** HITS hubs & authorities over the entity graph — the second classic
@@ -1234,22 +1205,18 @@ object RdfOps {
     * across rounds. Top-20 under (authority desc, node) via
     * TakeOrderedAndProject. */
   def q249Hits(sp: SparkSession, dir: String): DataFrame = {
-    // single terminal job over a 3-round chain: staged AQE re-planning at
-    // every exchange is pure overhead here (graft.util.LoopConf)
-    graft.util.LoopConf.noAqe(sp) {
     // localCheckpoint (eager), not persist: the loop's lazy per-round
     // checkpoints re-analyze this table's logical plan every round, and
     // the TripleStore union behind it is a deep tree — checkpointed it
     // plans as one leaf (same one-pass materialization as persist+count)
-    val e = TripleStore.triples(sp, dir)
+    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
       .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().persist()
+      .select(col("s").as("src"), col("o").as("dst")))
+    val nodes = Materialize.persist(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     var hub: DataFrame = nodes.withColumn("h", lit(1.0) / n)
     var auth: DataFrame = null
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     (1 to 3).foreach { _ =>
       val aRaw = hub.join(e, hub("node") === e("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
@@ -1258,7 +1225,7 @@ object RdfOps {
         .crossJoin(broadcast(aNorm))
         .select(nodes("node"),
           round(coalesce(col("ar"), lit(0.0)) / col("an"), 10).as("a"))
-        .localCheckpoint(false) // lazy: hRaw's norm agg materializes
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: hRaw's norm agg materializes
       val hRaw = auth.join(e, auth("node") === e("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("hr"))
       val hNorm = hRaw.agg(sum(col("hr")).as("hn"))
@@ -1266,21 +1233,12 @@ object RdfOps {
         .crossJoin(broadcast(hNorm))
         .select(nodes("node"),
           round(coalesce(col("hr"), lit(0.0)) / col("hn"), 10).as("h"))
-        .localCheckpoint(false) // lazy: next round / terminal join materializes
-      rounds += auth
-      rounds += hub
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: next round / terminal join materializes
     }
-    val out = auth.join(hub, Seq("node"))
+    auth.join(hub, Seq("node"))
       .orderBy(round(col("a"), 8).desc, col("node").asc).limit(20)
       .select(col("node"), round(col("a"), 8).as("authority"),
         round(col("h"), 8).as("hub"))
-      .localCheckpoint()
-    nodes.unpersist(blocking = false)
-    // dead after the eager terminal checkpoint (q198 rationale)
-    graft.util.CkptBlocks.release(e)
-    rounds.foreach(graft.util.CkptBlocks.release)
-    out
-    }
   }
 
   /** k-core decomposition by iterative peeling over the bipartite
@@ -1309,12 +1267,9 @@ object RdfOps {
     * self-loops. Returns surviving (node, core_deg). maxRounds is a
     * refuse-loudly guard, not a truncation — non-convergence throws. */
   def kCore(edges0: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
-    // data-dependent round count, one action per round — per-round AQE
-    // re-planning is pure overhead (graft.util.LoopConf)
-    graft.util.LoopConf.noAqe(edges0.sparkSession) {
     var edges = edges0
       .unionByName(edges0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(false) // lazy: the count below materializes
+      .distinct().transform(Materialize.localCheckpoint(_, eager = false)) // lazy: the count below materializes
     var m = edges.count()
     var rounds = 0
     var done = m == 0L
@@ -1331,11 +1286,13 @@ object RdfOps {
         .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(false) // lazy: ONE job per round (count materializes)
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: ONE job per round (count materializes)
       val m2 = pruned.count()
       // pruned is a materialized leaf now — the superseded round's blocks
-      // are dead (peeling keeps only the newest edge set alive)
-      graft.util.CkptBlocks.release(edges)
+      // are dead (peeling keeps only the newest edge set alive), so they
+      // go now rather than at the query boundary: memory stays bounded by
+      // one edge set however many rounds peeling takes
+      Materialize.release(edges)
       done = m2 == m
       m = m2
       edges = pruned
@@ -1344,7 +1301,6 @@ object RdfOps {
     if (!done) throw new IllegalStateException(
       s"kCore did not converge in $maxRounds rounds — raise maxRounds")
     edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-    }
   }
 
   /** Min-hop BFS from a seed entity over the UNDIRECTED entity graph
@@ -1366,17 +1322,17 @@ object RdfOps {
       .select(col("s").as("src"), col("o").as("dst"))
     val e = fwd
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint() // leaf plan for the per-round joins
+      .distinct().transform(Materialize.localCheckpoint(_)) // leaf plan for the per-round joins
 
-    var visited = Seq(("R1", 0L)).toDF("node", "hop").localCheckpoint()
+    var visited = Materialize.localCheckpoint(Seq(("R1", 0L)).toDF("node", "hop"))
     var frontier = visited.select("node")
     (1 to 4).foreach { h =>
       val next = frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .withColumn("hop", lit(h.toLong))
-        .localCheckpoint(false) // lazy — fixed-round loop, no driver read needed
-      visited = visited.unionByName(next).localCheckpoint(false)
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy — fixed-round loop, no driver read needed
+      visited = Materialize.localCheckpoint(visited.unionByName(next), eager = false)
       frontier = next.select("node")
     }
     visited
@@ -1399,11 +1355,11 @@ object RdfOps {
       .select(col("s").as("src"), col("o").as("dst"))
     val e = fwd
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint() // leaf plan for the per-round joins
+      .distinct().transform(Materialize.localCheckpoint(_)) // leaf plan for the per-round joins
 
     var lbl = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     (1 to 3).foreach { _ =>
       lbl = e.join(lbl, e("src") === lbl("node"))
         .groupBy(e("dst").as("node"), col("label"))
@@ -1411,7 +1367,7 @@ object RdfOps {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("label"))
-        .localCheckpoint(false) // lazy — fixed-round loop
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy — fixed-round loop
     }
     lbl
   }
@@ -1433,15 +1389,15 @@ object RdfOps {
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .withColumn("w", (length(col("src")) * 7 + length(col("dst")) * 13) % 5 + 1)
-      .localCheckpoint() // leaf plan for the per-round joins
+      .transform(Materialize.localCheckpoint(_)) // leaf plan for the per-round joins
 
-    var dist = Seq(("R1", 0L)).toDF("node", "dist").localCheckpoint()
+    var dist = Materialize.localCheckpoint(Seq(("R1", 0L)).toDF("node", "dist"))
     (1 to 4).foreach { _ =>
       val relaxed = dist.join(e, dist("node") === e("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       dist = dist.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(false) // lazy — fixed-round loop
+        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy — fixed-round loop
     }
     dist
   }

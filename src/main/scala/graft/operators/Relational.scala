@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.util.Materialize
 
 /** Core relational operator surface: aggregation (A1–A3), joins (J2/J3/J6/
   * J8/J9), dedup / set ops / pagination (D1–D7).
@@ -430,7 +431,7 @@ object Relational {
       .join(broadcast(Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("okey"), col("p_brand").as("item"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.localCheckpoint(_))
     val nOrders = items.select(col("okey")).distinct()
       .agg(count(lit(1)).as("n_orders"))
     val marg = items.groupBy(col("item")).agg(count(lit(1)).as("n_item"))

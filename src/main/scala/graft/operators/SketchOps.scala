@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Materialize
 
 /** Sketch-prefiltered EXACT analytics — the two-phase pattern 100 TB
   * forces whenever the naive answer needs a global sort or an unbounded
@@ -66,18 +67,15 @@ object SketchOps {
   def heavyHitters(terms: DataFrame, k: Int): DataFrame = {
     val s = terms.sparkSession
     import s.implicits._
-    val tokens = terms.select(col("term")).persist()
+    val tokens = Materialize.persist(terms.select(col("term")))
     val n = tokens.count() // materializes the persist; total for the threshold
     val candidates = tokens.as[String]
       .mapPartitions(misraGries(k, _))
       .toDF("term").distinct()
-    val out = tokens.join(broadcast(candidates), Seq("term"))
+    tokens.join(broadcast(candidates), Seq("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("n"))
       .filter(col("n") > lit(n.toDouble / k))
       .withColumn("share", round(col("n") / lit(n.toDouble), 6))
-      .localCheckpoint()
-    tokens.unpersist(blocking = false)
-    out
   }
 
   /** PER-GROUP exact heavy hitters over (g, term) via the
@@ -91,19 +89,16 @@ object SketchOps {
     * threshold, which erases the sketch's partition-order sensitivity
     * from the answer. */
   def groupedHeavyHitters(terms: DataFrame, k: Int): DataFrame = {
-    val tokens = terms.select(col("g"), col("term")).persist()
+    val tokens = Materialize.persist(terms.select(col("g"), col("term")))
     val totals = tokens.groupBy(col("g")).agg(count(lit(1)).as("gn"))
     val cand = tokens.groupBy(col("g"))
       .agg(graft.functions.MgCandidates.mgCandidates(col("term"), k).as("cands"))
       .select(col("g"), explode(col("cands")).as("term"))
-    val out = tokens.join(broadcast(cand), Seq("g", "term"), "left_semi")
+    tokens.join(broadcast(cand), Seq("g", "term"), "left_semi")
       .groupBy(col("g"), col("term")).agg(count(lit(1)).as("n"))
       .join(broadcast(totals), Seq("g"))
       .filter(col("n") > col("gn") / k)
       .select(col("g"), col("term"), col("n"))
-      .localCheckpoint()
-    tokens.unpersist(blocking = false)
-    out
   }
 
   // ------------------------------------------------------ rank selection
@@ -125,7 +120,7 @@ object SketchOps {
     import s.implicits._
     val cents = values.select(col("c"))
       .withColumn("bucket", floor(col("c") / bucketW).cast("long"))
-      .persist()
+      .transform(Materialize.persist(_))
     val n = cents.count()
     val ranks = ps.map(p => (p, math.ceil(p * n).toLong)).toDF("p", "rank")
     val wcum = Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, 0)
@@ -135,13 +130,10 @@ object SketchOps {
       .join(broadcast(ranks), col("prior") < col("rank") && col("rank") <= col("cum"))
       .select(col("p"), col("rank"), col("bucket"), col("prior"))
     val win = Window.partitionBy(col("p")).orderBy(col("c"))
-    val out = cents.join(broadcast(targets), Seq("bucket"))
+    cents.join(broadcast(targets), Seq("bucket"))
       .withColumn("rn", row_number().over(win))
       .filter(col("prior") + col("rn") === col("rank"))
       .select(col("p"), col("c").as("value"))
-      .localCheckpoint()
-    cents.unpersist(blocking = false)
-    out
   }
 
   /** Per-group exact median over (g, c) — [[exactQuantiles]]' pattern
@@ -154,7 +146,7 @@ object SketchOps {
   def groupedMedian(values: DataFrame, bucketW: Long = 65536L): DataFrame = {
     val cents = values.select(col("g"), col("c"))
       .withColumn("bucket", floor(col("c") / bucketW).cast("long"))
-      .persist()
+      .transform(Materialize.persist(_))
     val ranks = cents.groupBy(col("g")).agg(count(lit(1)).as("gn"))
       .select(col("g"), ceil(col("gn") / 2.0).cast("long").as("rank"))
     val wcum = Window.partitionBy(col("g")).orderBy(col("bucket"))
@@ -166,13 +158,10 @@ object SketchOps {
       .filter(col("prior") < col("rank") && col("rank") <= col("cum"))
       .select(col("g"), col("bucket"), col("prior"), col("rank"))
     val win = Window.partitionBy(col("g")).orderBy(col("c"))
-    val out = cents.join(broadcast(targets), Seq("g", "bucket"))
+    cents.join(broadcast(targets), Seq("g", "bucket"))
       .withColumn("rn", row_number().over(win))
       .filter(col("prior") + col("rn") === col("rank"))
       .select(col("g"), col("c").as("median"))
-      .localCheckpoint()
-    cents.unpersist(blocking = false)
-    out
   }
 
   /** Equal-frequency discretization of a long `c` column — the feature-
@@ -186,17 +175,14 @@ object SketchOps {
     * (bin, n, lo, hi). */
   def equifreqBins(values: DataFrame, ps: Seq[Double],
                    bucketW: Long = 65536L): DataFrame = {
-    val vals = values.select(col("c")).persist()
+    val vals = Materialize.persist(values.select(col("c")))
     val bvals = exactQuantiles(vals, ps, bucketW)
       .select(col("value")).collect().map(_.getLong(0))
     val bin = bvals.map(b => when(col("c") > b, 1L).otherwise(0L))
       .reduce(_ + _)
-    val out = vals
+    vals
       .groupBy(bin.as("bin"))
       .agg(count(lit(1)).as("n"), min(col("c")).as("lo"), max(col("c")).as("hi"))
-      .localCheckpoint()
-    vals.unpersist(blocking = false)
-    out
   }
 
   // ----------------------------------------------------- budget curation
@@ -214,7 +200,7 @@ object SketchOps {
   def budgetPrefix(scored: DataFrame, frac: Double): DataFrame = {
     val in = scored.select(col("id"), col("score"), col("w"))
       .withColumn("sb", floor(col("score") * 1000).cast("long"))
-      .persist()
+      .transform(Materialize.persist(_))
     val budget = in.agg(floor(sum(col("w")) * frac).cast("long").as("budget"))
     val wb = Window.orderBy(col("sb").desc).rowsBetween(Window.unboundedPreceding, 0)
     val offsets = in.groupBy(col("sb")).agg(sum(col("w")).as("bsum"))
@@ -222,14 +208,11 @@ object SketchOps {
       .select(col("sb"), col("offset"))
     val win = Window.partitionBy(col("sb")).orderBy(col("score").desc, col("id"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val out = in.join(broadcast(offsets), Seq("sb"))
+    in.join(broadcast(offsets), Seq("sb"))
       .withColumn("cum", col("offset") + sum(col("w")).over(win))
       .crossJoin(broadcast(budget))
       .filter(col("cum") <= col("budget"))
       .select(col("id"), col("score"), col("w"), col("cum"))
-      .localCheckpoint()
-    in.unpersist(blocking = false)
-    out
   }
 
   /** Per-group budget-prefix curation over (g, id, score, w): every
@@ -244,7 +227,7 @@ object SketchOps {
   def groupedBudgetPrefix(scored: DataFrame, frac: Double): DataFrame = {
     val in = scored.select(col("g"), col("id"), col("score"), col("w"))
       .withColumn("sb", floor(col("score") * 1000).cast("long"))
-      .persist()
+      .transform(Materialize.persist(_))
     val budgets = in.groupBy(col("g"))
       .agg(floor(sum(col("w")) * frac).cast("long").as("budget"))
     val wb = Window.partitionBy(col("g")).orderBy(col("sb").desc)
@@ -255,14 +238,11 @@ object SketchOps {
     val win = Window.partitionBy(col("g"), col("sb"))
       .orderBy(col("score").desc, col("id"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val out = in.join(broadcast(offsets), Seq("g", "sb"))
+    in.join(broadcast(offsets), Seq("g", "sb"))
       .withColumn("cum", col("offset") + sum(col("w")).over(win))
       .join(broadcast(budgets), Seq("g"))
       .filter(col("cum") <= col("budget"))
       .select(col("g"), col("id"), col("score"), col("w"), col("cum"))
-      .localCheckpoint()
-    in.unpersist(blocking = false)
-    out
   }
 
   // ------------------------------------------------- fixture query board

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.Materialize
 
 /** Large-scale training-data text operators over `documents` (north-star
   * extensions per BASELINE.json): exact + MinHash/LSH + SimHash + n-gram
@@ -106,7 +107,8 @@ object TextOps {
 
   /** Band-bucket candidate pairs with the oversized-bucket diversion.
     * `docsWithToks` must carry (doc_id, toks); the result is the distinct
-    * (doc_a < doc_b) pair set, eagerly materialized so no cache leaks out. */
+    * (doc_a < doc_b) pair set, eagerly materialized: a dozen query
+    * functions compose it, several reading it more than once. */
   private[graft] def lshPairsCapped(docsWithToks: DataFrame, cap: Int): DataFrame = {
     // The documents table arrives as one small parquet split; the minhash
     // stage is compute-bound (the md5 per shingle) and is parallelized by
@@ -115,7 +117,7 @@ object TextOps {
     // shingle→minhash pipeline (5M+ md5 at sf0.1).
     val bands = minhashBands(docsWithToks)
       .filter(col("bkey").isNotNull) // shingle-less docs never pair
-      .persist()
+      .transform(Materialize.persist(_))
     // ONE action both materializes the persist and answers the census
     // question: the max band-bucket size is a map-side-combined
     // aggregation plus a 1-row global max, so the clean path pays no
@@ -145,13 +147,9 @@ object TextOps {
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .distinct()
-          // Materialize the (tiny) pair set eagerly so the band cache can
-          // be dropped before returning — otherwise every bench/verify
-          // run leaks a cached signature table into the rest of the
-          // session.
-          .localCheckpoint()
+          .transform(Materialize.localCheckpoint(_))
       else {
-        val keys = over.persist()
+        val keys = Materialize.persist(over)
         keys.count()
         // capped buckets pair as usual (anti-join against the tiny
         // oversized-key set — broadcast-sized by construction)
@@ -169,13 +167,8 @@ object TextOps {
           .select(col("doc_id"), expr(s"array_distinct($shingles3)").as("td"))
         val overPairs = prefixJaccardPairs(overTd, 1, 2)
           .select(col("doc_a"), col("doc_b"))
-        val out = smallPairs.unionByName(overPairs)
-          .distinct()
-          .localCheckpoint()
-        keys.unpersist(blocking = false)
-        out
+        Materialize.localCheckpoint(smallPairs.unionByName(overPairs).distinct())
       }
-    bands.unpersist(blocking = false)
     pairs
   }
 
@@ -342,7 +335,7 @@ object TextOps {
   def q302ChiSquare(s: SparkSession, dir: String): DataFrame = {
     val cl = Tables.documents(s, dir)
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-      .localCheckpoint() // bounded contingency table
+      .transform(Materialize.localCheckpoint(_)) // bounded contingency table
     val rows = cl.groupBy(col("lang")).agg(sum(col("o")).as("rt"))
     val cols = cl.groupBy(col("source")).agg(sum(col("o")).as("ct"))
     val n = cl.agg(sum(col("o")).as("n"),
@@ -416,12 +409,12 @@ object TextOps {
     * side — identical to counting winners directly), so the pair table
     * is the complete sufficient statistic. */
   private[graft] def bradleyTerryFit(pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.localCheckpoint() // |sources|² bound
+    val pairs = Materialize.localCheckpoint(pairs0) // |sources|² bound
     val wins = pairs.select(col("i").as("src"), col("wi").as("w"))
       .unionByName(pairs.select(col("j").as("src"),
         (col("nij") - col("wi")).as("w")))
       .groupBy(col("src")).agg(sum(col("w")).as("w"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val ed = pairs.select(col("i").as("a2"), col("j").as("b2"), col("nij"))
       .unionByName(
         pairs.select(col("j").as("a2"), col("i").as("b2"), col("nij")))
@@ -450,8 +443,8 @@ object TextOps {
           round(lit(1e6) * (col("prm").cast("double") /
             col("sm").cast("double"))).cast("long").as("pm"))
     }
-    var p = players.withColumn("pm", lit(1000000L)).localCheckpoint()
-    for (_ <- 1 to 3) p = step(p).localCheckpoint() // tiny: |sources| rows
+    var p = Materialize.localCheckpoint(players.withColumn("pm", lit(1000000L)))
+    for (_ <- 1 to 3) p = Materialize.localCheckpoint(step(p)) // tiny: |sources| rows
     p.join(broadcast(wins), Seq("src"), "left")
       .select(col("src"), coalesce(col("w"), lit(0L)).as("w"),
         (col("pm").cast("double") / 1e6).as("p"))
@@ -1208,7 +1201,7 @@ object TextOps {
 
   def q268CountMinSketch(s: SparkSession, dir: String): DataFrame = {
     val tf = cmsTf(Tables.documents(s, dir).select(col("text")))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     cmsProbe(cmsCounters(tf), tf.orderBy(col("cf").desc, col("sh")).limit(10))
   }
 
@@ -1277,7 +1270,7 @@ object TextOps {
       .withColumn("fold",
         expr("CAST(conv(substr(md5(CAST(canonical_id AS STRING)), 1, 4), 16, 10) AS BIGINT) % 5")
           .cast("long"))
-      .localCheckpoint() // shared by the per-fold census and the audit
+      .transform(Materialize.localCheckpoint(_)) // shared by the per-fold census and the audit
     val crossing = pairs
       .join(folds.select(col("doc_id").as("doc_a"), col("fold").as("fa")), Seq("doc_a"))
       .join(folds.select(col("doc_id").as("doc_b"), col("fold").as("fb")), Seq("doc_b"))
@@ -1307,7 +1300,7 @@ object TextOps {
       .select(col("source"), md5(col("text")).as("h"))
       .groupBy(col("source"))
       .agg(graft.functions.BottomK.bottomK(col("h"), k).as("sk"))
-      .localCheckpoint() // ≤ |sources| rows
+      .transform(Materialize.localCheckpoint(_)) // ≤ |sources| rows
     val st = Tables.documents(s, dir)
       .select(col("source"), col("text")).distinct()
     val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n"))
@@ -1417,7 +1410,7 @@ object TextOps {
       .select(bpePadWs(
         expr("transform(sequence(1, length(w)), i -> substr(w, i, 1))"))
         .as("ws"), col("cnt"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     for (r <- 1 to rounds) {
       val best = types
@@ -1434,7 +1427,7 @@ object TextOps {
       merges += ((r.toLong, a, b, n))
       types = types
         .withColumn("ws", bpeMergeWs(col("ws"), a, b))
-        .localCheckpoint() // per-round lineage cut on the type table
+        .transform(Materialize.localCheckpoint(_)) // per-round lineage cut on the type table
     }
     import s.implicits._
     merges.toSeq.map { case (i, a, b, n) => (i, a, b, a + b, n) }
@@ -1666,7 +1659,7 @@ object TextOps {
 
   def q276Winnowing(s: SparkSession, dir: String): DataFrame = {
     val fps = winnowFingerprints(docs(s, dir))
-      .localCheckpoint() // fingerprint table: the shared artifact
+      .transform(Materialize.localCheckpoint(_)) // fingerprint table: the shared artifact
     fps.as("a").join(fps.as("b"),
         col("a.fph") === col("b.fph") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -1719,7 +1712,7 @@ object TextOps {
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), allDocs,
         uniqueNodes = true) // doc_id is the table PK
       .withColumn("deleted", col("node") % 17 === 0)
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     // the RECLUSTER runs only over AFFECTED clusters' survivors: a
     // cluster with no deletion keeps its labels by definition, so the
     // second CC's input is deletion-adjacent, not corpus-sized (pair
@@ -1777,7 +1770,7 @@ object TextOps {
       // but the cached plan keeps the aggregate provenance visible, so
       // the posture audit can PROVE the ranking window below reads a
       // strata-bounded table (a checkpoint erases it into a bare RDD scan)
-      .persist()
+      .transform(Materialize.persist(_))
     val tot = strata.agg(sum(col("w6")).as("wtot"))
     val quota = strata.crossJoin(broadcast(tot))
       .withColumn("fl", expr(s"$B * w6 div wtot"))
@@ -1855,7 +1848,7 @@ object TextOps {
       .filter(length(col("tok")) >= 2)
       .groupBy(col("tok")).agg(count(lit(1)).as("n"))
       .select(regexp_replace(col("tok"), "(.)", "{$1}").as("enc"), col("n"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     for (round <- 1 to 3) {
       val best = words
@@ -1872,7 +1865,7 @@ object TextOps {
       merges += ((round, a, b, cnt))
       words = words.select(
         call_function("replace", col("enc"), lit(s"{$a}{$b}"), lit(s"{$a$b}")).as("enc"),
-        col("n")).localCheckpoint()
+        col("n")).transform(Materialize.localCheckpoint(_))
     }
     merges.toSeq.toDF("round", "lhs", "rhs", "pair_count")
       .select(col("round").cast("int").as("round"), col("lhs"), col("rhs"),
@@ -1893,21 +1886,18 @@ object TextOps {
   def q224OovCoverage(s: SparkSession, dir: String): DataFrame = {
     val tok = docs(s, dir)
       .select(col("source"), explode(col("toks")).as("tok"))
-      .persist()
+      .transform(Materialize.persist(_))
     tok.count() // materialize once for both consumers
     val vocab = tok.groupBy(col("tok")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok").asc).limit(200)
       .select(col("tok"), lit(1).as("in_vocab"))
-    val out = tok.join(broadcast(vocab), Seq("tok"), "left")
+    tok.join(broadcast(vocab), Seq("tok"), "left")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
       .select(col("source"), col("n_tokens"), col("n_oov"),
         round(col("n_oov").cast("double") / col("n_tokens"), 6)
           .as("oov_rate"))
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
   }
 
   /** HTML → text extraction (the step between WARC ingest and every
@@ -2069,7 +2059,7 @@ object TextOps {
         round(size(col("toks")) / lit(100.0), 6).as("x1"),
         round(size(array_distinct(col("toks"))) /
           size(col("toks")).cast("double"), 6).as("x2"))
-      .persist()
+      .transform(Materialize.persist(_))
     f.count()
     def r6(v: Double): Double =
       BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -2085,16 +2075,13 @@ object TextOps {
         r6(w(2) - 0.5 * g.getDouble(2)))
     }
     val z = lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2")
-    val out = f.agg(
+    f.agg(
         sum(when((z >= 0) === (col("y") === 1.0), 1L).otherwise(0L))
           .as("n_correct"),
         count(lit(1)).as("n"))
       .withColumn("w0", lit(w(0))).withColumn("w1", lit(w(1)))
       .withColumn("w2", lit(w(2)))
       .select(col("w0"), col("w1"), col("w2"), col("n_correct"), col("n"))
-      .localCheckpoint()
-    f.unpersist(blocking = false)
-    out
   }
 
   /** Fixed CONTEXT-WINDOW chunking of the concatenated token stream —
@@ -2344,7 +2331,7 @@ object TextOps {
       // 2·|x − med| is an exact integer (med is at worst a .5 fraction)
       .withColumn("dev2",
         abs(col("n_chars") * 2 - (col("med") * 2).cast("long")))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val mad = dev.groupBy(col("lang"))
       // 4·MAD is again an exact integer (the dev2 median interpolates
       // at worst midway between two integers)
@@ -2401,12 +2388,12 @@ object TextOps {
       .groupBy(col("t"))
       .agg(sum(when(col("v1"), 1L).otherwise(0L)).as("cf1"),
         sum(when(!col("v1"), 1L).otherwise(0L)).as("cf2"))
-      .persist()
+      .transform(Materialize.persist(_))
     def top(cfCol: String, rName: String) = {
       val t20 = cf.filter(col(cfCol) > 0)
         .select(col("t"), col(cfCol))
         .orderBy(col(cfCol).desc, col("t")).limit(20)
-        .localCheckpoint() // ≤20 rows by construction
+        .transform(Materialize.localCheckpoint(_)) // ≤20 rows by construction
       // rank within the bounded frame = #members sorting at-or-before —
       // a 20×20 broadcast theta-join, no WindowExec anywhere
       t20.join(broadcast(t20.select(col("t").as("bt"), col(cfCol).as("bcf"))),
@@ -2415,14 +2402,11 @@ object TextOps {
         .groupBy(col("t"), col(cfCol))
         .agg(count(lit(1)).as(rName))
     }
-    val out = top("cf1", "rank_v1").select(col("t"), col("rank_v1"), col("cf1"))
+    top("cf1", "rank_v1").select(col("t"), col("rank_v1"), col("cf1"))
       .join(top("cf2", "rank_v2").select(col("t"), col("rank_v2"), col("cf2")),
         Seq("t"), "full_outer")
       .select(col("t").as("term"), col("rank_v1"), col("cf1").as("cf_v1"),
         col("rank_v2"), col("cf2").as("cf_v2"))
-      .localCheckpoint()
-    cf.unpersist(blocking = false)
-    out
   }
 
   /** LSH candidate-quality evaluation — the number every dedup pipeline
@@ -2436,11 +2420,10 @@ object TextOps {
   def q288LshPrEval(s: SparkSession, dir: String): DataFrame = {
     val td = docs(s, dir)
       .select(col("doc_id"), expr(s"array_distinct($shingles3)").as("td"))
-      .persist()
+      .transform(Materialize.persist(_))
     td.count()
     val truth = prefixJaccardPairs(td, 1, 2)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    td.unpersist(blocking = false)
+      .select(col("doc_a"), col("doc_b")).transform(Materialize.localCheckpoint(_))
     val cand = q34MinhashLsh(s, dir)
     val hits = cand.join(truth, Seq("doc_a", "doc_b"))
     cand.agg(count(lit(1)).as("n_candidates"))
@@ -2651,7 +2634,7 @@ object TextOps {
   def q253EditDistanceJoin(s: SparkSession, dir: String): DataFrame =
     editDistanceJoin(
       Tables.part(s, dir).select(col("p_name").as("name")).distinct()
-        .localCheckpoint(),
+        .transform(Materialize.localCheckpoint(_)),
       k = 2, q = 2)
 
   /** [[q253EditDistanceJoin]]'s core as a library operator over any
@@ -2738,7 +2721,7 @@ object TextOps {
       .select(col("pid"), col("off"))
     val ranked = intra.join(broadcast(off), Seq("pid"))
       .select(col("name"), (col("off") + col("rk")).as("rn"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val probes = ranked.select(col("name").as("a"),
       explode(expr(s"sequence(rn + 1, rn + ${w - 1})")).as("rn"))
     probes.join(ranked.withColumnRenamed("name", "b"), Seq("rn"))
@@ -2790,7 +2773,7 @@ object TextOps {
     * pair-graph CC is pair-bound, the catalog is touched once. */
   def q265LinkageFunnel(s: SparkSession, dir: String): DataFrame = {
     val names = Tables.part(s, dir).select(col("p_name").as("name"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.localCheckpoint(_))
     val pairs = editDistanceJoin(names, k = 2, q = 2)
       .select(col("a").as("src"), col("b").as("dst"))
     val lab = graft.plans.ConnectedComponents.labels(
@@ -2832,7 +2815,7 @@ object TextOps {
       .groupBy(col("term")).agg(count(lit(1)).as("cf"))
       .withColumn("salt", pmod(xxhash64(col("term")), lit(64)).cast("long"))
     val cells = cf.groupBy(col("cf"), col("salt")).agg(count(lit(1)).as("k"))
-      .persist()
+      .transform(Materialize.persist(_))
     // phase 1a: offset of each cf group = Σ sizes of strictly-higher groups
     // (unpartitioned cumsum, but over the distinct-frequency table only)
     val wCf = Window.orderBy(col("cf").desc)
@@ -2852,12 +2835,9 @@ object TextOps {
     val wIn = Window.partitionBy(col("cf"), col("salt")).orderBy(col("term"))
     val ranked = cf.join(cellOff, Seq("cf", "salt"))
       .withColumn("rank", col("off") + row_number().over(wIn))
-    val out = Relational.olsFit(ranked.select(lit("zipf").as("g"),
+    Relational.olsFit(ranked.select(lit("zipf").as("g"),
       round(log(col("rank").cast("double")) * 1e6).cast("long").as("x"),
       round(log(col("cf").cast("double")) * 1e6).cast("long").as("y")))
-      .localCheckpoint()
-    cells.unpersist(blocking = false)
-    out
   }
 
   /** Vocabulary extraction (tokenizer/vocab building): corpus-wide term
@@ -3143,7 +3123,7 @@ object TextOps {
     // pos feeds BOTH sides of the match join — persist so the corpus
     // explode runs once (the q34 band-table convention)
     val pos = toks.select(col("doc_id"),
-      posexplode(col("toks")).as(Seq("p", "tok"))).persist()
+      posexplode(col("toks")).as(Seq("p", "tok"))).transform(Materialize.persist(_))
     pos.count()
     val lens = toks.select(col("doc_id"), size(col("toks")).as("n"))
     val m = pairs
@@ -3164,7 +3144,7 @@ object TextOps {
     // ZERO shared tokens must report longest_run = 0, not vanish — a
     // consumer diffing against the candidate list reads absence as
     // "unverified", not "verified non-overlapping"
-    val out = pairs
+    pairs
       .join(longest, Seq("doc_a", "doc_b"), "left")
       .join(lens.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(lens.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
@@ -3172,9 +3152,6 @@ object TextOps {
         coalesce(col("longest_run"), lit(0L)).as("longest_run"),
         round(coalesce(col("longest_run"), lit(0L)) /
           least(col("na"), col("nb")), 4).as("overlap_share"))
-      .localCheckpoint()
-    pos.unpersist(blocking = false)
-    out
   }
 
   /** Unigram surprisal per document — the in-engine stand-in for CCNet's
@@ -3195,17 +3172,14 @@ object TextOps {
     // AND the scoring join — persist so the explode (the row-multiplier
     // of this query) runs once, not three times
     val terms = docs(s, dir)
-      .select(col("doc_id"), explode(col("toks")).as("term")).persist()
+      .select(col("doc_id"), explode(col("toks")).as("term")).transform(Materialize.persist(_))
     terms.count()
     val cf = terms.groupBy(col("term")).agg(count(lit(1)).as("cf"))
     val total = terms.select(count(lit(1)).cast("double").as("total"))
-    val out = terms.join(cf, "term").crossJoin(broadcast(total))
+    terms.join(cf, "term").crossJoin(broadcast(total))
       .withColumn("nll", -log(col("cf") / col("total")))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_toks"), round(avg(col("nll")), 4).as("surprisal"))
-      .localCheckpoint()
-    terms.unpersist(blocking = false)
-    out
   }
 
   /** Bigram conditional surprisal — one rung up q152's unigram ladder
@@ -3227,18 +3201,15 @@ object TextOps {
         "transform(sequence(1, size(toks)-1), " +
           "i -> struct(toks[i-1] AS w1, toks[i] AS w2))")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist()
+      .transform(Materialize.persist(_))
     bg.count()
     val cbg = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val cpre = bg.groupBy(col("w1")).agg(count(lit(1)).as("cpre"))
-    val out = bg.join(cbg, Seq("w1", "w2")).join(cpre, Seq("w1"))
+    bg.join(cbg, Seq("w1", "w2")).join(cpre, Seq("w1"))
       .withColumn("nll", -log(col("cbg") / col("cpre")))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         round(avg(col("nll")), 4).as("surprisal"))
-      .localCheckpoint()
-    bg.unpersist(blocking = false)
-    out
   }
 
   /** PMI collocation mining: the top bigrams by pointwise mutual
@@ -3254,7 +3225,7 @@ object TextOps {
     * pmi (round-before-use, the q198 convention) with the bigram as
     * total tiebreak, compiling to TakeOrderedAndProject. */
   def q236PmiCollocations(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("toks")).persist()
+    val d = Materialize.persist(docs(s, dir).select(col("toks")))
     d.count()
     val uni = d.select(explode(col("toks")).as("term"))
     val cf = uni.groupBy(col("term")).agg(count(lit(1)).as("c"))
@@ -3269,7 +3240,7 @@ object TextOps {
         "CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>))")).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
     val nb = bg.select(count(lit(1)).cast("double").as("nb"))
-    val out = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n"))
+    bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 5)
       .join(cf.select(col("term").as("w1"), col("c").as("c1")), Seq("w1"))
       .join(cf.select(col("term").as("w2"), col("c").as("c2")), Seq("w2"))
@@ -3280,9 +3251,6 @@ object TextOps {
         col("n"), col("pmi"))
       .orderBy(col("pmi").desc, col("bigram").asc)
       .limit(20)
-      .localCheckpoint()
-    d.unpersist(blocking = false)
-    out
   }
 
   /** Unigram-LM Viterbi segmentation ([[graft.functions.UnigramViterbi]]
@@ -3438,7 +3406,7 @@ object TextOps {
   def q211NeardupDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = docs(s, dir).repartition(s.sparkContext.defaultParallelism)
-      .persist()
+      .transform(Materialize.persist(_))
     d.count()
     val bands = minhashBands(d.select(col("doc_id"), col("toks")))
       .filter(col("bkey").isNotNull)
@@ -3461,11 +3429,8 @@ object TextOps {
       .withColumn("jac", round(col("inter") / col("uni").cast("double"), 6))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("jac").desc, col("eval_id").asc)
-    val out = ver.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    ver.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_id"), col("eval_id"), col("jac"))
-      .localCheckpoint()
-    d.unpersist(blocking = false)
-    out
   }
 
   def q141IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
@@ -3475,37 +3440,31 @@ object TextOps {
       .repartition(s.sparkContext.defaultParallelism)
       .withColumn("dup_key", md5(concat_ws(" ", slice(col("toks"), 1, 8))))
       .withColumn("is_batch", bucket >= 90)
-      .persist()
+      .transform(Materialize.persist(_))
     // Bands for BOTH sides come from one hashing pass (in production the
     // index side is a precomputed artifact; the is_batch column stands in
     // for that split).
     val bands = minhashBands(keyed.select(col("doc_id"), col("toks")))
       .join(keyed.select(col("doc_id"), col("is_batch")), "doc_id")
-      .persist()
+      .transform(Materialize.persist(_))
     bands.count() // one materialization feeds both semi-joins below
-    val out = {
-      val batch = keyed.filter(col("is_batch"))
-      val exactHits = batch
-        .join(keyed.filter(!col("is_batch")).select(col("dup_key")),
-          Seq("dup_key"), "left_semi")
-        .select(col("doc_id"), lit(true).as("exact_dup"))
-      val nearHits = bands.filter(col("is_batch"))
-        .join(bands.filter(!col("is_batch")).select(col("band"), col("bkey")),
-          Seq("band", "bkey"), "left_semi")
-        .select(col("doc_id")).distinct()
-        .withColumn("near_dup", lit(true))
-      batch.select(col("doc_id"))
-        .join(exactHits, Seq("doc_id"), "left")
-        .join(nearHits, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("exact_dup"), lit(false)).as("exact_dup"),
-          coalesce(col("near_dup"), lit(false)).as("near_dup"))
-        .withColumn("admit", !col("exact_dup") && !col("near_dup"))
-        .localCheckpoint()
-    }
-    bands.unpersist(blocking = false)
-    keyed.unpersist(blocking = false)
-    out
+    val batch = keyed.filter(col("is_batch"))
+    val exactHits = batch
+      .join(keyed.filter(!col("is_batch")).select(col("dup_key")),
+        Seq("dup_key"), "left_semi")
+      .select(col("doc_id"), lit(true).as("exact_dup"))
+    val nearHits = bands.filter(col("is_batch"))
+      .join(bands.filter(!col("is_batch")).select(col("band"), col("bkey")),
+        Seq("band", "bkey"), "left_semi")
+      .select(col("doc_id")).distinct()
+      .withColumn("near_dup", lit(true))
+    batch.select(col("doc_id"))
+      .join(exactHits, Seq("doc_id"), "left")
+      .join(nearHits, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("exact_dup"), lit(false)).as("exact_dup"),
+        coalesce(col("near_dup"), lit(false)).as("near_dup"))
+      .withColumn("admit", !col("exact_dup") && !col("near_dup"))
   }
 
   /** PII redaction — the C4-style scrub step (emails, long id-number
@@ -3557,7 +3516,7 @@ object TextOps {
     * Σ d·(d−1)/2 over the degree table. Both are |E|-bound — never
     * corpus-bound — so the census rides free after any LSH pass. */
   def q162PairTriangles(s: SparkSession, dir: String): DataFrame = {
-    val pairs = q34MinhashLsh(s, dir).persist()
+    val pairs = Materialize.persist(q34MinhashLsh(s, dir))
     val nEdges = pairs.count() // also materializes the cache for the joins
     val deg = pairs.select(col("doc_a").as("v"))
       .unionByName(pairs.select(col("doc_b").as("v")))
@@ -3569,14 +3528,11 @@ object TextOps {
     val tri = e1.join(e2, col("b2") === col("b"))
       .join(e3, col("a3") === col("a") && col("c3") === col("c"))
       .agg(count(lit(1)).as("t"))
-    val out = tri.crossJoin(wedges) // two 1-row frames
+    tri.crossJoin(wedges) // two 1-row frames
       .select(lit(nEdges).as("n_edges"), coalesce(col("t"), lit(0L)).as("n_triangles"),
         coalesce(col("w"), lit(0L)).as("n_wedges"),
         round(when(coalesce(col("w"), lit(0L)) === 0, 0.0)
           .otherwise(lit(3.0) * col("t") / col("w")), 4).as("global_cc"))
-      .localCheckpoint()
-    pairs.unpersist(blocking = false)
-    out
   }
 
   /** LSH banding calibration — the tuning harness that turns the bands ×
@@ -3597,7 +3553,7 @@ object TextOps {
       .withColumn("shingles", expr(shingles3))
       .withColumn("sdist", expr("array_distinct(shingles)"))
       .withColumn("sigs", graft.functions.MinHashSigs(col("shingles")))
-      .persist()
+      .transform(Materialize.persist(_))
     sub.count()
     // exact ground truth on the sample: shared-shingle pairs → Jaccard
     val ex = sub.select(col("doc_id"), explode(col("sdist")).as("sh"))
@@ -3610,7 +3566,7 @@ object TextOps {
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
       .filter(col("inter") / (col("na") + col("nb") - col("inter")) >= 0.5)
-      .select(col("doc_a"), col("doc_b")).persist()
+      .select(col("doc_a"), col("doc_b")).transform(Materialize.persist(_))
     val nTrue = gt.count()
     // candidate pairs under a banding scheme: rows-per-band hashes glued
     def scheme(name: String, bands: Seq[Seq[Int]]): DataFrame = {
@@ -3639,11 +3595,8 @@ object TextOps {
         round(when(lit(nTrue) === 0, 0.0).otherwise(lit(tp) / lit(nTrue).cast("double")), 4)
           .as("recall"))
     }
-    val out = scheme("b4r2", Seq(Seq(0, 1), Seq(2, 3), Seq(4, 5), Seq(6, 7)))
+    scheme("b4r2", Seq(Seq(0, 1), Seq(2, 3), Seq(4, 5), Seq(6, 7)))
       .unionByName(scheme("b2r4", Seq(Seq(0, 1, 2, 3), Seq(4, 5, 6, 7))))
-      .localCheckpoint()
-    gt.unpersist(blocking = false); sub.unpersist(blocking = false)
-    out
   }
 
   /** Prefix-filtered EXACT similarity join (the PPJoin family, Xiao et
@@ -3667,14 +3620,11 @@ object TextOps {
   def q170PrefixJoin(s: SparkSession, dir: String): DataFrame = {
     val td = docs(s, dir)
       .select(col("doc_id"), expr(s"array_distinct($shingles3)").as("td"))
-      .persist()
+      .transform(Materialize.persist(_))
     td.count()
-    val out = prefixJaccardPairs(td, 4, 5) // Jaccard >= 0.8, exact
+    prefixJaccardPairs(td, 4, 5) // Jaccard >= 0.8, exact
       .select(col("doc_a"), col("doc_b"), col("inter"), col("uni"),
         round(col("inter") / col("uni"), 4).as("jac"))
-      .localCheckpoint()
-    td.unpersist(blocking = false)
-    out
   }
 
   /** The PPJoin core shared by q170 (t = 4/5) and the LSH
@@ -3827,7 +3777,7 @@ object TextOps {
           (col("n").cast("double") * col("n").cast("double"))))
       .withColumn("wq",
         round(col("n").cast("double") * col("sh")).cast("long"))
-      .persist()
+      .transform(Materialize.persist(_))
     val tot = strata.agg(greatest(sum(col("wq")), lit(1L)).as("W"))
     val quota = strata.crossJoin(broadcast(tot))
       .withColumn("fl", expr(s"$B * wq div W"))
@@ -3922,12 +3872,12 @@ object TextOps {
     // the cached plan keeps the aggregate provenance visible, so the
     // posture audit can PROVE the ranking window reads a strata-bounded
     // table (a checkpoint erases it into a bare RDD scan)
-    val caps = caps0.persist()
+    val caps = Materialize.persist(caps0)
     // the cumsum'd frame is ALSO referenced four ways downstream —
     // materialize it too, so the window pipeline (and at scale, the
     // bucket machinery) runs once, not once per branch
     val cum = waterfillCumsum(caps, budgetExpr, twoPhaseThreshold)
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
       // exact saturation test: cap·(W−cumW) ≤ w·(T−cumC), all BIGINT
       .withColumn("cond",
         col("cap") * (col("totW") - col("cumW")) <=
@@ -4079,7 +4029,7 @@ object TextOps {
           "CAST(array() AS ARRAY<STRING>)))")).as("ng"))
       .withColumn("bucket",
         conv(substring(md5(col("ng")), 1, 4), 16, 10).cast("long") % B)
-      .persist()
+      .transform(Materialize.persist(_))
     ngrams.count()
     val raw = ngrams.groupBy(col("bucket")).agg(count(lit(1)).as("rk"))
     val tgt = ngrams.filter(col("source") === "src0")
@@ -4094,13 +4044,10 @@ object TextOps {
           log((col("rk") + 1) / (col("rtot") + B)), 6).as("lr"))
     val prof = ngrams.groupBy(col("doc_id"), col("bucket"))
       .agg(count(lit(1)).as("c"))
-    val out = prof.join(broadcast(lr), "bucket")
+    prof.join(broadcast(lr), "bucket")
       .groupBy(col("doc_id"))
       .agg(round(sum(col("c") * col("lr")), 4).as("dsir_w"))
       .orderBy(col("dsir_w").desc, col("doc_id").asc).limit(50)
-      .localCheckpoint()
-    ngrams.unpersist(blocking = false)
-    out
   }
 
   /** Per-source distribution-drift monitor: KL(source ‖ corpus) over
@@ -4282,14 +4229,14 @@ object TextOps {
           "i -> struct(toks[i-1] AS w1, toks[i] AS w2)), " +
           "CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>))")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist()
+      .transform(Materialize.persist(_))
     bg.count()
     val train = bg.filter(col("doc_id") % 2 === 0)
     val cbg = train.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbg"))
     val cpre = train.groupBy(col("w1")).agg(count(lit(1)).as("cpre"))
     val cuni = train.groupBy(col("w2")).agg(count(lit(1)).as("cuni"))
     val total = train.agg(count(lit(1)).cast("double").as("total"))
-    val out = bg.filter(col("doc_id") % 2 === 1)
+    bg.filter(col("doc_id") % 2 === 1)
       .join(cbg, Seq("w1", "w2"), "left")
       .join(cpre, Seq("w1"), "left")
       .join(cuni, Seq("w2"), "left")
@@ -4303,9 +4250,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_bigrams"),
         sum(when(col("cbg").isNull, 1L).otherwise(0L)).as("n_backoff"),
         round(avg(-log(col("sb"))), 4).as("score"))
-      .localCheckpoint()
-    bg.unpersist(blocking = false)
-    out
   }
 
   /** Shingle-containment verification over CDC-chunk candidates — the
@@ -4326,11 +4270,11 @@ object TextOps {
   def q200ContainmentJoin(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val td = d.select(col("doc_id"), expr(s"array_distinct($shingles3)").as("sd"))
-      .persist()
+      .transform(Materialize.persist(_))
     td.count()
     val ch = cdcChunks(d.select(col("doc_id"), col("toks")))
       .select(col("doc_id"), md5(col("chunk")).as("chash")).distinct()
-      .persist()
+      .transform(Materialize.persist(_))
     ch.count()
     val cand = ch.groupBy(col("chash")).agg(count(lit(1)).as("n"))
       .filter(col("n").between(2, 50)).select(col("chash"))
@@ -4339,7 +4283,7 @@ object TextOps {
         col("a.chash") === col("b.chash") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val out = pairs
+    pairs
       .join(td.select(col("doc_id").as("doc_a"), col("sd").as("sa")), "doc_a")
       .join(td.select(col("doc_id").as("doc_b"), col("sd").as("sb")), "doc_b")
       .withColumn("inter", expr("size(array_intersect(sa, sb))").cast("long"))
@@ -4348,9 +4292,6 @@ object TextOps {
       .filter(col("mn") > 0 && col("inter") * 2 >= col("mn"))
       .select(col("doc_a"), col("doc_b"), col("inter"),
         round(col("inter") / col("mn"), 4).as("containment"))
-      .localCheckpoint()
-    td.unpersist(blocking = false); ch.unpersist(blocking = false)
-    out
   }
 
   /** Bloom-filter decontamination — q116's SCALE PATH: q116 broadcasts
@@ -4401,7 +4342,7 @@ object TextOps {
 
   def q201BloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val g = docs(s, dir).select(col("doc_id"), explode(expr(fiveGrams)).as("g"))
-      .persist()
+      .transform(Materialize.persist(_))
     g.count()
     val evalGrams = g.filter(col("doc_id") < 20).select(col("g")).distinct()
     val train = g.filter(col("doc_id") >= 20)
@@ -4409,14 +4350,11 @@ object TextOps {
     val candidates = bloomCandidates(train, bloomWordsOf(evalGrams))
     val exact = candidates.join(evalGrams, Seq("g"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
-    val out = candidates
+    candidates
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_candidates"))
       .join(exact, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_candidates"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-      .localCheckpoint()
-    g.unpersist(blocking = false)
-    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

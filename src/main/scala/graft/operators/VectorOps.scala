@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.CosineSimilarity
+import graft.util.Materialize
 
 /** Similarity search over the `embeddings` table (north-star extension):
   * brute-force cosine top-k as the exact baseline, random-hyperplane LSH
@@ -124,15 +125,11 @@ object VectorOps {
     math.max(8L, math.round(math.sqrt(n.toDouble))).toInt
 
   /** Widest k the literal-inline argmax compiles cleanly at; past it
-    * cell scoring swaps to [[scoredCellsBroadcast]]. Env-overridable
-    * (GRAFT_IVF_LITERAL_MAXK) for the strategy A/B — the r18 verdict's
-    * cold-codegen experiment: the literal form pays a large first-pass
-    * janino compile that the broadcast form never does, while the
-    * broadcast form pays a per-row join at steady state. Both produce
-    * identical output (parity-pinned by spec). */
-  private[graft] val IvfLiteralMaxK =
-    sys.env.get("GRAFT_IVF_LITERAL_MAXK").flatMap(_.toIntOption)
-      .getOrElse(64)
+    * cell scoring swaps to [[scoredCellsBroadcast]]. The literal form
+    * pays a large first-pass janino compile that the broadcast form never
+    * does, while the broadcast form pays a per-row join at steady state.
+    * Both produce identical output (parity-pinned by spec). */
+  private[graft] val IvfLiteralMaxK = 64
 
   /** Broadcast-join cell scoring for k past the literal-codegen width:
     * the corpus joins the broadcast k-row centroid table and every
@@ -493,7 +490,7 @@ object VectorOps {
       // oversized keys: tiny by construction (cells over the cap),
       // eagerly materialized so both anti/semi sides broadcast it
       val keys = occ.filter(col("occ") > cap).select(col("cell"))
-        .localCheckpoint()
+        .transform(Materialize.localCheckpoint(_))
       val small = a.join(broadcast(keys), Seq("cell"), "left_anti")
         .drop("alta")
         .join(b.join(broadcast(keys), Seq("cell"), "left_anti")
@@ -511,14 +508,10 @@ object VectorOps {
 
   def q60IvfAnn(s: SparkSession, dir: String): DataFrame = {
     // assigned feeds both the probe list and the candidate scan — persist
-    // so the corpus×centroid scoring runs once, checkpoint the (tiny)
-    // result, release the cache (q34 pattern: no cache leaks out of the
-    // query).
-    val assigned = assignCells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    // so the corpus×centroid scoring runs once
+    val assigned = Materialize.persist(assignCells(vecs(s, dir), coarseCentroids(s, dir)))
     assigned.count()
-    val out = ivfAnnFrom(assigned).localCheckpoint()
-    assigned.unpersist(blocking = false)
-    out
+    ivfAnnFrom(assigned)
   }
 
   /** [[q60IvfAnn]] downstream of the cell assignment — the exact
@@ -554,7 +547,7 @@ object VectorOps {
     // recomputes non-attribute projections per generated element — the
     // shape the round-17 30× probe caught in trainCentroids' first cut)
     val assigned = assignCells(vecs(s, dir), coarseCentroids(s, dir))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     assigned
       .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
       .groupBy(col("cell"), col("i"))
@@ -587,7 +580,7 @@ object VectorOps {
     * across rounds. Output: per-cell member count of the final
     * assignment and the final centroid norm (q68's report schema). */
   def q186KmeansTrain(s: SparkSession, dir: String): DataFrame = {
-    val e = vecs(s, dir).persist()
+    val e = Materialize.persist(vecs(s, dir))
     e.count()
     def assign(cents: DataFrame): DataFrame = {
       val scored = e.crossJoin(broadcast(cents))
@@ -599,12 +592,12 @@ object VectorOps {
     }
     var cents = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     var lastAssigned: DataFrame = null
     var it = 0
     var converged = false
     while (it < 3 && !converged) {
-      val assigned = assign(cents).persist()
+      val assigned = Materialize.persist(assign(cents))
       val newC = assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("cell"), col("i"))
@@ -614,24 +607,19 @@ object VectorOps {
           .as("cv"))
         .select(col("cell").as("cent_id"), col("cv"))
       val kept = cents.join(newC.select(col("cent_id")), Seq("cent_id"), "left_anti")
-      val next = newC.unionByName(kept).localCheckpoint(false) // lazy lineage cut — the convergence read below materializes
+      val next = Materialize.localCheckpoint(newC.unionByName(kept), eager = false) // lazy lineage cut — the convergence read below materializes
       // bounded driver read (k rows): exact rounded-centroid equality
       converged = cents.as("o").join(next.as("n"), "cent_id")
         .filter(col("o.cv") =!= col("n.cv")).isEmpty
       cents = next
-      if (lastAssigned != null) lastAssigned.unpersist(blocking = false)
       lastAssigned = assigned
       it += 1
     }
-    val out = lastAssigned.groupBy(col("cell"))
+    lastAssigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("n_assigned"))
       .join(cents.select(col("cent_id").as("cell"),
         round(sqrt(aggregate(col("cv"), lit(0.0), (a, x) => a + x * x)), 4)
           .as("new_norm")), Seq("cell"))
-      .localCheckpoint()
-    lastAssigned.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    out
   }
 
   /** Multi-probe IVF ANN: queries probe their top-2 cells instead of one —
@@ -643,7 +631,7 @@ object VectorOps {
   def q71MultiprobeAnn(s: SparkSession, dir: String): DataFrame = {
     // Both the assignment (rn=1) and the probe set (rn≤2) project the same
     // ranked frame — persist it so corpus×centroid scoring runs once.
-    val ranked = rankedCells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    val ranked = Materialize.persist(rankedCells(vecs(s, dir), coarseCentroids(s, dir)))
     ranked.count()
     val assigned = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("v"), col("cent_id").as("cell"))
@@ -653,12 +641,9 @@ object VectorOps {
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", round(CosineSimilarity(col("qv"), col("v")), 6))
     val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    val out = candidates.withColumn("rank", row_number().over(wTop).cast("long"))
+    candidates.withColumn("rank", row_number().over(wTop).cast("long"))
       .filter(col("rank") <= 3)
       .select(col("q_id"), col("vec_id"), col("rank"), col("cos"))
-      .localCheckpoint()
-    ranked.unpersist(blocking = false)
-    out
   }
 
   /** Embedding-cosine near-dup pairs by threshold (the dedup-category
@@ -710,9 +695,8 @@ object VectorOps {
     * micro-cosine, the top-4 neighborhood mean is an exact long sum,
     * and the margin spends ONE IEEE division — identical op order in
     * both engines. The ranked frame persists for its three consumers
-    * (two window projections + the top-4 agg), the result is
-    * localCheckpoint'ed out, and the cache releases before return
-    * (q200 discipline — no query leaks a persisted frame). */
+    * (two window projections + the top-4 agg); the query scope releases
+    * it. */
   private[graft] def bitextMarginPairs(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = Window.partitionBy(col("src_id"))
@@ -729,19 +713,16 @@ object VectorOps {
     val ranked = pairs
       .withColumn("rt", row_number().over(wt))
       .withColumn("rs", row_number().over(ws))
-      .persist()
+      .transform(Materialize.persist(_))
     val top4 = ranked.filter(col("rs") <= 4)
       .groupBy(col("src_id"))
       .agg(sum(col("cm")).as("scm"), count(lit(1)).as("k4"),
         max(when(col("rs") === 1, col("cm"))).as("best"))
-    val out = ranked.filter(col("rs") === 1 && col("rt") === 1)
+    ranked.filter(col("rs") === 1 && col("rt") === 1)
       .join(top4, "src_id")
       .select(col("src_id"), col("tgt_id"), col("cos"),
         round((col("best") * col("k4") - col("scm")).cast("double") /
           (col("k4").cast("double") * lit(1000000.0)), 6).as("margin"))
-      .localCheckpoint()
-    ranked.unpersist(blocking = false)
-    out
   }
 
   /** Bitext mining at CORPUS scale — q317's reciprocal-margin algebra
@@ -773,11 +754,10 @@ object VectorOps {
       .select(col("doc_id").as("vec_id"), col("lang"))
     // t2 carries the corpus × k cell-scoring work and feeds FOUR
     // consumers (the occupancy census on each side + both sides of the
-    // pair join) — persist so the scoring runs once, release after the
-    // margin frame is checkpointed out (the q146 persist discipline)
+    // pair join) — persist so the scoring runs once
     val t2 = top2Cells(vecs(s, dir), coarseCentroids(s, dir))
       .join(lang, "vec_id")
-      .persist()
+      .transform(Materialize.persist(_))
     t2.count()
     val a = t2.filter(col("lang") === "en")
       .select(col("vec_id").as("src_id"), col("v").as("va"),
@@ -789,9 +769,7 @@ object VectorOps {
       .withColumn("cos", round(CosineSimilarity(col("va"), col("vb")), 6))
       .withColumn("cm", round(col("cos") * 1e6).cast("long"))
       .select(col("src_id"), col("tgt_id"), col("cos"), col("cm"))
-    val out = bitextMarginPairs(pairs) // localCheckpoint'ed inside
-    t2.unpersist(blocking = false)
-    out
+    bitextMarginPairs(pairs)
   }
 
   /** Multi-probe IVF bitext — the recall KNOB q328's eval motivates
@@ -823,7 +801,7 @@ object VectorOps {
     // frame so corpus × k cell scoring runs once, not per consumer
     val t2 = top2Cells(vecs(s, dir), coarseCentroids(s, dir))
       .join(lang, "vec_id")
-      .persist()
+      .transform(Materialize.persist(_))
     t2.count()
     val a = t2.filter(col("lang") === "en")
       .select(col("vec_id").as("src_id"), col("v").as("va"),
@@ -839,9 +817,7 @@ object VectorOps {
       .withColumn("cos", round(CosineSimilarity(col("va"), col("vb")), 6))
       .withColumn("cm", round(col("cos") * 1e6).cast("long"))
       .select(col("src_id"), col("tgt_id"), col("cos"), col("cm"))
-    val out = bitextMarginPairs(pairs) // localCheckpoint'ed inside
-    t2.unpersist(blocking = false)
-    out
+    bitextMarginPairs(pairs)
   }
 
   /** Semantic eval-proximity audit — the decontamination layer the
@@ -1214,7 +1190,7 @@ object VectorOps {
       .select(col("vec_id"), col("v"), col("c1").as("cell"),
         col("ccos1").as("ccos"), col("c2").as("alt"))
       .withColumn("pos", row_number().over(wPos))
-      .persist()
+      .transform(Materialize.persist(_))
     pos.count()
     val mx = pos.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("m")).collect()(0)
@@ -1230,7 +1206,7 @@ object VectorOps {
           col("a.cell") === col("b.cell") && col("a.pos") < col("b.pos")))
       else {
         val keys = pos.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-          .filter(col("n") > cap).select(col("cell")).localCheckpoint()
+          .filter(col("n") > cap).select(col("cell")).transform(Materialize.localCheckpoint(_))
         val small = pos.join(broadcast(keys), Seq("cell"), "left_anti")
         val big = pos.join(broadcast(keys), Seq("cell"), "left_semi")
         proj(small.as("a").join(small.as("b"),
@@ -1243,14 +1219,11 @@ object VectorOps {
       .select(col("vec_id"),
         round(CosineSimilarity(col("av"), col("bv")), 6).as("cos"))
       .groupBy(col("vec_id")).agg(max(col("cos")).as("max_prior_sim"))
-    val out = pos
+    pos
       .join(priorSim, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("ccos"), col("max_prior_sim"),
         (col("max_prior_sim").isNull || col("max_prior_sim") < 0.38)
           .as("keep"))
-      .localCheckpoint()
-    pos.unpersist(blocking = false)
-    out
   }
 
   /** Product-quantization assignment — the memory-side half of a
@@ -1345,7 +1318,7 @@ object VectorOps {
         .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
         .select(col("q_id"), col("vec_id"))
     }
-    val truth = top10(None).localCheckpoint() // Q×10 rows, reused 3×
+    val truth = Materialize.localCheckpoint(top10(None)) // Q×10 rows, reused 3×
     Seq(8, 16, 32).map { d =>
       truth.join(top10(Some(d)).withColumn("__hit", lit(1L)),
           Seq("q_id", "vec_id"), "left")
@@ -1403,11 +1376,11 @@ object VectorOps {
     * rows — localCheckpoint'ed per round (lineage cut). Output:
     * (cm, code, cw). */
   private[graft] def trainPqCodebooks(e: DataFrame, rounds: Int = 2): DataFrame = {
-    val subs = pqSubs(e).persist()
+    val subs = Materialize.persist(pqSubs(e))
     subs.count()
     var cbs = subs.filter(col("vec_id") < 4)
       .select(col("m").as("cm"), col("vec_id").as("code"), col("sub").as("cw"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val wCode = Window.partitionBy(col("vec_id"), col("m"))
       .orderBy(col("dist2").asc, col("code").asc)
     var it = 0
@@ -1432,14 +1405,13 @@ object VectorOps {
         .select(col("m").as("cm"), col("code"), col("cw"))
       val kept = cbs.join(means.select(col("cm"), col("code")),
         Seq("cm", "code"), "left_anti")
-      val next = means.unionByName(kept).localCheckpoint() // lineage cut
+      val next = Materialize.localCheckpoint(means.unionByName(kept)) // lineage cut
       // bounded driver read (16 rows): exact rounded-codeword equality
       converged = cbs.as("o").join(next.as("n"), Seq("cm", "code"))
         .filter(col("o.cw") =!= col("n.cw")).isEmpty
       cbs = next
       it += 1
     }
-    subs.unpersist(blocking = false)
     cbs
   }
 
@@ -1544,7 +1516,7 @@ object VectorOps {
     * entries round to 6dp BEFORE the 4-term sum (round-before-use),
     * the ADC distance to 6 after — cross-engine exact. */
   def q193IvfpqSearch(s: SparkSession, dir: String): DataFrame = {
-    val assigned = assignCells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    val assigned = Materialize.persist(assignCells(vecs(s, dir), coarseCentroids(s, dir)))
     assigned.count()
     // codebooks are TRAINED (per-subspace Lloyd, [[trainPqCodebooks]]),
     // not the first-4 stand-in; the query frame is caller-supplied to
@@ -1557,10 +1529,7 @@ object VectorOps {
     val queries = assigned.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("cell").as("q_cell"),
         col("v").as("qv"))
-    val out = ivfpqAdcSearch(assigned, cbs, queries, topK = 3)
-      .localCheckpoint()
-    assigned.unpersist(blocking = false)
-    out
+    ivfpqAdcSearch(assigned, cbs, queries, topK = 3)
   }
 
   /** Multi-probe IVF-PQ search — [[q193IvfpqSearch]] with the q71/q332
@@ -1575,7 +1544,7 @@ object VectorOps {
   def q340IvfpqMultiprobe(s: SparkSession, dir: String): DataFrame = {
     val cents = coarseCentroids(s, dir)
     val e = vecs(s, dir)
-    val assigned = assignCells(e, cents).persist()
+    val assigned = Materialize.persist(assignCells(e, cents))
     assigned.count()
     val cbs = pqCodebooksFor(s, dir, residual = false)(
       trainPqCodebooks(assigned))
@@ -1583,10 +1552,7 @@ object VectorOps {
         e.filter(col("vec_id").between(100, 105)), cents, maxRn = 2)
       .select(col("vec_id").as("q_id"), col("cent_id").as("q_cell"),
         col("v").as("qv"))
-    val out = ivfpqAdcSearch(assigned, cbs, queries, topK = 3)
-      .localCheckpoint()
-    assigned.unpersist(blocking = false)
-    out
+    ivfpqAdcSearch(assigned, cbs, queries, topK = 3)
   }
 
   /** ADC recall eval — the q128 protocol applied to the IVF-PQ path:
@@ -1607,7 +1573,7 @@ object VectorOps {
     // assigned + encoded the corpus twice for byte-identical frames).
     // The exact-truth pass reads the SAME persisted frame (its (vec_id,
     // v) columns) instead of re-reading the parquet scan.
-    val assigned = assignCells(e, cents).persist()
+    val assigned = Materialize.persist(assignCells(e, cents))
     assigned.count()
     val q = assigned.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -1617,10 +1583,10 @@ object VectorOps {
       .withColumn("cos", round(CosineSimilarity(col("qv"), col("v")), 6))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
       .select(col("q_id"), col("vec_id"))
-      .localCheckpoint() // Q×3 rows, reused by both arms
+      .transform(Materialize.localCheckpoint(_)) // Q×3 rows, reused by both arms
     val cbs = pqCodebooksFor(s, dir, residual = false)(
       trainPqCodebooks(assigned))
-    val codes = pqEncode(assigned, cbs).localCheckpoint()
+    val codes = Materialize.localCheckpoint(pqEncode(assigned, cbs))
     val q1 = assigned.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("cell").as("q_cell"),
         col("v").as("qv"))
@@ -1637,13 +1603,9 @@ object VectorOps {
           round(sum(coalesce(col("__hit"), lit(0L))) / count(lit(1)), 4)
             .as("recall"))
         .withColumn("arm", lit(name))
-    val out = arm("adc1", adcSearchCodes(codes, cbs, q1, topK = 3))
+    arm("adc1", adcSearchCodes(codes, cbs, q1, topK = 3))
       .unionByName(arm("adc2", adcSearchCodes(codes, cbs, q2, topK = 3)))
       .select(col("arm"), col("q_id"), col("k"), col("n_hit"), col("recall"))
-      .localCheckpoint() // materialize before the cache drops (q34 pattern)
-    assigned.unpersist(blocking = false)
-    graft.util.CkptBlocks.release(codes)
-    out
   }
 
   /** RESIDUAL IVF-PQ search — the true IVFADC encoding (Jégou et al.
@@ -1658,16 +1620,13 @@ object VectorOps {
     * exact (raw doubles minus 6dp-rounded centroid literals), so the
     * whole trajectory replays in DuckDB like the raw chain. */
   def q342IvfpqResidual(s: SparkSession, dir: String): DataFrame = {
-    val res = residualVecs(s, dir).persist()
+    val res = Materialize.persist(residualVecs(s, dir))
     res.count()
     val cbs = pqCodebooksFor(s, dir, residual = true)(trainPqCodebooks(res))
     val queries = res.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("cell").as("q_cell"),
         col("v").as("qv"))
-    val out = ivfpqAdcSearch(res, cbs, queries, topK = 3)
-      .localCheckpoint()
-    res.unpersist(blocking = false)
-    out
+    ivfpqAdcSearch(res, cbs, queries, topK = 3)
   }
 
   /** Raw-vs-residual ADC recall — the eval that decides whether the
@@ -1685,7 +1644,7 @@ object VectorOps {
     // keeps its own encode — residual vectors are a different corpus by
     // construction, so two encodes are intrinsic to this eval.
     val cents = coarseCentroids(s, dir)
-    val assigned = assignCells(vecs(s, dir), cents).persist()
+    val assigned = Materialize.persist(assignCells(vecs(s, dir), cents))
     assigned.count()
     val q = assigned.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -1695,7 +1654,7 @@ object VectorOps {
       .withColumn("cos", round(CosineSimilarity(col("qv"), col("v")), 6))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
       .select(col("q_id"), col("vec_id"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     val cbs = pqCodebooksFor(s, dir, residual = false)(
       trainPqCodebooks(assigned))
     val q1 = assigned.filter(col("vec_id").between(100, 105))
@@ -1714,12 +1673,9 @@ object VectorOps {
     // at bench scale the job BARRIERS cost more than the corpus scans
     // they stage (measured: a codes+rawArm-checkpointed variant ran
     // q343 1.1 s SLOWER than base despite one fewer scan)
-    val out = arm("raw", ivfpqAdcSearch(assigned, cbs, q1, topK = 3))
+    arm("raw", ivfpqAdcSearch(assigned, cbs, q1, topK = 3))
       .unionByName(arm("residual", q342IvfpqResidual(s, dir)))
       .select(col("arm"), col("q_id"), col("k"), col("n_hit"), col("recall"))
-      .localCheckpoint()
-    assigned.unpersist(blocking = false)
-    out
   }
 
   /** PQ quantization-distortion report — the codebook-quality number
@@ -1758,13 +1714,10 @@ object VectorOps {
     val raw = vecs(s, dir)
     val rawStats = armStats("raw", raw,
       pqCodebooksFor(s, dir, residual = false)(trainPqCodebooks(raw)))
-    val res = residualVecs(s, dir).persist()
+    val res = Materialize.persist(residualVecs(s, dir))
     res.count()
-    val out = rawStats.unionByName(armStats("residual", res,
+    rawStats.unionByName(armStats("residual", res,
         pqCodebooksFor(s, dir, residual = true)(trainPqCodebooks(res))))
-      .localCheckpoint()
-    res.unpersist(blocking = false)
-    out
   }
 
   /** SQ8 scalar quantization eval — the third compression rung next to
@@ -1799,7 +1752,7 @@ object VectorOps {
         spanArr, (q, sp) => q * sp / 255).as("vr"), col("v"))
     val recon = rec.select(col("vec_id"),
       zip_with(col("vr"), mnArr, (y, a) => y + a).as("vr"), col("v"))
-      .persist()
+      .transform(Materialize.persist(_))
     recon.count()
     val q = recon.filter(col("vec_id").between(100, 105))
     val wE = Window.partitionBy(col("q_id"))
@@ -1820,7 +1773,7 @@ object VectorOps {
       aggregate(
         zip_with(col("v"), col("vr"), (x, y) => round((x - y) * (x - y) * 1e12)),
         lit(0L), (acc, z) => acc + z.cast("long")).as("mse_micro"))
-    val out = exactTop.join(sqTop, Seq("q_id", "vec_id"), "left")
+    exactTop.join(sqTop, Seq("q_id", "vec_id"), "left")
       .groupBy(col("q_id"))
       .agg(count(lit(1)).as("k"),
         sum(coalesce(col("__hit"), lit(0L))).as("n_hit"),
@@ -1829,9 +1782,6 @@ object VectorOps {
       .join(err, "q_id")
       .select(col("q_id"), col("k"), col("n_hit"), col("recall"),
         col("mse_micro"))
-      .localCheckpoint()
-    recon.unpersist(blocking = false)
-    out
   }
 
   /** PQ codeword-usage histogram — the index-health report for the
@@ -1855,13 +1805,10 @@ object VectorOps {
     }
     val rawU = usage("raw", raw,
       pqCodebooksFor(s, dir, residual = false)(trainPqCodebooks(raw)))
-    val res = residualVecs(s, dir).persist()
+    val res = Materialize.persist(residualVecs(s, dir))
     res.count()
-    val out = rawU.unionByName(usage("residual", res,
+    rawU.unionByName(usage("residual", res,
         pqCodebooksFor(s, dir, residual = true)(trainPqCodebooks(res))))
-      .localCheckpoint()
-    res.unpersist(blocking = false)
-    out
   }
 
   /** Index-refresh drift — the number that prices the FROZEN-INDEX
@@ -1900,11 +1847,9 @@ object VectorOps {
     * Output: (src_id, tgt_id, rank, cm). */
   private[graft] def knnGraphEdges(s: SparkSession, dir: String,
                                    k: Int): DataFrame = {
-    val t2 = top2Cells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    val t2 = Materialize.persist(top2Cells(vecs(s, dir), coarseCentroids(s, dir)))
     t2.count()
-    val out = knnGraphEdgesFrom(t2, k)
-    t2.unpersist(blocking = false)
-    out
+    knnGraphEdgesFrom(t2, k)
   }
 
   /** [[knnGraphEdges]] downstream of the top-2 cell scan — takes the
@@ -1929,7 +1874,7 @@ object VectorOps {
     pairs.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("src_id"), col("tgt_id"), col("rank"), col("cm"))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
   }
 
   /** kNN-graph build as a query: every vector's top-3 in-cell
@@ -1967,14 +1912,11 @@ object VectorOps {
     // the standalone query previously scored the corpus twice (top-2 for
     // the graph + argmax for the assignment) and re-read the parquet scan
     // per beam hop (r18 verdict item 5's shape, applied to q351 itself).
-    val t2 = top2Cells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    val t2 = Materialize.persist(top2Cells(vecs(s, dir), coarseCentroids(s, dir)))
     t2.count()
     val edges = knnGraphEdgesFrom(t2, 3).select(col("src_id"), col("tgt_id"))
     val assigned = t2.select(col("vec_id"), col("v"), col("c1").as("cell"))
-    val out = graphSearchFrom(assigned, edges)
-      .localCheckpoint() // materialize before the cache drops (q34 pattern)
-    t2.unpersist(blocking = false)
-    out
+    graphSearchFrom(assigned, edges)
   }
 
   /** [[q351GraphSearch]] downstream of the cell assignment: the
@@ -1986,7 +1928,7 @@ object VectorOps {
     val queries = assigned.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("cell").as("q_cell"),
         col("v").as("qv"))
-      .localCheckpoint() // 6 rows
+      .transform(Materialize.localCheckpoint(_)) // 6 rows
     // per-query entry: md5-min member of the query's cell (not the
     // query itself) — one broadcast join + a per-query window
     val wEntry = Window.partitionBy(col("q_id"))
@@ -2011,7 +1953,7 @@ object VectorOps {
       .orderBy(col("cm").desc, col("node").asc)
     var beam = score(entries)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 4)
-      .select(col("q_id"), col("node"), col("cm")).localCheckpoint(false)
+      .select(col("q_id"), col("node"), col("cm")).transform(Materialize.localCheckpoint(_, eager = false))
     for (_ <- 1 to 3) {
       val cand = beam.select(col("q_id"), col("node"))
         .unionByName(edges.join(broadcast(beam),
@@ -2020,7 +1962,7 @@ object VectorOps {
         .distinct()
       beam = score(cand)
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 4)
-        .select(col("q_id"), col("node"), col("cm")).localCheckpoint(false)
+        .select(col("q_id"), col("node"), col("cm")).transform(Materialize.localCheckpoint(_, eager = false))
     }
     beam.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
@@ -2041,23 +1983,20 @@ object VectorOps {
     // argmax, q351's graph top-2, q351's argmax). One persisted top-2
     // scan now feeds the graph build, both arms' assignment (c1 = the
     // argmax cell) and the beam's vector lookups (r18 verdict item 5).
-    val t2 = top2Cells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    val t2 = Materialize.persist(top2Cells(vecs(s, dir), coarseCentroids(s, dir)))
     t2.count()
     val assigned = t2.select(col("vec_id"), col("v"), col("c1").as("cell"))
     val edges = knnGraphEdgesFrom(t2, 3).select(col("src_id"), col("tgt_id"))
     val exact = ivfAnnFrom(assigned).select(col("q_id"), col("vec_id"))
     val beam = graphSearchFrom(assigned, edges)
       .select(col("q_id"), col("vec_id"), lit(1L).as("__hit"))
-    val out = exact.join(beam, Seq("q_id", "vec_id"), "left")
+    exact.join(beam, Seq("q_id", "vec_id"), "left")
       .groupBy(col("q_id"))
       .agg(count(lit(1)).as("k"),
         sum(coalesce(col("__hit"), lit(0L))).as("n_hit"),
         round(sum(coalesce(col("__hit"), lit(0L))) / count(lit(1)), 4)
           .as("recall"))
       .select(col("q_id"), col("k"), col("n_hit"), col("recall"))
-      .localCheckpoint() // materialize before the cache drops (q34 pattern)
-    t2.unpersist(blocking = false)
-    out
   }
 
   /** Scratch artifact root for the q344/q345 round-trip queries: a
@@ -2103,15 +2042,12 @@ object VectorOps {
       sys.error(s"q345: just-built index at $root failed its fingerprint gate"))
     val cbRows = IvfIndex.loadCodebooksAt(s, dir, IvfIndex.FlavorRaw, root)
       .getOrElse(sys.error(s"q345: no raw codebooks in the index at $root"))
-    val assigned = assignCells(vecs(s, dir), cents).persist()
+    val assigned = Materialize.persist(assignCells(vecs(s, dir), cents))
     assigned.count()
     val queries = assigned.filter(col("vec_id").between(100, 105))
       .select(col("vec_id").as("q_id"), col("cell").as("q_cell"),
         col("v").as("qv"))
-    val out = ivfpqAdcSearch(assigned, codebookDf(s, cbRows), queries, topK = 3)
-      .localCheckpoint()
-    assigned.unpersist(blocking = false)
-    out
+    ivfpqAdcSearch(assigned, codebookDf(s, cbRows), queries, topK = 3)
   }
 
   /** k-center greedy coreset (Gonzalez 1985; the SemDeDup/D4-style
@@ -2147,18 +2083,18 @@ object VectorOps {
     def d2(v: org.apache.spark.sql.Column, c: Seq[Long]) =
       aggregate(zip_with(v, array(c.map(lit(_)): _*), (x, y) => (x - y) * (x - y)),
         lit(0L), (a, x) => a + x)
-    val q = vectors.localCheckpoint()
+    val q = Materialize.localCheckpoint(vectors)
     val seed = q.orderBy(col("vec_id")).limit(1).collect()(0)
     var selected = Vector((seed.getLong(0), 0L))
     var cur = q.filter(col("vec_id") =!= seed.getLong(0))
       .withColumn("mind", d2(col("v"), seed.getSeq[Long](1)))
-      .localCheckpoint()
+      .transform(Materialize.localCheckpoint(_))
     for (_ <- 1 until k) {
       val r = cur.orderBy(col("mind").desc, col("vec_id")).limit(1).collect()(0)
       selected :+= ((r.getLong(0), r.getLong(2)))
       cur = cur.filter(col("vec_id") =!= r.getLong(0))
         .withColumn("mind", least(col("mind"), d2(col("v"), r.getSeq[Long](1))))
-        .localCheckpoint()
+        .transform(Materialize.localCheckpoint(_))
     }
     import s.implicits._
     selected.zipWithIndex
@@ -2222,7 +2158,7 @@ object VectorOps {
       avg(size(col("toks")).cast("double")).as("avgdl"))
     val qt = d.filter(col("doc_id") < nQ)
       .select(col("doc_id").as("q_id"), explode(col("toks")).as("term"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.localCheckpoint(_))
     val tf = d.select(col("doc_id"), size(col("toks")).cast("double").as("dl"),
         explode(col("toks")).as("term"))
       .join(broadcast(qt.select(col("term")).distinct()), Seq("term"))
@@ -2336,26 +2272,23 @@ object VectorOps {
     // reuse the checkpointed pair frame for the cluster labels — q110
     // called directly would run the whole LSH pipeline a second time
     val canon = graft.operators.TextOps.dedupClustersFromPairs(s, dir, pairs)
-    val cells = assignCells(vecs(s, dir), coarseCentroids(s, dir)).persist()
+    val cells = Materialize.persist(assignCells(vecs(s, dir), coarseCentroids(s, dir)))
     val anchors = pos
       .join(cells.select(col("vec_id").as("anchor_id"), col("v").as("av"),
         col("cell")), Seq("anchor_id"))
       .join(canon.select(col("doc_id").as("anchor_id"),
         col("canonical_id").as("ac")), Seq("anchor_id"))
-      .localCheckpoint() // pair-bound
+      .transform(Materialize.localCheckpoint(_)) // pair-bound
     val cand = cells.join(canon.select(col("doc_id").as("vec_id"),
       col("canonical_id").as("cc")), Seq("vec_id"))
     val w = Window.partitionBy(col("anchor_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
-    val out = cand.join(broadcast(anchors), Seq("cell"))
+    cand.join(broadcast(anchors), Seq("cell"))
       .filter(col("cc") =!= col("ac"))
       .withColumn("cos", round(CosineSimilarity(col("av"), col("v")), 6))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("anchor_id"), col("pos_id"), col("vec_id").as("neg_id"),
         col("cos").as("neg_cos"))
-      .localCheckpoint()
-    cells.unpersist(blocking = false)
-    out
   }
 
   /** Clustering quality — purity and NMI of the IVF cell assignment
@@ -2381,7 +2314,7 @@ object VectorOps {
       .join(Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label")), Seq("vec_id"))
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("n_cl"))
-      .localCheckpoint() // cells×labels — the bounded contingency table
+      .transform(Materialize.localCheckpoint(_)) // cells×labels — the bounded contingency table
     val nc = cl.groupBy(col("cell")).agg(sum(col("n_cl")).as("n_c"))
     val nl = cl.groupBy(col("label")).agg(sum(col("n_cl")).as("n_l"))
     val nT = cl.agg(sum(col("n_cl")).as("n"))

@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Iterative reflexive-transitive closure — the `wdt:P279*` property path
   * (sparql/wikidata-city.sparql:6, wikidata-organization.sparql:5).
   *
@@ -50,9 +52,7 @@ object Closure {
     * but survives executor loss and frees driver-block memory), else
     * localCheckpoint. Both lazy; the caller's one action per round
     * materializes. */
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(false)
-    else df.localCheckpoint(false)
+  private def ckpt(df: DataFrame): DataFrame = Materialize.lineageCut(df, eager = false)
 
   /** Eager variant for the loop-invariant EDGE table. Two reasons it is
     * checkpointed rather than persisted: (1) every round's lazy ckpt
@@ -62,9 +62,7 @@ object Closure {
     * while a checkpointed table plans as one leaf; (2) same
     * materialize-once economics as persist (one pass over the edges
     * either way). */
-  private def ckptEager(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
+  private def ckptEager(df: DataFrame): DataFrame = Materialize.lineageCut(df, eager = true)
 
   /** One-job probe: true iff every src has at most one distinct dst (the
     * edge relation is a forest/functional relation). Lets callers that
@@ -110,24 +108,14 @@ object Closure {
     // it once (see ckptEager: per-round re-analysis of a deep edge plan
     // was the dominant driver cost of shallow closures).
     val e = timed("edges ckpt")(ckptEager(edges.select(col("src"), col("dst"))))
-    // The loop's joins are exact-count-priced, so per-round AQE
-    // re-planning buys nothing — see graft.util.LoopConf.
-    val out = graft.util.LoopConf.noAqe(edges.sparkSession) {
-      if (functionalEdges)
-        reachingToFunctional(e, seeds, maxIters, broadcastMaxRows,
-          resolveSwitch(twoHopAfterRounds))
-      else reachingToGeneral(e, seeds, maxIters, broadcastMaxRows)
-    }
-    // Every kept frontier materialized its checkpoint inside the loop (the
-    // per-round count), so the result no longer reads the edge blocks —
-    // release them now rather than leaking one edge table per closure call
-    // into the block manager until context GC (r18 verdict item).
-    graft.util.CkptBlocks.release(e)
-    out
+    if (functionalEdges)
+      reachingToFunctional(e, seeds, maxIters, broadcastMaxRows,
+        resolveSwitch(twoHopAfterRounds))
+    else reachingToGeneral(e, seeds, maxIters, broadcastMaxRows)
   }
 
   private def resolveSwitch(explicit: Int): Int =
-    if (explicit >= 0) explicit else twoHopSwitch
+    if (explicit >= 0) explicit else TwoHopSwitch
 
   /** The functional fast path skips the per-round anti-join because forest
     * frontiers never revisit — but `isFunctional` is also true for CYCLIC
@@ -148,16 +136,8 @@ object Closure {
     * saved). Every fixed threshold gambles at its own boundary; 6 puts
     * the reference-shaped data (depth ≤ 4, frontier empties at round 4)
     * two rounds clear of the trap while a depth-20 chain still halves its
-    * remaining 14 rounds. GRAFT_CLOSURE_TWOHOP=0 disables the switch
-    * entirely (A/B hatch); GRAFT_CLOSURE_TWOHOP=<n> overrides. */
-  private def twoHopSwitch: Int = sys.env.get("GRAFT_CLOSURE_TWOHOP") match {
-    case Some("0") => Int.MaxValue
-    // values too large for Int clearly mean "never stride" — clamp
-    // instead of crashing on toInt overflow
-    case Some(n) if n.forall(_.isDigit) && n.nonEmpty =>
-      if (n.length > 9) Int.MaxValue else n.toInt
-    case _ => 6
-  }
+    * remaining 14 rounds. */
+  private val TwoHopSwitch = 6
 
   private def hintIf(df: DataFrame, rows: Long, broadcastMaxRows: Long) =
     if (rows <= broadcastMaxRows) broadcast(df) else df
@@ -210,54 +190,50 @@ object Closure {
   private def reachingToFunctional(e: DataFrame, seeds: DataFrame, maxIters: Int,
                                    broadcastMaxRows: Long,
                                    switchAfter: Int): DataFrame = {
-    var e2: Option[DataFrame] = None
-    try {
-      var acc = timed("seed")(ckpt(seeds.select(col("node")).distinct()))
-      var frontier = acc
-      var frontierRows = acc.count()
-      var accRows = frontierRows
-      var i = 0
-      def guard(stepped: DataFrame): DataFrame =
-        if (i % CycleGuardEvery == CycleGuardEvery - 1)
-          stepped.join(hintIf(acc, accRows, broadcastMaxRows),
-            Seq("node"), "left_anti")
-        else stepped
-      while (i < maxIters && frontierRows > 0) {
-        val f = hintIf(frontier, frontierRows, broadcastMaxRows)
-        if (i < switchAfter) {
-          val next = timed(s"round $i ckpt") {
-            ckpt(guard(e.join(f, e("dst") === frontier("node"))
-              .select(e("src").as("node")).distinct()))
-          }
-          frontierRows = timed(s"round $i count")(next.count())
-          acc = acc.unionByName(next)
-          accRows += frontierRows
-          frontier = next
-        } else {
-          if (e2.isEmpty) e2 = Some(twoHop(e).persist())
-          val ee2 = e2.get
-          val stepped = timed(s"round2 $i ckpt") {
-            ckpt(guard(e.join(f, e("dst") === frontier("node"))
-              .select(e("src").as("node"), lit(false).as("__even"))
-              .unionByName(ee2.join(f, ee2("dst") === frontier("node"))
-                .select(ee2("src").as("node"), lit(true).as("__even")))
-              .distinct()))
-          }
-          // One action: materializes the checkpoint and returns both layer
-          // sizes (≤ 2 rows collected).
-          val sizes = timed(s"round2 $i count") {
-            stepped.groupBy(col("__even")).count().collect()
-              .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-          }
-          acc = acc.unionByName(stepped.select(col("node")))
-          accRows += sizes.values.sum
-          frontier = stepped.filter(col("__even")).select(col("node"))
-          frontierRows = sizes.getOrElse(true, 0L)
+    lazy val e2 = Materialize.persist(twoHop(e)) // built on the first stride round
+    var acc = timed("seed")(ckpt(seeds.select(col("node")).distinct()))
+    var frontier = acc
+    var frontierRows = acc.count()
+    var accRows = frontierRows
+    var i = 0
+    def guard(stepped: DataFrame): DataFrame =
+      if (i % CycleGuardEvery == CycleGuardEvery - 1)
+        stepped.join(hintIf(acc, accRows, broadcastMaxRows),
+          Seq("node"), "left_anti")
+      else stepped
+    while (i < maxIters && frontierRows > 0) {
+      val f = hintIf(frontier, frontierRows, broadcastMaxRows)
+      if (i < switchAfter) {
+        val next = timed(s"round $i ckpt") {
+          ckpt(guard(e.join(f, e("dst") === frontier("node"))
+            .select(e("src").as("node")).distinct()))
         }
-        i += 1
+        frontierRows = timed(s"round $i count")(next.count())
+        acc = acc.unionByName(next)
+        accRows += frontierRows
+        frontier = next
+      } else {
+        val stepped = timed(s"round2 $i ckpt") {
+          ckpt(guard(e.join(f, e("dst") === frontier("node"))
+            .select(e("src").as("node"), lit(false).as("__even"))
+            .unionByName(e2.join(f, e2("dst") === frontier("node"))
+              .select(e2("src").as("node"), lit(true).as("__even")))
+            .distinct()))
+        }
+        // One action: materializes the checkpoint and returns both layer
+        // sizes (≤ 2 rows collected).
+        val sizes = timed(s"round2 $i count") {
+          stepped.groupBy(col("__even")).count().collect()
+            .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+        }
+        acc = acc.unionByName(stepped.select(col("node")))
+        accRows += sizes.values.sum
+        frontier = stepped.filter(col("__even")).select(col("node"))
+        frontierRows = sizes.getOrElse(true, 0L)
       }
-      acc.distinct()
-    } finally { e2.foreach(_.unpersist(blocking = false)) }
+      i += 1
+    }
+    acc.distinct()
   }
 
   /** Transitive ancestor pairs: (node, anc) for every non-empty path
@@ -285,43 +261,40 @@ object Closure {
   def rootLabels(edges: DataFrame, roots: DataFrame, maxIters: Int = 50,
                  functionalEdges: Boolean = false,
                  broadcastMaxRows: Long = 500000L): DataFrame = {
-    val e = timed("edges ckpt")(ckptEager(edges.select(col("src"), col("dst"))));
-    graft.util.LoopConf.noAqe(edges.sparkSession) {
-      // Price the root-set hint with an exact count like every other
-      // fixpoint here: a huge root set (labeling from millions of roots)
-      // must shuffle-join, not force a driver-side broadcast build.
-      val r = ckpt(roots.select(col("node").as("__r")).distinct())
-      val rRows = r.count()
-      var frontier = timed("roots")(ckpt(
-        e.join(hintIf(r, rRows, broadcastMaxRows), e("dst") === col("__r"))
-          .select(e("src").as("node"), col("__r").as("root")).distinct()))
-      var rows = frontier.count()
-      var acc = frontier
-      var accRows = rows
-      var i = 0
-      while (i < maxIters && rows > 0) {
-        val f = hintIf(frontier.select(col("node").as("__fn"),
-          col("root").as("__fr")), rows, broadcastMaxRows)
-        val next0 = e.join(f, e("dst") === col("__fn"))
-          .select(e("src").as("node"), col("__fr").as("root"))
-        val guarded =
-          if (!functionalEdges)
-            next0.distinct().join(hintIf(acc, accRows, broadcastMaxRows),
-              Seq("node", "root"), "left_anti")
-          else if (i % CycleGuardEvery == CycleGuardEvery - 1)
-            next0.join(hintIf(acc, accRows, broadcastMaxRows),
-              Seq("node", "root"), "left_anti")
-          else next0
-        val next = timed(s"label round $i ckpt")(ckpt(guarded))
-        rows = timed(s"label round $i count")(next.count())
-        acc = acc.unionByName(next)
-        accRows += rows
-        frontier = next
-        i += 1
-      }
-      graft.util.CkptBlocks.release(e) // rounds are materialized leaves
-      if (functionalEdges) acc.distinct() else acc
+    val e = timed("edges ckpt")(ckptEager(edges.select(col("src"), col("dst"))))
+    // Price the root-set hint with an exact count like every other
+    // fixpoint here: a huge root set (labeling from millions of roots)
+    // must shuffle-join, not force a driver-side broadcast build.
+    val r = ckpt(roots.select(col("node").as("__r")).distinct())
+    val rRows = r.count()
+    var frontier = timed("roots")(ckpt(
+      e.join(hintIf(r, rRows, broadcastMaxRows), e("dst") === col("__r"))
+        .select(e("src").as("node"), col("__r").as("root")).distinct()))
+    var rows = frontier.count()
+    var acc = frontier
+    var accRows = rows
+    var i = 0
+    while (i < maxIters && rows > 0) {
+      val f = hintIf(frontier.select(col("node").as("__fn"),
+        col("root").as("__fr")), rows, broadcastMaxRows)
+      val next0 = e.join(f, e("dst") === col("__fn"))
+        .select(e("src").as("node"), col("__fr").as("root"))
+      val guarded =
+        if (!functionalEdges)
+          next0.distinct().join(hintIf(acc, accRows, broadcastMaxRows),
+            Seq("node", "root"), "left_anti")
+        else if (i % CycleGuardEvery == CycleGuardEvery - 1)
+          next0.join(hintIf(acc, accRows, broadcastMaxRows),
+            Seq("node", "root"), "left_anti")
+        else next0
+      val next = timed(s"label round $i ckpt")(ckpt(guarded))
+      rows = timed(s"label round $i count")(next.count())
+      acc = acc.unionByName(next)
+      accRows += rows
+      frontier = next
+      i += 1
     }
+    if (functionalEdges) acc.distinct() else acc
   }
 
   def ancestorPairs(edges: DataFrame, maxIters: Int = 50,
@@ -329,14 +302,10 @@ object Closure {
                     broadcastMaxRows: Long = 500000L,
                     twoHopAfterRounds: Int = -1): DataFrame = {
     val e = timed("edges ckpt")(ckptEager(edges.select(col("src"), col("dst"))))
-    val out = graft.util.LoopConf.noAqe(edges.sparkSession) {
-      if (functionalEdges)
-        ancestorPairsFunctional(e, maxIters, broadcastMaxRows,
-          resolveSwitch(twoHopAfterRounds))
-      else ancestorPairsGeneral(e, maxIters, broadcastMaxRows)
-    }
-    graft.util.CkptBlocks.release(e) // rounds are materialized leaves
-    out
+    if (functionalEdges)
+      ancestorPairsFunctional(e, maxIters, broadcastMaxRows,
+        resolveSwitch(twoHopAfterRounds))
+    else ancestorPairsGeneral(e, maxIters, broadcastMaxRows)
   }
 
   private def ancestorPairsGeneral(e: DataFrame, maxIters: Int,
@@ -375,57 +344,53 @@ object Closure {
   private def ancestorPairsFunctional(e: DataFrame, maxIters: Int,
                                       broadcastMaxRows: Long,
                                       switchAfter: Int): DataFrame = {
-    var e2: Option[DataFrame] = None
-    try {
-      var acc = ckpt(e.select(col("src").as("node"), col("dst").as("anc")).distinct())
-      var frontier = acc
-      var frontierRows = acc.count()
-      var accRows = frontierRows
-      val eRows = frontierRows
-      var i = 0
-      def guard(stepped: DataFrame): DataFrame =
-        if (i % CycleGuardEvery == CycleGuardEvery - 1)
-          stepped.join(hintIf(acc, accRows, broadcastMaxRows),
-            Seq("node", "anc"), "left_anti")
-        else stepped
-      while (i < maxIters && frontierRows > 0) {
-        if (i < switchAfter) {
-          val next = timed(s"anc round $i ckpt") {
-            // distinct keeps duplicate input-edge rows from amplifying
-            // round-over-round (same role as the general path's per-round
-            // dedup; the SAVING here is the skipped anti-join)
-            ckpt(guard(frontier.join(hintIf(e, eRows, broadcastMaxRows),
-                frontier("anc") === e("src"))
-              .select(frontier("node"), e("dst").as("anc")).distinct()))
-          }
-          frontierRows = timed(s"anc round $i count")(next.count())
-          acc = acc.unionByName(next)
-          accRows += frontierRows
-          frontier = next
-        } else {
-          if (e2.isEmpty) e2 = Some(twoHop(e).persist())
-          val ee2 = e2.get
-          val stepped = timed(s"anc2 $i ckpt") {
-            ckpt(guard(frontier.join(hintIf(e, eRows, broadcastMaxRows),
-                frontier("anc") === e("src"))
-              .select(frontier("node"), e("dst").as("anc"), lit(false).as("__skip"))
-              .unionByName(frontier.join(hintIf(ee2, eRows, broadcastMaxRows),
-                frontier("anc") === ee2("src"))
-                .select(frontier("node"), ee2("dst").as("anc"), lit(true).as("__skip")))
-              .distinct()))
-          }
-          val sizes = timed(s"anc2 $i count") {
-            stepped.groupBy(col("__skip")).count().collect()
-              .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-          }
-          acc = acc.unionByName(stepped.select(col("node"), col("anc")))
-          accRows += sizes.values.sum
-          frontier = stepped.filter(col("__skip")).select(col("node"), col("anc"))
-          frontierRows = sizes.getOrElse(true, 0L)
+    lazy val e2 = Materialize.persist(twoHop(e)) // built on the first stride round
+    var acc = ckpt(e.select(col("src").as("node"), col("dst").as("anc")).distinct())
+    var frontier = acc
+    var frontierRows = acc.count()
+    var accRows = frontierRows
+    val eRows = frontierRows
+    var i = 0
+    def guard(stepped: DataFrame): DataFrame =
+      if (i % CycleGuardEvery == CycleGuardEvery - 1)
+        stepped.join(hintIf(acc, accRows, broadcastMaxRows),
+          Seq("node", "anc"), "left_anti")
+      else stepped
+    while (i < maxIters && frontierRows > 0) {
+      if (i < switchAfter) {
+        val next = timed(s"anc round $i ckpt") {
+          // distinct keeps duplicate input-edge rows from amplifying
+          // round-over-round (same role as the general path's per-round
+          // dedup; the SAVING here is the skipped anti-join)
+          ckpt(guard(frontier.join(hintIf(e, eRows, broadcastMaxRows),
+              frontier("anc") === e("src"))
+            .select(frontier("node"), e("dst").as("anc")).distinct()))
         }
-        i += 1
+        frontierRows = timed(s"anc round $i count")(next.count())
+        acc = acc.unionByName(next)
+        accRows += frontierRows
+        frontier = next
+      } else {
+        val stepped = timed(s"anc2 $i ckpt") {
+          ckpt(guard(frontier.join(hintIf(e, eRows, broadcastMaxRows),
+              frontier("anc") === e("src"))
+            .select(frontier("node"), e("dst").as("anc"), lit(false).as("__skip"))
+            .unionByName(frontier.join(hintIf(e2, eRows, broadcastMaxRows),
+              frontier("anc") === e2("src"))
+              .select(frontier("node"), e2("dst").as("anc"), lit(true).as("__skip")))
+            .distinct()))
+        }
+        val sizes = timed(s"anc2 $i count") {
+          stepped.groupBy(col("__skip")).count().collect()
+            .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+        }
+        acc = acc.unionByName(stepped.select(col("node"), col("anc")))
+        accRows += sizes.values.sum
+        frontier = stepped.filter(col("__skip")).select(col("node"), col("anc"))
+        frontierRows = sizes.getOrElse(true, 0L)
       }
-      acc.distinct()
-    } finally { e2.foreach(_.unpersist(blocking = false)) }
+      i += 1
+    }
+    acc.distinct()
   }
 }

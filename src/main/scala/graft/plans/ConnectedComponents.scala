@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Connected components by semi-naive min-label propagation — the
   * clustering step a dedup pipeline needs between near-dup PAIRS (MinHash
   * LSH, q34) and a KEEP/DROP decision: every document in a component keeps
@@ -39,15 +41,11 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(false)
-    else df.localCheckpoint(false)
+  private def ckpt(df: DataFrame): DataFrame = Materialize.lineageCut(df, eager = false)
 
   /** Eager variant for loop-invariant tables (the Closure.ckptEager
     * rationale: cut per-round re-analysis of a deep input plan). */
-  private def ckptEager(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
+  private def ckptEager(df: DataFrame): DataFrame = Materialize.lineageCut(df, eager = true)
 
   /** Component labels for every node in `nodes`.
     *
@@ -151,88 +149,75 @@ object ConnectedComponents {
     val sym = ckptEager(
       edges.select(col("src"), col("dst"))
         .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct());
-    // exact-fixpoint loop with one action per round — per-round AQE
-    // re-planning is pure overhead here (graft.util.LoopConf)
-    graft.util.LoopConf.noAqe(edges.sparkSession) {
-      // Both orientations are present, so src alone covers every touched node.
-      var lab = ckpt(sym.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("component")))
-      // Exact fixpoint tests, one action per round either way. INTEGRAL
-      // labels: the label-table SUM (DECIMAL(38), exact) is strictly
-      // monotone because labels only decrease — "sum unchanged" == "no
-      // label changed", no join needed. Fractional labels are excluded:
-      // casting to decimal(38,0) rounds, so a sub-unit decrease could
-      // leave the rounded sum unchanged and declare victory early. Those
-      // and other label types: count the strictly-decreased rows via a
-      // join of two tables already hash-partitioned by node
-      // (sum-of-strings would cast to NULL and declare victory after
-      // round one). A NULL sum (decimal overflow — >1e19 rows of max-long
-      // labels) makes two rounds incomparable, so it falls back to the
-      // join test rather than coercing to a sentinel two overflowing
-      // rounds would share.
-      val integralLabels = {
-        import org.apache.spark.sql.types._
-        sym.schema("src").dataType match {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _                                             => false
-        }
+        .distinct())
+    // Both orientations are present, so src alone covers every touched node.
+    var lab = ckpt(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("component")))
+    // Exact fixpoint tests, one action per round either way. INTEGRAL
+    // labels: the label-table SUM (DECIMAL(38), exact) is strictly
+    // monotone because labels only decrease — "sum unchanged" == "no
+    // label changed", no join needed. Fractional labels are excluded:
+    // casting to decimal(38,0) rounds, so a sub-unit decrease could
+    // leave the rounded sum unchanged and declare victory early. Those
+    // and other label types: count the strictly-decreased rows via a
+    // join of two tables already hash-partitioned by node
+    // (sum-of-strings would cast to NULL and declare victory after
+    // round one). A NULL sum (decimal overflow — >1e19 rows of max-long
+    // labels) makes two rounds incomparable, so it falls back to the
+    // join test rather than coercing to a sentinel two overflowing
+    // rounds would share.
+    val integralLabels = {
+      import org.apache.spark.sql.types._
+      sym.schema("src").dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _                                             => false
       }
-      def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
-        Option(df.agg(sum(col("component").cast("decimal(38,0)")))
-          .head().getDecimal(0))
-      def decreasedCount(next: DataFrame, prev: DataFrame): Long = next
-        .join(prev.select(col("node"), col("component").as("__old")), Seq("node"))
-        .filter(col("component") < col("__old")).count()
-      var prevSum = if (integralLabels) labelSum(lab) else None
-      var i = 0
-      var converged = false
-      while (i < maxIters && !converged) {
-        val viaEdges = sym.join(lab, sym("src") === lab("node"))
-          .select(sym("dst").as("node"), col("component"))
-        val next = ckpt(viaEdges.unionByName(lab.select(col("node"), col("component")))
-          .groupBy(col("node")).agg(min(col("component")).as("component")))
-        if (integralLabels) {
-          val curSum = labelSum(next)
-          converged = (curSum, prevSum) match {
-            case (Some(c), Some(p)) => c.compareTo(p) == 0
-            case _                  => decreasedCount(next, lab) == 0L
-          }
-          prevSum = curSum
-        } else {
-          converged = decreasedCount(next, lab) == 0L
-        }
-        lab = next
-        i += 1
-        // "auto": an un-landed fixpoint after this many O(diameter)
-        // rounds is direct evidence of a deep graph — hand the edges to
-        // the O(log d) contraction instead of grinding out the diameter.
-        // The propagation work is discarded (the contraction re-derives
-        // labels from the raw edges), which is the cheaper total path
-        // once diameter exceeds ~2× the switch round.
-        if (!converged && switchAfter.exists(i >= _)) {
-          System.err.println(s"[graft] ConnectedComponents auto: min-label " +
-            s"propagation not converged after $i rounds — switching to " +
-            "large-star/small-star contraction (deep-diameter evidence)")
-          // Hand the contraction the already-MATERIALIZED symmetrized
-          // table (it is a superset orientation-wise, which the star
-          // steps' own symmetrize/distinct absorb) instead of re-scanning
-          // and re-distincting the caller's deep edge plan; sym's blocks
-          // release once the contraction's eager first count has copied
-          // what it needs.
-          val out = starContraction(sym, nodes, maxIters, uniqueNodes,
-            preDeduped = true)
-          graft.util.CkptBlocks.release(sym)
-          return out
-        }
-      }
-      // Every kept round materialized its checkpoint (the fixpoint test is
-      // an action on `next`), so the loop-invariant edge blocks are dead
-      // weight from here — drop them instead of waiting for context GC
-      // (they otherwise accumulate across a long multi-query session).
-      if (i > 0 || prevSum.isDefined) graft.util.CkptBlocks.release(sym)
-      attachDomain(lab, nodes, uniqueNodes)
     }
+    def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
+      Option(df.agg(sum(col("component").cast("decimal(38,0)")))
+        .head().getDecimal(0))
+    def decreasedCount(next: DataFrame, prev: DataFrame): Long = next
+      .join(prev.select(col("node"), col("component").as("__old")), Seq("node"))
+      .filter(col("component") < col("__old")).count()
+    var prevSum = if (integralLabels) labelSum(lab) else None
+    var i = 0
+    var converged = false
+    while (i < maxIters && !converged) {
+      val viaEdges = sym.join(lab, sym("src") === lab("node"))
+        .select(sym("dst").as("node"), col("component"))
+      val next = ckpt(viaEdges.unionByName(lab.select(col("node"), col("component")))
+        .groupBy(col("node")).agg(min(col("component")).as("component")))
+      if (integralLabels) {
+        val curSum = labelSum(next)
+        converged = (curSum, prevSum) match {
+          case (Some(c), Some(p)) => c.compareTo(p) == 0
+          case _                  => decreasedCount(next, lab) == 0L
+        }
+        prevSum = curSum
+      } else {
+        converged = decreasedCount(next, lab) == 0L
+      }
+      lab = next
+      i += 1
+      // "auto": an un-landed fixpoint after this many O(diameter)
+      // rounds is direct evidence of a deep graph — hand the edges to
+      // the O(log d) contraction instead of grinding out the diameter.
+      // The propagation work is discarded (the contraction re-derives
+      // labels from the raw edges), which is the cheaper total path
+      // once diameter exceeds ~2× the switch round.
+      if (!converged && switchAfter.exists(i >= _)) {
+        System.err.println(s"[graft] ConnectedComponents auto: min-label " +
+          s"propagation not converged after $i rounds — switching to " +
+          "large-star/small-star contraction (deep-diameter evidence)")
+        // Hand the contraction the already-MATERIALIZED symmetrized
+        // table (it is a superset orientation-wise, which the star
+        // steps' own symmetrize/distinct absorb) instead of re-scanning
+        // and re-distincting the caller's deep edge plan.
+        return starContraction(sym, nodes, maxIters, uniqueNodes,
+          preDeduped = true)
+      }
+    }
+    attachDomain(lab, nodes, uniqueNodes)
   }
 
   /** Alternating large-star/small-star contraction (Kiveris et al. §3,
@@ -262,7 +247,6 @@ object ConnectedComponents {
     // for nothing (the uniqueNodes rationale, applied to edges).
     val base = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    graft.util.LoopConf.noAqe(edges.sparkSession) {
     var e = ckpt(if (preDeduped) base else base.distinct())
     def largeStar(in: DataFrame): DataFrame = {
       val sym = in.unionByName(
@@ -304,6 +288,5 @@ object ConnectedComponents {
       .unionByName(e.select(col("dst").as("node"), col("dst").as("component"))
         .distinct())
     attachDomain(lab, nodes, uniqueNodes)
-    }
   }
 }

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Materialize
 
 /** SPARQL text front-end (SURVEY.md §4.2's "parser optional" gap).
   *
@@ -622,7 +623,7 @@ object SparqlText {
     ops.zipWithIndex.foldLeft(store0.select(col("s"), col("p"), col("o"))) {
       case (store, (op, idx)) =>
         val out = applyTripleOp(op, store, None)
-        if (idx < ops.length - 1) out.localCheckpoint() else out
+        if (idx < ops.length - 1) Materialize.localCheckpoint(out) else out
     }
   }
 
@@ -661,7 +662,7 @@ object SparqlText {
     ops.zipWithIndex.foldLeft(store0.select(cols: _*)) {
       case (store, (op, idx)) =>
         val out = applyQuadOp(op, store, requestScope)
-        if (idx < ops.length - 1 && !pureNarrowOp(op)) out.localCheckpoint()
+        if (idx < ops.length - 1 && !pureNarrowOp(op)) Materialize.localCheckpoint(out)
         else out
     }
   }
@@ -2094,7 +2095,7 @@ object SparqlText {
     // it out k ways, so materialize the (≤ LIMIT-sized) cut once instead
     // of re-running the sort per template arm
     if (q.templates.size > 1 && (q.limit.nonEmpty || q.offset.nonEmpty))
-      bound = bound.localCheckpoint()
+      bound = Materialize.localCheckpoint(bound)
     def termCol(t: Term): Column = t match {
       // the emitted graph is lexical (s, p, o string columns); an
       // aggregate-bound variable from a grouped CONSTRUCT arrives
@@ -2257,7 +2258,7 @@ object SparqlText {
           case PAggE(_, e, _, _) => hasExists(e)
           case _ => false
         }
-        var aggSrc = if (needsArgLift) keyed.localCheckpoint() else keyed
+        var aggSrc = if (needsArgLift) Materialize.localCheckpoint(keyed) else keyed
         val aggItems = aggItems0.map {
           case PAggE(fn, e, out, dist) if hasExists(e) =>
             val (lifted, e2, _) = liftExistsMarksImpl(aggSrc, e, triples,
@@ -2386,7 +2387,7 @@ object SparqlText {
         // a HAVING predicate carries EXISTS, so the corpus-side
         // aggregation shuffle never runs in triplicate.
         val havingBase =
-          if (havingPreds.exists(hasExists)) agged.localCheckpoint()
+          if (havingPreds.exists(hasExists)) Materialize.localCheckpoint(agged)
           else agged
         havingPreds.foldLeft(havingBase) { (df, e) =>
           if (hasExists(e)) {

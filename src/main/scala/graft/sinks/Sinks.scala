@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Materialize
 
 /** Document sinks (SURVEY.md §2.10).
   *
@@ -87,7 +88,7 @@ object Sinks {
           // free from snapshot isolation).
           graft.plans.Merge.upsert(
             current.select(source.columns.map(col): _*), source, keyCols)
-            .localCheckpoint()
+            .transform(Materialize.localCheckpoint(_))
         }
       merged.write.mode("overwrite").partitionBy(partCol).parquet(targetPath)
     } finally {

@@ -30,7 +30,12 @@ import org.apache.spark.{JobExecutionStatus, SparkContext}
   * The group id carries a per-invocation sequence number: future-job
   * cancellation is sticky per group id, and Bench runs each query name
   * twice (min-of-passes) — pass 2 must start with a clean group even if
-  * pass 1 timed out. */
+  * pass 1 timed out.
+  *
+  * The body runs in a [[Materialize]] query scope: every frame the query
+  * persisted or checkpointed is released when the body thread exits —
+  * before the result is handed back, and on failure or a late exit after
+  * a timeout alike. */
 object Watchdog {
   /** Default per-query bound, env-tunable: generous against the slowest
     * green query the board has ever recorded (~7 s at sf0.1), tight
@@ -66,7 +71,7 @@ object Watchdog {
     val group = s"graft-wd-$name-${seq.incrementAndGet()}"
     val task = new FutureTask[A](() => {
       sc.setJobGroup(group, name, interruptOnCancel = true)
-      try body finally sc.clearJobGroup()
+      try Materialize.scoped(body) finally sc.clearJobGroup()
     })
     val t = new Thread(task, s"graft-watchdog-$name")
     t.setDaemon(true)

@@ -11,12 +11,7 @@ import graft.operators.VectorOps
   *    rests on;
   *  - top2Cells' first cell must equal assignCells' cell — the sharing
   *    seam q351/q352 ride (one scoring scan feeds graph build AND
-  *    assignment);
-  *  - CkptBlocks.release must actually drop a checkpointed frame's
-  *    storage, and a released-but-reused frame must fail LOUDLY (the
-  *    release sites' "only when dead" contract is load-bearing);
-  *  - LoopConf defaults to keeping AQE (the measured decision) and the
-  *    A/B hatch must restore the conf even on throw.
+  *    assignment).
   * Every test EXECUTES a plan (the round-13 lesson). */
 class Round19OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -60,38 +55,5 @@ class Round19OpsSpec extends SparkSpec {
     assert(viaT2.exceptAll(viaAssign).isEmpty &&
         viaAssign.exceptAll(viaT2).isEmpty,
       "top-2 item 0 must be the assignment cell for every vector")
-  }
-
-  test("CkptBlocks.release drops a local checkpoint's storage; a released " +
-      "frame fails loudly instead of recomputing silently") {
-    val df = spark.range(0, 1000).toDF("id").localCheckpoint()
-    assert(df.count() === 1000L)
-    val before = spark.sparkContext.getRDDStorageInfo
-      .map(_.numCachedPartitions).sum
-    assert(before > 0, "eager localCheckpoint must have cached blocks")
-    graft.util.CkptBlocks.release(df)
-    // release is async (blocking=false): poll briefly for the drop
-    val dropped = (1 to 50).exists { _ =>
-      Thread.sleep(100)
-      spark.sparkContext.getRDDStorageInfo
-        .map(_.numCachedPartitions).sum < before
-    }
-    assert(dropped, "release must drop the checkpoint blocks")
-    // a local checkpoint has no lineage: reuse after release must throw,
-    // not silently recompute (the "only release dead frames" contract)
-    val failed =
-      try { df.count(); false }
-      catch { case _: Throwable => true }
-    assert(failed, "reading a released local checkpoint must fail loudly")
-  }
-
-  test("LoopConf.noAqe default keeps AQE on (measured decision); the " +
-      "GRAFT_LOOP_AQE=0 hatch path restores the conf on throw") {
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key)
-    val inside = graft.util.LoopConf.noAqe(spark) { spark.conf.get(key) }
-    assert(inside === before,
-      "default must be a no-op — AQE stays exactly as configured")
-    assert(spark.conf.get(key) === before)
   }
 }
