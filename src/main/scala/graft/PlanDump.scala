@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.util.Materialize
+import graft.util.{Materialize, Session}
 
 /** Internal-plan inspector: the committed plan evidence for operator
   * INTERNALS that the declared queries hide behind terminal checkpoints
@@ -17,12 +16,7 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
     def want(n: String) = names.isEmpty || names.contains(n)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (want("ppjoin")) {

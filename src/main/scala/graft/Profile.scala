@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.Session
 
 /** Repeat one query in a warm session to separate JIT/codegen warmup from
   * steady-state cost: `runMain graft.Profile <sfDir> <queryName> [reps]`. */
@@ -8,14 +8,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(';').foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)

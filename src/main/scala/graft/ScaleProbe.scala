@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Session
 
 /** Scale probe above the shipped sf0.1 (round-14 verdict task 7): the
   * 100 TB posture claims are plan-audited at sf0.1 but the plans never
@@ -87,14 +88,7 @@ object ScaleProbe {
     val out = if (args.length > 1) args(1) else "/tmp/graft-scale10"
     val mult = if (args.length > 2) args(2).toInt else 10
     val wanted = if (args.length > 3) args.drop(3).toSeq else defaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 

@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Session
 
 /** Local smoke runner mirroring the driver's entry check: run
   * SparkEntry.entry, print the row count and a sample. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
+
+import graft.util.Materialize
 
 /** Structured Streaming operators (SURVEY.md §2.9 north star — the reference
   * has no true streaming; its incremental pulls are batch with a date
@@ -207,53 +210,42 @@ object StreamOps {
                           key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left_outer")
 
-  /** K1 streaming form: per-micro-batch upsert into a keyed parquet store —
-    * last write wins per id within the batch, then an idempotent overwrite
-    * merge against the store (the streaming twin of
-    * [[graft.sinks.Sinks.upsertDedup]]; a table format with MERGE replaces
-    * the read-union-rewrite at production scale). */
-  def upsertSink(events: DataFrame, storePath: String,
-                 idCol: String, versionCol: String)
-                (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
+  /** The one `foreachBatch` skeleton every sink below is built on: a
+    * `writeStream` checkpointed at `checkpoint` in `mode`, whose trigger
+    * body runs in its own [[Materialize.scoped]] scope. Every frame a
+    * trigger persists or checkpoints through [[Materialize]] is released
+    * when the trigger ends — the rule [[graft.util.Watchdog.run]] applies
+    * to a query — so a long-running stream accumulates no cached blocks.
+    * Frames a sink builds at construction (a model, a filter, a canary
+    * set) live across triggers and are created outside this scope. */
+  private def foreachTrigger(in: DataFrame, checkpoint: String,
+                             mode: OutputMode = OutputMode.Append())(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
       .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val newRows = graft.sinks.Sinks.upsertDedup(batch.toDF(), idCol, versionCol)
-        val merged =
-          if (new java.io.File(storePath).exists()) {
-            val existing = spark.read.parquet(storePath)
-            graft.sinks.Sinks.upsertDedup(
-              newRows.unionByName(existing), idCol, versionCol)
-          } else newRows
-        val tmp = storePath + "_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        val store = new java.io.File(storePath)
-        if (store.exists()) graft.util.Fs.deleteRecursively(store)
-        new java.io.File(tmp).renameTo(store)
-        ()
+      .outputMode(mode)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        Materialize.scoped(body(batch, batchId))
       }
       .start()
 
-  /** Streaming near-dup admission — the streaming form of q141's
-    * batch-vs-index dedup: each micro-batch of documents is checked
-    * against a persistent CLAIMS index of LSH band buckets (the q34
-    * Kirsch–Mitzenmacher pipeline, one hashing pass per batch); a doc is
-    * REJECTED when ANY of its band keys is already claimed, admitted docs
-    * append their bands to the index and their rows to `admittedPath`.
-    *
-    * Index semantics match q141 exactly: within-batch duplicates are NOT
-    * flagged against each other (they claim together and the next index
-    * build's q33/q110 job resolves them), and the claims store is the
-    * same artifact the batch pipeline would precompute. The check is a
-    * band-key semi-join: at production scale the claims side is a stored
-    * table scan, the batch side is micro-batch-sized, and nothing
-    * corpus-sized shuffles per trigger. The plain parquet appends here
-    * are at-least-once on crash replay — admitted rows write BEFORE
-    * claims, so the worst replay outcome is duplicate admitted rows,
-    * never lost ones; a transactional table format keyed by batchId is
-    * the exactly-once swap at production scale. */
+  /** K1 streaming form: per-micro-batch upsert into a keyed parquet store —
+    * last write wins per id within the batch, then an idempotent merge
+    * against the store, swapped in with [[atomicOverwrite]] (the streaming
+    * twin of [[graft.sinks.Sinks.upsertDedup]]; a table format with MERGE
+    * replaces the read-union-rewrite at production scale). */
+  def upsertSink(events: DataFrame, storePath: String,
+                 idCol: String, versionCol: String)
+                (checkpoint: String): StreamingQuery =
+    foreachTrigger(events, checkpoint, OutputMode.Update()) { (batch, _) =>
+      val newRows = graft.sinks.Sinks.upsertDedup(batch, idCol, versionCol)
+      atomicOverwrite(readState(batch.sparkSession, storePath)
+          .map(store => graft.sinks.Sinks.upsertDedup(
+            newRows.unionByName(store), idCol, versionCol))
+          .getOrElse(newRows),
+        storePath)
+    }
+
   /** Streaming CDC-chunk admission — [[nearDupAdmitSink]] at
     * SUB-document granularity: each micro-batch chunks its docs with
     * q195's content-defined chunker (insertion-robust md5 rolling
@@ -268,39 +260,26 @@ object StreamOps {
     * silently losing docs. */
   def cdcAdmitSink(docs: DataFrame, claimsPath: String,
                    admittedPath: String, minShared: Int = 1)
-                  (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val chunks = graft.operators.TextOps.cdcChunks(
-            batch.toDF().withColumn("toks", split(col("text"), " "))
-              .select(col("doc_id"), col("toks")))
-          .select(col("doc_id"), md5(col("chunk")).as("chash"))
-          .distinct().persist()
-        try {
-          val claimsHPath = new org.apache.hadoop.fs.Path(claimsPath)
-          val claimsFs = claimsHPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          val rejected =
-            if (claimsFs.exists(claimsHPath)) {
-              val claims = spark.read.parquet(claimsPath)
-              chunks.join(claims.select(col("chash")).distinct(),
-                  Seq("chash"), "left_semi")
-                .groupBy(col("doc_id")).agg(count(lit(1)).as("nshared"))
-                .filter(col("nshared") >= minShared)
-                .select(col("doc_id"))
-            } else chunks.select(col("doc_id")).limit(0)
-          val admitted = batch.toDF()
-            .join(rejected, Seq("doc_id"), "left_anti").localCheckpoint()
-          admitted.write.mode("append").parquet(admittedPath)
-          chunks.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .write.mode("append").parquet(claimsPath)
-        } finally { chunks.unpersist(blocking = false) }
-        ()
-      }
-      .start()
+                  (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val chunks = Materialize.persist(graft.operators.TextOps.cdcChunks(
+          batch.withColumn("toks", split(col("text"), " "))
+            .select(col("doc_id"), col("toks")))
+        .select(col("doc_id"), md5(col("chunk")).as("chash"))
+        .distinct())
+      val rejected = readState(batch.sparkSession, claimsPath)
+        .map(claims => chunks.join(claims.select(col("chash")).distinct(),
+            Seq("chash"), "left_semi")
+          .groupBy(col("doc_id")).agg(count(lit(1)).as("nshared"))
+          .filter(col("nshared") >= minShared)
+          .select(col("doc_id")))
+        .getOrElse(chunks.select(col("doc_id")).limit(0))
+      val admitted = Materialize.localCheckpoint(
+        batch.join(rejected, Seq("doc_id"), "left_anti"))
+      admitted.write.mode("append").parquet(admittedPath)
+      chunks.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(claimsPath)
+    }
 
   /** Streaming decontamination sink — q201's Bloom scale path applied
     * per micro-batch against a STATIC eval suite: each batch's 5-grams
@@ -313,26 +292,21 @@ object StreamOps {
     * clean rows at worst (duplicate rows, never contaminated ones). */
   def decontaminateSink(docs: DataFrame, evalGrams: DataFrame,
                         cleanPath: String)
-                       (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val bloom = graft.operators.TextOps.bloomWordsOf(evalGrams)
-      .localCheckpoint()
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val grams = batch.toDF()
-          .withColumn("toks", split(col("text"), " "))
-          .select(col("doc_id"),
-            explode(expr(graft.operators.TextOps.fiveGrams)).as("g"))
-          .distinct()
-        val hits = graft.operators.TextOps.bloomCandidates(grams, bloom)
-          .join(broadcast(evalGrams), Seq("g"))
-          .select(col("doc_id")).distinct()
-        batch.toDF().join(hits, Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(cleanPath)
-        ()
-      }
-      .start()
+                       (checkpoint: String): StreamingQuery = {
+    val bloom = Materialize.localCheckpoint(
+      graft.operators.TextOps.bloomWordsOf(evalGrams))
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val grams = batch
+        .withColumn("toks", split(col("text"), " "))
+        .select(col("doc_id"),
+          explode(expr(graft.operators.TextOps.fiveGrams)).as("g"))
+        .distinct()
+      val hits = graft.operators.TextOps.bloomCandidates(grams, bloom)
+        .join(broadcast(evalGrams), Seq("g"))
+        .select(col("doc_id")).distinct()
+      batch.join(hits, Seq("doc_id"), "left_anti")
+        .write.mode("append").parquet(cleanPath)
+    }
   }
 
   /** Streaming model-based admit — the apply half of the NB distillation
@@ -350,32 +324,31 @@ object StreamOps {
     * scorer — q248's inner-join semantics). */
   def nbFilterSink(docs: DataFrame, model: DataFrame, biasMicro: Long,
                    acceptPath: String)
-                  (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val m = model.select(col("token"), col("w_micro")).localCheckpoint()
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val admitted = batch.toDF()
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-          .filter(col("token") =!= "")
-          .join(broadcast(m), Seq("token"))
-          .groupBy(col("doc_id"))
-          .agg(sum(col("w_micro")).as("sw"))
-          .filter(col("sw") + biasMicro > 0)
-          .select(col("doc_id"))
-        batch.toDF().join(admitted, Seq("doc_id"), "left_semi")
-          .write.mode("append").parquet(acceptPath)
-        ()
-      }
-      .start()
+                  (checkpoint: String): StreamingQuery = {
+    val m = Materialize.localCheckpoint(
+      model.select(col("token"), col("w_micro")))
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val admitted = batch
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .filter(col("token") =!= "")
+        .join(broadcast(m), Seq("token"))
+        .groupBy(col("doc_id"))
+        .agg(sum(col("w_micro")).as("sw"))
+        .filter(col("sw") + biasMicro > 0)
+        .select(col("doc_id"))
+      batch.join(admitted, Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(acceptPath)
+    }
   }
 
-  /** Reads persisted sink state, falling back to the `.old` sibling when
-    * a crash during [[atomicOverwrite]] left the swap half-done (live dir
-    * renamed aside, replacement not yet swapped in). Recovering the OLD
-    * state is always safe: foreachBatch replays the interrupted trigger,
-    * so the merge that was lost simply re-runs. */
+  /** Reads persisted sink state (or a claims store), falling back to the
+    * `.old` sibling when a crash during [[atomicOverwrite]] left the swap
+    * half-done (live dir renamed aside, replacement not yet swapped in).
+    * Recovering the OLD state is always safe: foreachBatch replays the
+    * interrupted trigger, so the merge that was lost simply re-runs.
+    * Existence is probed through the filesystem layer the reads and
+    * writes use — a `java.io.File` check would answer "absent" for every
+    * hdfs:// or s3a:// store. */
   private def readState(spark: SparkSession, path: String): Option[DataFrame] = {
     val target = new org.apache.hadoop.fs.Path(path)
     val old = new org.apache.hadoop.fs.Path(path + ".old")
@@ -414,38 +387,38 @@ object StreamOps {
     ()
   }
 
-  /** Replay guard for sinks whose state merge is a non-idempotent SUM —
-    * the heavy-hitters single-file discipline, factored so every
-    * sum-merge sink shares it. foreachBatch is at-least-once: after a
-    * crash between the state swap and the checkpoint commit, the
-    * trigger REPLAYS with the same batchId, and a bare sum-merge
-    * double-counts its batch (hll's max-merge and the reservoir's
-    * dedup-merge shrug that off; sums cannot). State rows carry the
-    * writing trigger's batch_id, the owning CHECKPOINT path (the run
-    * id — batch ids restart at 0 under a fresh checkpoint, so a bare
-    * batch_id compare against mis-paired state would silently discard
-    * the first colliding batch; the path compare turns that into a
-    * loud failure), and an explicit `is_sentinel` flag plus one
-    * all-null sentinel row so an empty merge still records the guard
-    * — one file, one atomic swap (a separate _meta sibling reopens
-    * the stale-pairing crash window the heavy-hitters sink closed).
-    * The flag replaced the round-15 null-first-column convention: a
-    * real row whose GROUP KEY is genuinely null (a null lang reaching
-    * histSink, a null source reaching klDriftSink) now survives the
-    * state round-trip instead of being silently dropped every
-    * trigger. */
   /** Canonical form of a checkpoint path for the mis-pairing compare:
     * the SAME checkpoint spelled differently across restarts (relative
     * vs absolute, trailing slash, a symlinked tmp dir) must not fail
     * the pairing guard with a misleading "mis-pairing" error — both
     * the stored and the running spelling canonicalize before writing
-    * and before comparing (round-16 ADVICE). Paths a java.io.File
-    * cannot canonicalize (exotic URI schemes) fall back to the raw
-    * string — for those, callers must pass a stable spelling. */
+    * and before comparing. Paths a java.io.File cannot canonicalize
+    * (exotic URI schemes) fall back to the raw string — for those,
+    * callers must pass a stable spelling. */
   private def canonCkpt(p: String): String =
     try new java.io.File(p).getCanonicalPath
     catch { case _: Exception => p }
 
+  /** Replay guard for sinks whose state merge is a non-idempotent SUM.
+    * foreachBatch is at-least-once: after a crash between the state swap
+    * and the checkpoint commit, the trigger REPLAYS with the same
+    * batchId, and a bare sum-merge double-counts its batch (hll's
+    * max-merge and the reservoir's dedup-merge shrug that off; sums
+    * cannot). State rows carry the writing trigger's batch_id, the
+    * owning CHECKPOINT path (the run id — batch ids restart at 0 under a
+    * fresh checkpoint, so a bare batch_id compare against mis-paired
+    * state would silently discard the first colliding batch; the path
+    * compare turns that into a loud failure), and an explicit
+    * `is_sentinel` flag plus one sentinel row so an empty merge still
+    * records the guard — one file, one atomic swap (a separate _meta
+    * sibling would reopen a crash window where new state pairs with
+    * stale meta). The explicit flag, rather than a null first column,
+    * marks the sentinel, so a real row whose GROUP KEY is genuinely null
+    * (a null lang reaching histSink, a null source reaching klDriftSink)
+    * survives the state round-trip.
+    *
+    * Returns the batch id that wrote `st`; fails loudly on state written
+    * before this schema or by another checkpoint. */
   private def stateBatchId(st: DataFrame, checkpoint: String): Long = {
     // loud guards, not silent crashes on missing columns: state written
     // before the replay-guard schema cannot prove which trigger wrote it
@@ -468,8 +441,10 @@ object StreamOps {
   }
   private def stripGuard(st: DataFrame): DataFrame =
     st.filter(!col("is_sentinel")).drop("batch_id", "is_sentinel", "ckpt")
-  private def withGuard(data: DataFrame, batchId: Long,
-                        checkpoint: String): DataFrame = {
+  /** `data` tagged with the guard columns, plus the sentinel row: all
+    * data columns null unless `sentinelData` gives their leading values. */
+  private def withGuard(data: DataFrame, batchId: Long, checkpoint: String,
+                        sentinelData: Seq[Any] = Nil): DataFrame = {
     val spark = data.sparkSession
     val ckptCanon = canonCkpt(checkpoint)
     val tagged = data.withColumn("batch_id", lit(batchId))
@@ -479,11 +454,38 @@ object StreamOps {
       tagged.schema.map(_.copy(nullable = true)))
     val sentinel = spark.createDataFrame(
       java.util.Collections.singletonList(
-        org.apache.spark.sql.Row.fromSeq(
-          data.schema.map(_ => null) :+ Long.box(batchId) :+
+        Row.fromSeq(
+          sentinelData.padTo(data.schema.length, null) :+ Long.box(batchId) :+
             Boolean.box(true) :+ ckptCanon)),
       schema)
     tagged.unionByName(sentinel)
+  }
+
+  /** The replay-guarded sum-merge the sum-merge sinks share. Reads the
+    * state at `statePath`; when [[stateBatchId]] shows this trigger's
+    * batch is already folded in (a crash-replayed trigger) it returns the
+    * stored state and never computes `partial`. Otherwise it sum-merges
+    * `partial` into the state by `keys` (every other column is summed),
+    * swaps the guarded result in with [[atomicOverwrite]], and returns
+    * the merged state, checkpointed so the sink's report does not read
+    * the path just replaced. Returned frames carry no guard columns. */
+  private def guardedSumMerge(spark: SparkSession, statePath: String,
+                              checkpoint: String, batchId: Long,
+                              keys: String*)(partial: => DataFrame): DataFrame = {
+    val stateOpt = readState(spark, statePath)
+    stateOpt.filter(stateBatchId(_, checkpoint) == batchId) match {
+      case Some(st) => stripGuard(st)
+      case None =>
+        val p = partial
+        val sums = p.columns.toSeq.filterNot(keys.contains)
+          .map(c => sum(col(c)).as(c))
+        val merged = Materialize.localCheckpoint(stateOpt
+          .map(st => stripGuard(st).unionByName(p)
+            .groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*))
+          .getOrElse(p))
+        atomicOverwrite(withGuard(merged, batchId, checkpoint), statePath)
+        merged
+    }
   }
 
   /** Streaming WEIGHTED reservoir — Efraimidis–Spirakis Algorithm A-Res,
@@ -504,39 +506,34 @@ object StreamOps {
     * corpus (parity spec) — the property uniform reservoirs lack under
     * weights and the reason A-Res exists. */
   def weightedReservoirSink(docs: DataFrame, k: Int, statePath: String)
-                           (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val toks = split(col("text"), " ")
-        val nToks = size(toks).cast("long")
-        val nStop = expr(
-          "size(filter(split(text, ' '), t -> t IN ('the','a','of','and')))")
-          .cast("long")
-        val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8),
-          16, 10).cast("double") + 1.0) / lit(4294967297.0)
-        val keyed = batch.toDF()
-          .withColumn("quality", round(least(lit(1.0), nToks / 100.0) *
-            (lit(1.0) - nStop / nToks), 4))
-          .filter(col("quality") > 0)
-          .withColumn("lnu_micro", round(log(u) * 1e6).cast("long"))
-          .withColumn("w4", round(col("quality") * 1e4).cast("long"))
-          .withColumn("es_key",
-            col("lnu_micro").cast("double") / col("w4"))
-          .select(col("doc_id"), col("quality"), col("es_key"))
-        val merged =
-          readState(spark, statePath).map(_.unionByName(keyed))
-            .getOrElse(keyed)
-            // replayed docs carry the identical deterministic es_key —
-            // dedup before the top-k so an echo can't hold two slots
-            .dropDuplicates("doc_id")
-            .orderBy(col("es_key").desc, col("doc_id").asc).limit(k)
-            .localCheckpoint() // cut lineage from the path being replaced
-        atomicOverwrite(merged, statePath)
-      }
-      .start()
+                           (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val toks = split(col("text"), " ")
+      val nToks = size(toks).cast("long")
+      val nStop = expr(
+        "size(filter(split(text, ' '), t -> t IN ('the','a','of','and')))")
+        .cast("long")
+      val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8),
+        16, 10).cast("double") + 1.0) / lit(4294967297.0)
+      val keyed = batch
+        .withColumn("quality", round(least(lit(1.0), nToks / 100.0) *
+          (lit(1.0) - nStop / nToks), 4))
+        .filter(col("quality") > 0)
+        .withColumn("lnu_micro", round(log(u) * 1e6).cast("long"))
+        .withColumn("w4", round(col("quality") * 1e4).cast("long"))
+        .withColumn("es_key",
+          col("lnu_micro").cast("double") / col("w4"))
+        .select(col("doc_id"), col("quality"), col("es_key"))
+      // checkpointed: cut lineage from the path being replaced
+      val merged = Materialize.localCheckpoint(
+        readState(batch.sparkSession, statePath).map(_.unionByName(keyed))
+          .getOrElse(keyed)
+          // replayed docs carry the identical deterministic es_key —
+          // dedup before the top-k so an echo can't hold two slots
+          .dropDuplicates("doc_id")
+          .orderBy(col("es_key").desc, col("doc_id").asc).limit(k))
+      atomicOverwrite(merged, statePath)
+    }
 
   /** Streaming twin of q194's per-source KL drift monitor: drift is
     * intrinsically a per-snapshot concern — each micro-batch folds its
@@ -549,37 +546,18 @@ object StreamOps {
     * pipeline stage's mixing decision) reads the current snapshot
     * without touching the stream. */
   def klDriftSink(docs: DataFrame, statePath: String, reportPath: String)
-                 (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        val merged =
-          if (stateOpt.exists(stateBatchId(_, checkpoint) == batchId))
-            // crash-replayed trigger: counts already folded into the
-            // atomically-swapped state — regenerate the report only
-            stripGuard(stateOpt.get).localCheckpoint()
-          else {
-            val partial = graft.operators.TextOps.klCountPartials(
-              batch.toDF().withColumn("toks", split(col("text"), " "))
-                .select(col("source"), col("toks")))
-            val m = stateOpt.map(st => stripGuard(st).unionByName(partial)
-                .groupBy(col("source"), col("bucket"))
-                .agg(org.apache.spark.sql.functions.sum(col("c")).as("c")))
-              .getOrElse(partial)
-              // cut lineage from the path about to be replaced
-              .localCheckpoint()
-            atomicOverwrite(withGuard(m, batchId, checkpoint), statePath)
-            m
-          }
-        graft.operators.TextOps.klFromCounts(
-            merged.select(col("source")).distinct(), merged)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
+                 (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "source", "bucket") {
+        graft.operators.TextOps.klCountPartials(
+          batch.withColumn("toks", split(col("text"), " "))
+            .select(col("source"), col("toks")))
       }
-      .start()
+      graft.operators.TextOps.klFromCounts(
+          merged.select(col("source")).distinct(), merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming HLL cardinality monitor — the streaming face of q267.
     * Per trigger: the batch's (lang, bucket, max-rho) register partials
@@ -592,26 +570,19 @@ object StreamOps {
     * spec), because max is associative, commutative, and idempotent —
     * replayed micro-batches cannot corrupt the state. */
   def hllSink(docs: DataFrame, statePath: String, reportPath: String)
-             (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val regs = graft.operators.TextOps.hllRegisters(batch.toDF())
-        val merged =
-          readState(spark, statePath)
-            .map(_.unionByName(regs)
-              .groupBy(col("lang"), col("bucket"))
-              .agg(org.apache.spark.sql.functions.max(col("reg")).as("reg")))
-            .getOrElse(regs)
-            .localCheckpoint()
-        atomicOverwrite(merged, statePath)
-        graft.operators.TextOps.hllReport(merged)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
-      }
-      .start()
+             (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val regs = graft.operators.TextOps.hllRegisters(batch)
+      val merged = Materialize.localCheckpoint(
+        readState(batch.sparkSession, statePath)
+          .map(_.unionByName(regs)
+            .groupBy(col("lang"), col("bucket"))
+            .agg(max(col("reg")).as("reg")))
+          .getOrElse(regs))
+      atomicOverwrite(merged, statePath)
+      graft.operators.TextOps.hllReport(merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming Count-Min sketch — the streaming face of q268. CMS is
     * LINEAR, so per-batch counter tables SUM-merge into exactly the
@@ -623,30 +594,19 @@ object StreamOps {
     * (the heavy-hitters sink answers "what is frequent"; this one
     * answers "how frequent is X"). Unlike [[hllSink]]'s max-merge, sum
     * is NOT idempotent, so the state carries the batch_id replay guard
-    * (round 15 — before it, a crash-replayed trigger double-counted its
-    * batch; the CMS estimates stayed valid one-sided upper bounds, but
-    * they loosened silently). */
+    * (without it a crash-replayed trigger double-counts its batch; the
+    * CMS estimates stay valid one-sided upper bounds, but they loosen
+    * silently). */
   def cmsSink(docs: DataFrame, statePath: String)
-             (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        if (!stateOpt.exists(stateBatchId(_, checkpoint) == batchId)) {
-          val counters = graft.operators.TextOps.cmsCounters(
-            graft.operators.TextOps.cmsTf(batch.toDF().select(col("text"))))
-          val merged = stateOpt
-            .map(st => stripGuard(st).unionByName(counters)
-              .groupBy(col("row"), col("idx"))
-              .agg(org.apache.spark.sql.functions.sum(col("counter")).as("counter")))
-            .getOrElse(counters)
-            .localCheckpoint()
-          atomicOverwrite(withGuard(merged, batchId, checkpoint), statePath)
-        } // else: crash-replayed trigger, already folded in — no-op
+             (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, batchId) =>
+      guardedSumMerge(batch.sparkSession, statePath, checkpoint, batchId,
+          "row", "idx") {
+        graft.operators.TextOps.cmsCounters(
+          graft.operators.TextOps.cmsTf(batch.select(col("text"))))
       }
-      .start()
+      ()
+    }
 
   /** Streaming histogram-quantile monitor — the streaming face of q274,
     * completing the sketch-trio parity story (hllSink = cardinality,
@@ -656,31 +616,15 @@ object StreamOps {
     * state — the length-drift dashboard a corpus ingest watches without
     * ever sorting or replaying the stream. */
   def histSink(docs: DataFrame, statePath: String, reportPath: String)
-              (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        val merged =
-          if (stateOpt.exists(stateBatchId(_, checkpoint) == batchId))
-            stripGuard(stateOpt.get).localCheckpoint()
-          else {
-            val hist = graft.operators.TextOps.histCounts(batch.toDF())
-            val m = stateOpt.map(st => stripGuard(st).unionByName(hist)
-                .groupBy(col("lang"), col("bin"))
-                .agg(org.apache.spark.sql.functions.sum(col("c")).as("c")))
-              .getOrElse(hist)
-              .localCheckpoint()
-            atomicOverwrite(withGuard(m, batchId, checkpoint), statePath)
-            m
-          }
-        graft.operators.TextOps.histQuantiles(merged)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
+              (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "lang", "bin") {
+        graft.operators.TextOps.histCounts(batch)
       }
-      .start()
+      graft.operators.TextOps.histQuantiles(merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming IVF cell-occupancy monitor — the streaming face of the
     * q337/q338 index-health reports: an incremental ingest assigns
@@ -696,48 +640,30 @@ object StreamOps {
   def cellOccupancySink(vectors: DataFrame,
                         cents: Array[(Long, Seq[Double])],
                         statePath: String, reportPath: String)
-                       (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        val merged =
-          if (stateOpt.exists(stateBatchId(_, checkpoint) == batchId))
-            stripGuard(stateOpt.get).localCheckpoint()
-          else {
-            val counts = graft.operators.VectorOps.assignCells(
-                batch.toDF().select(col("vec_id"),
-                  expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-                    .as("v")),
-                cents)
-              .groupBy(col("cell")).agg(count(lit(1)).as("n_c"))
-            val m = stateOpt.map(st => stripGuard(st).unionByName(counts)
-                .groupBy(col("cell"))
-                .agg(org.apache.spark.sql.functions.sum(col("n_c")).as("n_c")))
-              .getOrElse(counts)
-              .localCheckpoint()
-            atomicOverwrite(withGuard(m, batchId, checkpoint), statePath)
-            m
-          }
-        merged
-          .agg(count(lit(1)).as("k"),
-            org.apache.spark.sql.functions.sum(col("n_c")).as("n"),
-            org.apache.spark.sql.functions.sum(col("n_c") * col("n_c")).as("s2"),
-            org.apache.spark.sql.functions.max(col("n_c")).as("max_occ"),
-            org.apache.spark.sql.functions.sum(
-              when(col("n_c") > graft.operators.VectorOps.IvfCellCap, 1L)
-                .otherwise(0L)).as("n_over_cap"))
-          .select(col("k"), col("n"),
-            round(col("k").cast("double") * col("s2").cast("double") /
-              (col("n").cast("double") * col("n").cast("double")), 6)
-              .as("imbalance"),
-            col("max_occ"), col("n_over_cap"))
-          .write.mode("overwrite").parquet(reportPath)
-        ()
+                       (checkpoint: String): StreamingQuery =
+    foreachTrigger(vectors, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "cell") {
+        graft.operators.VectorOps.assignCells(
+            batch.select(col("vec_id"),
+              expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")),
+            cents)
+          .groupBy(col("cell")).agg(count(lit(1)).as("n_c"))
       }
-      .start()
+      merged
+        .agg(count(lit(1)).as("k"),
+          sum(col("n_c")).as("n"),
+          sum(col("n_c") * col("n_c")).as("s2"),
+          max(col("n_c")).as("max_occ"),
+          sum(when(col("n_c") > graft.operators.VectorOps.IvfCellCap, 1L)
+            .otherwise(0L)).as("n_over_cap"))
+        .select(col("k"), col("n"),
+          round(col("k").cast("double") * col("s2").cast("double") /
+            (col("n").cast("double") * col("n").cast("double")), 6)
+            .as("imbalance"),
+          col("max_occ"), col("n_over_cap"))
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming INDEX MAINTENANCE — the encode-append half the
     * cellOccupancySink monitor implies: each arriving vector is
@@ -762,33 +688,23 @@ object StreamOps {
                       cents: Array[(Long, Seq[Double])],
                       cbs: Array[(Int, Long, Seq[Double])],
                       indexPath: String)
-                     (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val assigned = graft.operators.VectorOps.assignCells(
-          batch.toDF().select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")),
-          cents)
-        val codes = graft.operators.VectorOps.pqEncode(assigned,
-          graft.operators.VectorOps.codebookDf(spark, cbs))
-        val idxHPath = new org.apache.hadoop.fs.Path(indexPath)
-        val idxFs = idxHPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val fresh =
-          if (idxFs.exists(idxHPath))
-            codes.join(spark.read.parquet(indexPath)
-                .select(col("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti")
-          else codes
-        // materialize BEFORE the append: the plan reads the same path it
-        // is about to write (the weightedReservoirSink lineage-cut rule)
-        fresh.localCheckpoint().write.mode("append").parquet(indexPath)
-        ()
-      }
-      .start()
+                     (checkpoint: String): StreamingQuery =
+    foreachTrigger(vectors, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val assigned = graft.operators.VectorOps.assignCells(
+        batch.select(col("vec_id"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")),
+        cents)
+      val codes = graft.operators.VectorOps.pqEncode(assigned,
+        graft.operators.VectorOps.codebookDf(spark, cbs))
+      val fresh = readState(spark, indexPath)
+        .map(index => codes.join(index.select(col("vec_id")).distinct(),
+          Seq("vec_id"), "left_anti"))
+        .getOrElse(codes)
+      // materialize BEFORE the append: the plan reads the same path it
+      // is about to write
+      Materialize.localCheckpoint(fresh).write.mode("append").parquet(indexPath)
+    }
 
   /** Streaming decayed-counter monitor — the streaming face of q283.
     * State is the (event_type, day) daily-count table (decay depends
@@ -800,31 +716,15 @@ object StreamOps {
     * history to move its reference point. */
   def decayedCountsSink(events: DataFrame, statePath: String,
                         reportPath: String)
-                       (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        val merged =
-          if (stateOpt.exists(stateBatchId(_, checkpoint) == batchId))
-            stripGuard(stateOpt.get).localCheckpoint()
-          else {
-            val daily = graft.operators.Events.decayDailyCounts(batch.toDF())
-            val m = stateOpt.map(st => stripGuard(st).unionByName(daily)
-                .groupBy(col("event_type"), col("d"))
-                .agg(org.apache.spark.sql.functions.sum(col("n")).as("n")))
-              .getOrElse(daily)
-              .localCheckpoint()
-            atomicOverwrite(withGuard(m, batchId, checkpoint), statePath)
-            m
-          }
-        graft.operators.Events.decayedFromDaily(merged)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
+                       (checkpoint: String): StreamingQuery =
+    foreachTrigger(events, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "event_type", "d") {
+        graft.operators.Events.decayDailyCounts(batch)
       }
-      .start()
+      graft.operators.Events.decayedFromDaily(merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming twin of q257's rolling volume anomaly: per trigger the
     * batch's (event_type, day) partial counts merge into a persistent
@@ -836,31 +736,15 @@ object StreamOps {
     * the same events (parity spec), because counts merge associatively
     * and the anomaly test reads only the merged counts. */
   def anomalySink(events: DataFrame, statePath: String, reportPath: String)
-                 (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        val merged =
-          if (stateOpt.exists(stateBatchId(_, checkpoint) == batchId))
-            stripGuard(stateOpt.get).localCheckpoint()
-          else {
-            val partial = graft.operators.Events.dailyCounts(batch.toDF())
-            val m = stateOpt.map(st => stripGuard(st).unionByName(partial)
-                .groupBy(col("event_type"), col("day"))
-                .agg(org.apache.spark.sql.functions.sum(col("x")).as("x")))
-              .getOrElse(partial)
-              .localCheckpoint()
-            atomicOverwrite(withGuard(m, batchId, checkpoint), statePath)
-            m
-          }
-        graft.operators.Events.rollingAnomaly(merged)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
+                 (checkpoint: String): StreamingQuery =
+    foreachTrigger(events, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "event_type", "day") {
+        graft.operators.Events.dailyCounts(batch)
       }
-      .start()
+      graft.operators.Events.rollingAnomaly(merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming twin of q228's heavy hitters: the state is a MERGED
     * Misra–Gries summary (≤ k counters) plus the exact running total and
@@ -878,81 +762,52 @@ object StreamOps {
     * convergence reads. */
   def heavyHittersSink(tokens: DataFrame, statePath: String,
                        reportPath: String, k: Int = 50)
-                      (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    tokens.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // n / err / batch_id / ckpt ride IN the state parquet (repeated
-        // per row, plus an is_sentinel row so an empty counter set still
-        // carries them): one file, one atomic swap. Two separate swaps
-        // (state, then a _meta sibling) left a crash window where new
-        // counters paired with stale meta and the replayed batch's
-        // sum-merge double-counted — the one sink whose merge is not
-        // idempotent by algebra, so idempotence comes from the recorded
-        // batch_id (scoped by the owning checkpoint path, the shared
-        // stateBatchId convention: a fresh checkpoint restarts ids at 0
-        // and must not pair with old state silently).
-        def report(counters: DataFrame, n: Long, err: Long): Unit =
-          counters
-            .withColumn("guaranteed", col("c") > lit(n.toDouble / k))
-            .filter(col("c") + err > lit(n.toDouble / k))
-            .write.mode("overwrite").parquet(reportPath)
-        val stateOpt = readState(spark, statePath)
-        val (prevN, prevErr, prevBatch) = stateOpt.map { st =>
-          // loud guard, not a silent crash on a missing column: state
-          // written before the current schema cannot be resumed — the
-          // meta it needs may be stale or mis-paired
-          require(st.columns.contains("batch_id") &&
-              st.columns.contains("is_sentinel") && st.columns.contains("ckpt"),
-            s"heavy-hitters state at $statePath predates the single-file " +
-              "schema (term,c,n,err,batch_id,is_sentinel,ckpt); delete it " +
-              "(and any _meta sibling) to restart the stream cleanly")
-          val m = st.select(col("n"), col("err"), col("batch_id"), col("ckpt"))
-            .limit(1).collect()(0)
-          require(m.getString(3) == checkpoint,
-            s"state/checkpoint mis-pairing: heavy-hitters state at " +
-              s"$statePath belongs to checkpoint '${m.getString(3)}', not " +
-              s"'$checkpoint'; reuse the original checkpoint or delete the state")
-          (m.getLong(0), m.getLong(1), m.getLong(2))
-        }.getOrElse((0L, 0L, -1L))
-        def counters(st: DataFrame): DataFrame =
-          st.filter(!col("is_sentinel")).select(col("term"), col("c"))
-        if (prevBatch == batchId) {
-          // crash-replayed trigger: its counts are already folded into
-          // the (atomically swapped) state — regenerate the report only
-          report(counters(stateOpt.get), prevN, prevErr)
-        } else {
-          val bc = batch.toDF().groupBy(col("term")).agg(count(lit(1)).as("c"))
-          val bn = batch.count()
-          val prev = stateOpt.map(counters).getOrElse(bc.limit(0))
-          val summed = prev.unionByName(bc)
-            .groupBy(col("term")).agg(sum(col("c")).as("c"))
-            .localCheckpoint() // also cuts lineage from the state file
-          // (k+1)-th largest counter = the decrement that trims back to k
-          val top = summed.orderBy(col("c").desc, col("term"))
-            .limit(k + 1).collect()
-          val t = if (top.length > k) top.last.getLong(1) else 0L
-          val n = prevN + bn
-          val err = prevErr + t
-          val trimmed = summed.select(col("term"), (col("c") - t).as("c"))
-            .filter(col("c") > 0)
-            .localCheckpoint()
-          val sentinel = Seq((null: String, 0L, n, err, batchId, true, checkpoint))
-            .toDF("term", "c", "n", "err", "batch_id", "is_sentinel", "ckpt")
-          atomicOverwrite(trimmed
-            .withColumn("n", lit(n)).withColumn("err", lit(err))
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("is_sentinel", lit(false))
-            .withColumn("ckpt", lit(checkpoint))
-            .unionByName(sentinel), statePath)
-          report(trimmed, n, err)
-        }
-        ()
+                      (checkpoint: String): StreamingQuery =
+    foreachTrigger(tokens, checkpoint) { (batch, batchId) =>
+      // n / err ride IN the guarded state parquet (repeated per row, and
+      // on the sentinel row, so an empty counter set still carries
+      // them): one file, one atomic swap. The trim makes this merge
+      // more than a sum, but it is as non-idempotent as one, so a
+      // replayed trigger is detected through the shared stateBatchId.
+      def report(counters: DataFrame, n: Long, err: Long): Unit =
+        counters
+          .withColumn("guaranteed", col("c") > lit(n.toDouble / k))
+          .filter(col("c") + err > lit(n.toDouble / k))
+          .write.mode("overwrite").parquet(reportPath)
+      val stateOpt = readState(batch.sparkSession, statePath)
+      val replayed = stateOpt.exists(stateBatchId(_, checkpoint) == batchId)
+      val (prevN, prevErr) = stateOpt.map { st =>
+        val m = st.select(col("n"), col("err")).limit(1).collect()(0)
+        (m.getLong(0), m.getLong(1))
+      }.getOrElse((0L, 0L))
+      def counters(st: DataFrame): DataFrame =
+        stripGuard(st).select(col("term"), col("c"))
+      if (replayed) {
+        // crash-replayed trigger: its counts are already folded into
+        // the (atomically swapped) state — regenerate the report only
+        report(counters(stateOpt.get), prevN, prevErr)
+      } else {
+        val bc = batch.groupBy(col("term")).agg(count(lit(1)).as("c"))
+        val bn = batch.count()
+        val prev = stateOpt.map(counters).getOrElse(bc.limit(0))
+        // checkpointed: also cuts lineage from the state file
+        val summed = Materialize.localCheckpoint(
+          prev.unionByName(bc).groupBy(col("term")).agg(sum(col("c")).as("c")))
+        // (k+1)-th largest counter = the decrement that trims back to k
+        val top = summed.orderBy(col("c").desc, col("term"))
+          .limit(k + 1).collect()
+        val t = if (top.length > k) top.last.getLong(1) else 0L
+        val n = prevN + bn
+        val err = prevErr + t
+        val trimmed = Materialize.localCheckpoint(
+          summed.select(col("term"), (col("c") - t).as("c")).filter(col("c") > 0))
+        atomicOverwrite(withGuard(
+            trimmed.withColumn("n", lit(n)).withColumn("err", lit(err)),
+            batchId, checkpoint, sentinelData = Seq(null, 0L, n, err)),
+          statePath)
+        report(trimmed, n, err)
       }
-      .start()
+    }
 
   /** Streaming twin of q314's pass@k — the LIVE eval dashboard: attempt
     * results arrive as they are judged, the state is the per-problem
@@ -964,83 +819,43 @@ object StreamOps {
     * [[graft.operators.Events.passAtKReport]]). Per-trigger cost is
     * batch + |problems|. */
   def passAtKSink(events: DataFrame, statePath: String, reportPath: String)
-                 (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val stateOpt = readState(spark, statePath)
-        val merged =
-          if (stateOpt.exists(stateBatchId(_, checkpoint) == batchId))
-            stripGuard(stateOpt.get).localCheckpoint()
-          else {
-            val partial = graft.operators.Events.passCounts(batch.toDF())
-            val m = stateOpt.map(st => stripGuard(st).unionByName(partial)
-                .groupBy(col("problem"))
-                .agg(org.apache.spark.sql.functions.sum(col("n")).as("n"),
-                  org.apache.spark.sql.functions.sum(col("c")).as("c")))
-              .getOrElse(partial)
-              .localCheckpoint()
-            atomicOverwrite(withGuard(m, batchId, checkpoint), statePath)
-            m
-          }
-        graft.operators.Events.passAtKReport(merged)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
+                 (checkpoint: String): StreamingQuery =
+    foreachTrigger(events, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "problem") {
+        graft.operators.Events.passCounts(batch)
       }
-      .start()
+      graft.operators.Events.passAtKReport(merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming twin of q305's Bradley–Terry preference aggregation:
     * pairwise verdicts (sa, sb, winner) arrive as they are judged — the
     * live RLHF/eval shape — and the state is the unordered-pair matrix
     * (i, j, nij, wi), the fit's complete sufficient statistic: each
-    * trigger sums the batch's pair counts into it (one atomic swap, the
-    * heavy-hitters single-file discipline with the batch_id sentinel
-    * row for replay idempotence — the sum merge is not idempotent by
-    * algebra) and re-runs the 3-iteration MM fit on the
-    * |sources|²-bounded matrix into the report. Per-trigger cost is
-    * batch + pair-matrix; the fit never touches the verdict history. */
+    * trigger sums the batch's pair counts into it under the batch_id
+    * replay guard (the sum merge is not idempotent by algebra) and
+    * re-runs the 3-iteration MM fit on the |sources|²-bounded matrix
+    * into the report. Per-trigger cost is batch + pair-matrix; the fit
+    * never touches the verdict history. */
   def preferenceSink(comparisons: DataFrame, statePath: String,
                      reportPath: String)
-                    (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    comparisons.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val stateOpt = readState(spark, statePath)
-        val prevBatch = stateOpt.map(stateBatchId(_, checkpoint)).getOrElse(-1L)
-        def pairsOf(st: DataFrame): DataFrame =
-          stripGuard(st).select(col("i"), col("j"), col("nij"), col("wi"))
-        def report(pairs: DataFrame): Unit =
-          graft.operators.TextOps.bradleyTerryFit(pairs)
-            .write.mode("overwrite").parquet(reportPath)
-        if (prevBatch == batchId) {
-          // crash-replayed trigger: counts already folded into the
-          // atomically-swapped state — regenerate the report only
-          report(pairsOf(stateOpt.get))
-        } else {
-          val bp = batch.toDF()
-            .filter(col("sa") =!= col("sb"))
-            .select(least(col("sa"), col("sb")).as("i"),
-              greatest(col("sa"), col("sb")).as("j"), col("winner"))
-            .groupBy(col("i"), col("j"))
-            .agg(count(lit(1)).as("nij"),
-              sum(when(col("winner") === col("i"), 1L).otherwise(0L))
-                .as("wi"))
-          val prev = stateOpt.map(pairsOf).getOrElse(bp.limit(0))
-          val merged = prev.unionByName(bp)
-            .groupBy(col("i"), col("j"))
-            .agg(sum(col("nij")).as("nij"), sum(col("wi")).as("wi"))
-            .localCheckpoint() // also cuts lineage from the state file
-          atomicOverwrite(withGuard(merged, batchId, checkpoint), statePath)
-          report(merged)
-        }
-        ()
+                    (checkpoint: String): StreamingQuery =
+    foreachTrigger(comparisons, checkpoint) { (batch, batchId) =>
+      val merged = guardedSumMerge(batch.sparkSession, statePath, checkpoint,
+          batchId, "i", "j") {
+        batch
+          .filter(col("sa") =!= col("sb"))
+          .select(least(col("sa"), col("sb")).as("i"),
+            greatest(col("sa"), col("sb")).as("j"), col("winner"))
+          .groupBy(col("i"), col("j"))
+          .agg(count(lit(1)).as("nij"),
+            sum(when(col("winner") === col("i"), 1L).otherwise(0L))
+              .as("wi"))
       }
-      .start()
+      graft.operators.TextOps.bradleyTerryFit(merged)
+        .write.mode("overwrite").parquet(reportPath)
+    }
 
   /** Streaming WARC ingestion: crawl segments land → response records
     * extract → append to the corpus parquet, idempotently. A claims
@@ -1053,30 +868,19 @@ object StreamOps {
     * the record_id key lets a compaction drop the duplicate. */
   def warcIngestSink(records: DataFrame, claimsPath: String,
                      corpusPath: String)
-                    (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val resp = batch.toDF().filter(col("warc_type") === "response")
-          .select(col("record_id"), col("target_uri"),
-            col("content_length"),
-            org.apache.spark.sql.functions.md5(col("body")).as("body_md5"))
-        val claimsHPath = new org.apache.hadoop.fs.Path(claimsPath)
-        val claimsFs = claimsHPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val fresh =
-          (if (claimsFs.exists(claimsHPath))
-             resp.join(spark.read.parquet(claimsPath),
-               Seq("record_id"), "left_anti")
-           else resp).localCheckpoint()
-        fresh.write.mode("append").parquet(corpusPath)
-        fresh.select(col("record_id"))
-          .write.mode("append").parquet(claimsPath)
-        ()
-      }
-      .start()
+                    (checkpoint: String): StreamingQuery =
+    foreachTrigger(records, checkpoint) { (batch, _) =>
+      val resp = batch.filter(col("warc_type") === "response")
+        .select(col("record_id"), col("target_uri"),
+          col("content_length"), md5(col("body")).as("body_md5"))
+      val fresh = Materialize.localCheckpoint(
+        readState(batch.sparkSession, claimsPath)
+          .map(claims => resp.join(claims, Seq("record_id"), "left_anti"))
+          .getOrElse(resp))
+      fresh.write.mode("append").parquet(corpusPath)
+      fresh.select(col("record_id"))
+        .write.mode("append").parquet(claimsPath)
+    }
 
   /** Streaming crawl-frontier admission — q220's canonical-URL dedup as
     * a sink (the batch/stream parity convention of cdcAdmitSink /
@@ -1095,33 +899,22 @@ object StreamOps {
     * URLs, never the full history. */
   def frontierSink(urls: DataFrame, claimsPath: String,
                    acceptedPath: String)
-                  (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    urls.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val canon = graft.operators.CrawlOps.canonicalized(batch.toDF())
-          .select(col("doc_id"), col("url"), col("canonical"), col("host"))
-          .groupBy(col("canonical"))
-          .agg(org.apache.spark.sql.functions.min(
-            struct(col("doc_id"), col("url"), col("host"))).as("first"))
-          .select(col("first.doc_id"), col("first.url"), col("canonical"),
-            col("first.host"))
-        val claimsHPath = new org.apache.hadoop.fs.Path(claimsPath)
-        val claimsFs = claimsHPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val fresh =
-          (if (claimsFs.exists(claimsHPath))
-             canon.join(spark.read.parquet(claimsPath),
-               Seq("canonical"), "left_anti")
-           else canon).localCheckpoint()
-        fresh.write.mode("append").parquet(acceptedPath)
-        fresh.select(col("canonical"))
-          .write.mode("append").parquet(claimsPath)
-        ()
-      }
-      .start()
+                  (checkpoint: String): StreamingQuery =
+    foreachTrigger(urls, checkpoint) { (batch, _) =>
+      val canon = graft.operators.CrawlOps.canonicalized(batch)
+        .select(col("doc_id"), col("url"), col("canonical"), col("host"))
+        .groupBy(col("canonical"))
+        .agg(min(struct(col("doc_id"), col("url"), col("host"))).as("first"))
+        .select(col("first.doc_id"), col("first.url"), col("canonical"),
+          col("first.host"))
+      val fresh = Materialize.localCheckpoint(
+        readState(batch.sparkSession, claimsPath)
+          .map(claims => canon.join(claims, Seq("canonical"), "left_anti"))
+          .getOrElse(canon))
+      fresh.write.mode("append").parquet(acceptedPath)
+      fresh.select(col("canonical"))
+        .write.mode("append").parquet(claimsPath)
+    }
 
   /** Streaming canary gate — q326's leaked-string scan as an ingest
     * admit filter (the decontaminateSink pattern at exact-string
@@ -1136,64 +929,62 @@ object StreamOps {
     * batch-sized + the eval-sized broadcast. */
   def canaryGateSink(docs: DataFrame, canaries: DataFrame,
                      cleanPath: String)
-                    (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val c = canaries.select(col("g4"), col("eval_id")).localCheckpoint()
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val hits = batch.toDF()
-          .withColumn("toks", split(col("text"), " "))
-          .select(col("doc_id"),
-            explode(expr(graft.operators.TextOps.fourGrams)).as("g4"))
-          .join(broadcast(c), "g4")
-          .filter(col("doc_id") =!= col("eval_id"))
-          .select(col("doc_id")).distinct()
-        batch.toDF().join(hits, Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(cleanPath)
-        ()
-      }
-      .start()
+                    (checkpoint: String): StreamingQuery = {
+    val c = Materialize.localCheckpoint(
+      canaries.select(col("g4"), col("eval_id")))
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val hits = batch
+        .withColumn("toks", split(col("text"), " "))
+        .select(col("doc_id"),
+          explode(expr(graft.operators.TextOps.fourGrams)).as("g4"))
+        .join(broadcast(c), "g4")
+        .filter(col("doc_id") =!= col("eval_id"))
+        .select(col("doc_id")).distinct()
+      batch.join(hits, Seq("doc_id"), "left_anti")
+        .write.mode("append").parquet(cleanPath)
+    }
   }
 
+  /** Streaming near-dup admission — the streaming form of q141's
+    * batch-vs-index dedup: each micro-batch of documents is checked
+    * against a persistent CLAIMS index of LSH band buckets (the q34
+    * Kirsch–Mitzenmacher pipeline, one hashing pass per batch); a doc is
+    * REJECTED when ANY of its band keys is already claimed, admitted docs
+    * append their bands to the index and their rows to `admittedPath`.
+    *
+    * Index semantics match q141 exactly: within-batch duplicates are NOT
+    * flagged against each other (they claim together and the next index
+    * build's q33/q110 job resolves them), and the claims store is the
+    * same artifact the batch pipeline would precompute. The check is a
+    * band-key semi-join: at production scale the claims side is a stored
+    * table scan, the batch side is micro-batch-sized, and nothing
+    * corpus-sized shuffles per trigger. The plain parquet appends here
+    * are at-least-once on crash replay — admitted rows write BEFORE
+    * claims, so the worst replay outcome is duplicate admitted rows,
+    * never lost ones; a transactional table format keyed by batchId is
+    * the exactly-once swap at production scale. */
   def nearDupAdmitSink(docs: DataFrame, claimsPath: String,
                        admittedPath: String)
-                      (checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val bands = graft.operators.TextOps.minhashBands(
-          batch.toDF().withColumn("toks", split(col("text"), " "))
-            .select(col("doc_id"), col("toks"))).persist()
-        try {
-          // existence probed through the same filesystem layer the
-          // reads/writes use — a java.io.File check would answer false
-          // for every hdfs://-s3a:// claims store and admit everything
-          val claimsHPath = new org.apache.hadoop.fs.Path(claimsPath)
-          val claimsFs = claimsHPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          val hit =
-            if (claimsFs.exists(claimsHPath)) {
-              val claims = spark.read.parquet(claimsPath)
-              bands.join(claims.select(col("band"), col("bkey")),
-                Seq("band", "bkey"), "left_semi")
-                .select(col("doc_id")).distinct()
-            } else bands.select(col("doc_id")).limit(0)
-          val admitted = batch.toDF()
-            .join(hit, Seq("doc_id"), "left_anti").localCheckpoint()
-          // admitted rows FIRST, claims second: a crash between the two
-          // replays the batch with the old claims state, re-admitting
-          // the same docs — duplicate admitted rows (recoverable,
-          // at-least-once). The reverse order would find the batch's own
-          // claims on replay and reject docs that were never written
-          // anywhere — silent loss.
-          admitted.write.mode("append").parquet(admittedPath)
-          bands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .write.mode("append").parquet(claimsPath)
-        } finally { bands.unpersist(blocking = false) }
-        ()
-      }
-      .start()
+                      (checkpoint: String): StreamingQuery =
+    foreachTrigger(docs, checkpoint) { (batch, _) =>
+      val bands = Materialize.persist(graft.operators.TextOps.minhashBands(
+        batch.withColumn("toks", split(col("text"), " "))
+          .select(col("doc_id"), col("toks"))))
+      val hit = readState(batch.sparkSession, claimsPath)
+        .map(claims => bands.join(claims.select(col("band"), col("bkey")),
+            Seq("band", "bkey"), "left_semi")
+          .select(col("doc_id")).distinct())
+        .getOrElse(bands.select(col("doc_id")).limit(0))
+      val admitted = Materialize.localCheckpoint(
+        batch.join(hit, Seq("doc_id"), "left_anti"))
+      // admitted rows FIRST, claims second: a crash between the two
+      // replays the batch with the old claims state, re-admitting
+      // the same docs — duplicate admitted rows (recoverable,
+      // at-least-once). The reverse order would find the batch's own
+      // claims on replay and reject docs that were never written
+      // anywhere — silent loss.
+      admitted.write.mode("append").parquet(admittedPath)
+      bands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(claimsPath)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.util
 
 /** Small local-filesystem helpers shared by the test-scale tooling (Verify
-  * output reset, streaming upsert store swap, bucketed-table cleanup). */
+  * output reset, bucketed-table cleanup). */
 object Fs {
   def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

@@ -4,8 +4,12 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
 
+import graft.streaming.StreamOps
 import graft.util.{Materialize, Watchdog}
 
 /** Query-scoped materialization: every frame a query persists or
@@ -14,7 +18,8 @@ import graft.util.{Materialize, Watchdog}
   * session as it found it — no cached partitions, no checkpoint files.
   * The loop family runs with a checkpoint directory set, so Closure and
   * ConnectedComponents take their reliable-checkpoint path and the file
-  * deletion is exercised too. */
+  * deletion is exercised too. A streaming sink's trigger is a scope of
+  * its own, so a running stream leaves nothing cached between triggers. */
 class MaterializeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -127,5 +132,36 @@ class MaterializeSpec extends SparkSpec {
       try { df.count(); false }
       catch { case _: Throwable => true }
     assert(failed, "reading a released local checkpoint must fail loudly")
+  }
+
+  test("streaming sink triggers leave no cached partitions behind: " +
+      "klDriftSink and nearDupAdmitSink over three micro-batches") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val docs = Tables.documents(spark, dir)
+      .select("doc_id", "source", "text").as[(Long, String, String)].collect()
+    def triggersLeaveNothing(name: String)(
+        start: (DataFrame, java.io.File) => StreamingQuery): Unit = {
+      val out = Files.createTempDirectory("graft-trigger-scope").toFile
+      try {
+        val input = MemoryStream[(Long, String, String)]
+        val rdds0 = cachedByRdd.keySet
+        val q = start(input.toDF().toDF("doc_id", "source", "text"), out)
+        try docs.grouped(docs.length / 3 + 1).foreach { b =>
+          input.addData(b.toSeq)
+          q.processAllAvailable()
+        } finally q.stop()
+        val left = cachedByRdd.collect { case (id, n) if !rdds0(id) => n }.sum
+        assert(left == 0L, s"$name left $left cached partitions after its triggers")
+      } finally graft.util.Fs.deleteRecursively(out)
+    }
+    def under(d: java.io.File, f: String) = new java.io.File(d, f).getAbsolutePath
+    triggersLeaveNothing("klDriftSink") { (in, d) =>
+      StreamOps.klDriftSink(in, under(d, "state"), under(d, "report"))(under(d, "ckpt"))
+    }
+    triggersLeaveNothing("nearDupAdmitSink") { (in, d) =>
+      StreamOps.nearDupAdmitSink(in.select("doc_id", "text"), under(d, "claims"),
+        under(d, "admitted"))(under(d, "ckpt"))
+    }
   }
 }

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.streaming.StreamOps
@@ -555,30 +556,101 @@ class StreamRestartSpec extends SparkSpec {
   test("the SAME checkpoint spelled differently across restarts (a '.' " +
       "path segment) resumes cleanly — the pairing guard compares " +
       "canonical paths, not raw strings") {
-    val dir = java.nio.file.Files.createTempDirectory("ckptspell").toFile
+    // restart a sink under an alternate spelling of its checkpoint:
+    // genuinely the same checkpoint, so the guard must NOT report a
+    // mis-pairing
+    def resumesUnderAltSpelling(schema: StructType, b1: DataFrame,
+        b2: DataFrame)(
+        start: (DataFrame, String, String, String) => StreamingQuery): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("ckptspell").toFile
+      val statePath = new java.io.File(dir, "state").getAbsolutePath
+      val reportPath = new java.io.File(dir, "report").getAbsolutePath
+      val srcDir = new java.io.File(dir, "src").getAbsolutePath
+      val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
+      // same directory, non-canonical spelling: File canonicalizes both
+      val ckptAlt = dir.getAbsolutePath + "/./ckpt"
+      try {
+        def src(): DataFrame = spark.readStream.schema(schema).parquet(srcDir)
+        b1.write.mode("append").parquet(srcDir)
+        val q1 = start(src(), statePath, reportPath, ckpt)
+        q1.processAllAvailable(); q1.stop()
+        b2.write.mode("append").parquet(srcDir)
+        val q2 = start(src(), statePath, reportPath, ckptAlt)
+        q2.processAllAvailable(); q2.stop()
+        val n = spark.read.parquet(statePath)
+          .filter(!col("is_sentinel")).count()
+        assert(n >= 1, "resume under the alternate spelling must process")
+      } finally graft.util.Fs.deleteRecursively(dir)
+    }
+    resumesUnderAltSpelling(
+      StructType(Seq(StructField("event_type", StringType),
+        StructField("ts", TimestampType))),
+      Seq(("click", Timestamp.valueOf("2024-01-02 00:00:00")))
+        .toDF("event_type", "ts"),
+      Seq(("click", Timestamp.valueOf("2024-01-02 01:00:00")))
+        .toDF("event_type", "ts")) {
+      (src, state, report, ckpt) => StreamOps.anomalySink(src, state, report)(ckpt)
+    }
+    resumesUnderAltSpelling(
+      StructType(Seq(StructField("term", StringType))),
+      Seq("alpha", "beta", "alpha").toDF("term"),
+      Seq("beta", "gamma").toDF("term")) {
+      (src, state, report, ckpt) =>
+        StreamOps.heavyHittersSink(src, state, report)(ckpt)
+    }
+  }
+
+  test("heavyHittersSink survives kill-and-resume with a crash-replayed " +
+      "trigger: the state's running total n equals the exact term count " +
+      "and every counter stays within err of the truth") {
+    val dir = java.nio.file.Files.createTempDirectory("hhrestart").toFile
     val statePath = new java.io.File(dir, "state").getAbsolutePath
     val reportPath = new java.io.File(dir, "report").getAbsolutePath
-    val srcDir = new java.io.File(dir, "src").getAbsolutePath
-    val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
-    // same directory, non-canonical spelling: File canonicalizes both
-    val ckptAlt = dir.getAbsolutePath + "/./ckpt"
     try {
-      val schema = StructType(Seq(StructField("event_type", StringType),
-        StructField("ts", TimestampType)))
-      def src(): DataFrame = spark.readStream.schema(schema).parquet(srcDir)
-      Seq(("click", Timestamp.valueOf("2024-01-02 00:00:00")))
-        .toDF("event_type", "ts").write.mode("append").parquet(srcDir)
-      val q1 = StreamOps.anomalySink(src(), statePath, reportPath)(ckpt)
-      q1.processAllAvailable(); q1.stop()
-      Seq(("click", Timestamp.valueOf("2024-01-02 01:00:00")))
-        .toDF("event_type", "ts").write.mode("append").parquet(srcDir)
-      // restart under the alternate spelling: genuinely the same
-      // checkpoint, so the guard must NOT report a mis-pairing
-      val q2 = StreamOps.anomalySink(src(), statePath, reportPath)(ckptAlt)
-      q2.processAllAvailable(); q2.stop()
-      val n = spark.read.parquet(statePath)
-        .filter(!col("is_sentinel")).count()
-      assert(n >= 1, "resume under the alternate spelling must process")
+      val terms = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+        .select(explode(split(col("text"), " ")).as("term"))
+        .filter(col("term") =!= "")
+        .as[String].collect()
+      val (b1, b2) = terms.splitAt(terms.length / 2)
+      crashResume(dir, StructType(Seq(StructField("term", StringType))),
+        b1.toSeq, b2.toSeq, (s: Seq[String]) => s.toDF("term")) {
+        (src, ckpt) => StreamOps.heavyHittersSink(src, statePath, reportPath)(ckpt)
+      }
+      val state = spark.read.parquet(statePath)
+      val ns = state.select("n").distinct().as[Long].collect().toSeq
+      assert(ns == Seq(terms.length.toLong),
+        s"replay double-counted or lost terms: n=$ns, exact ${terms.length}")
+      val err = state.select("err").limit(1).as[Long].collect().head
+      val exact = terms.groupBy(identity).view.mapValues(_.length.toLong).toMap
+      state.filter(!col("is_sentinel")).select("term", "c")
+        .as[(String, Long)].collect().foreach { case (term, c) =>
+          val truth = exact.getOrElse(term, 0L)
+          assert(c <= truth && truth <= c + err,
+            s"$term c=$c truth=$truth err=$err")
+        }
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("upsertSink survives kill-and-resume with a crash-replayed " +
+      "trigger: the store equals last-write-wins over both batches") {
+    val dir = java.nio.file.Files.createTempDirectory("upsertrestart").toFile
+    val storePath = new java.io.File(dir, "store").getAbsolutePath
+    try {
+      // batch 2 overwrites ids 10..29 with a newer version, adds 20..29,
+      // and carries a STALE version of id 5 that must not win
+      val b1 = (0L until 20L).map(id => (id, 1L, s"b1-$id"))
+      val b2 = (10L until 30L).map(id => (id, 2L, s"b2-$id")) :+ ((5L, 0L, "stale"))
+      crashResume(dir, StructType(Seq(StructField("id", LongType),
+          StructField("version", LongType), StructField("payload", StringType))),
+        b1, b2, (s: Seq[(Long, Long, String)]) => s.toDF("id", "version", "payload")) {
+        (src, ckpt) => StreamOps.upsertSink(src, storePath, "id", "version")(ckpt)
+      }
+      val store = spark.read.parquet(storePath)
+        .select("id", "version", "payload").as[(Long, Long, String)].collect()
+      val expected = (b1 ++ b2).groupBy(_._1).values.map(_.maxBy(_._2)).toSet
+      assert(store.length == expected.size && store.toSet == expected,
+        s"store is not last-write-wins: extra=${store.toSet -- expected} " +
+          s"missing=${expected -- store.toSet}")
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 
