@@ -77,8 +77,9 @@ object PlanDump {
 
     if (want("kcore_round")) {
       // one kCore peeling round exactly as RdfOps.kCore builds it (m is
-      // the materializing count's exact edge total; the work tree hints
-      // broadcast when m ≤ 500k — this dump is the hint evidence)
+      // the materializing count's exact edge total; the round hints
+      // broadcast when m ≤ Closure.BroadcastMaxRows — this dump is the
+      // hint evidence)
       import org.apache.spark.sql.functions._
       val edges0 = graft.Tables.lineitem(spark, sfDir)
         .select(concat(lit("P"), col("l_partkey").cast("string")).as("src"),
@@ -88,15 +89,8 @@ object PlanDump {
         .unionByName(edges0.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().transform(Materialize.localCheckpoint(_))
       val m = edges.count()
-      val alive0 = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= 4).select(col("src").as("node"))
-      val alive = if (m <= 500000L) broadcast(alive0) else alive0
       println(s"\n========== kcore_round (m=$m) ==========")
-      edges
-        .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .explain("formatted")
+      operators.RdfOps.kCorePrune(edges, m, 4).explain("formatted")
     }
 
     if (want("q352_internal")) {

@@ -1085,6 +1085,21 @@ object RdfOps {
         |GROUP BY ?n""".stripMargin,
       TripleStore.triples(sp, dir), TripleStore.langLabels(sp, dir))
 
+  /** The directed nation/region entity graph the link-analysis loops
+    * (q198, q298, q249) walk: the (src, dst) edges and their node set.
+    * The edges are localCheckpointed (eager), not persisted: the loop's
+    * lazy per-round checkpoints re-analyze this table's logical plan
+    * every round, and the TripleStore union behind it is a deep tree —
+    * checkpointed it plans as one leaf (same one-pass materialization as
+    * persist+count). */
+  private def entityGraph(sp: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
+      .filter(col("p").isin("nation", "region"))
+      .select(col("s").as("src"), col("o").as("dst")))
+    (e, Materialize.persist(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()))
+  }
+
   /** PageRank over the entity graph (nation/region edges: C→N, S→N,
     * N→R) — the iterative-centrality companion to the census operators
     * (q110 components, q135 degrees, q162 triangles). Three damped
@@ -1101,15 +1116,7 @@ object RdfOps {
     * across iterations. Top-20 under the total (pr desc, node) order
     * via TakeOrderedAndProject. */
   def q198Pagerank(sp: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint (eager), not persist: the loop's lazy per-round
-    // checkpoints re-analyze this table's logical plan every round, and
-    // the TripleStore union behind it is a deep tree — checkpointed it
-    // plans as one leaf (same one-pass materialization as persist+count)
-    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")))
-    val nodes = Materialize.persist(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val (e, nodes) = entityGraph(sp, dir)
     val n = nodes.count()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
     var pr: DataFrame = nodes.withColumn("pr", lit(1.0) / n)
@@ -1149,15 +1156,7 @@ object RdfOps {
     * round to 10dp before reuse; the top-20 sorts on the 8dp emitted
     * key (q198's round-before-use cut). */
   def q298PersonalizedPagerank(sp: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint (eager), not persist: the loop's lazy per-round
-    // checkpoints re-analyze this table's logical plan every round, and
-    // the TripleStore union behind it is a deep tree — checkpointed it
-    // plans as one leaf (same one-pass materialization as persist+count)
-    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")))
-    val nodes = Materialize.persist(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val (e, nodes) = entityGraph(sp, dir)
     val seeds = Materialize.localCheckpoint(e.filter(col("dst") === "R1")
       .select(col("src").as("node")).distinct())
     val ns = seeds.count().toDouble
@@ -1205,15 +1204,7 @@ object RdfOps {
     * across rounds. Top-20 under (authority desc, node) via
     * TakeOrderedAndProject. */
   def q249Hits(sp: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint (eager), not persist: the loop's lazy per-round
-    // checkpoints re-analyze this table's logical plan every round, and
-    // the TripleStore union behind it is a deep tree — checkpointed it
-    // plans as one leaf (same one-pass materialization as persist+count)
-    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")))
-    val nodes = Materialize.persist(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val (e, nodes) = entityGraph(sp, dir)
     val n = nodes.count()
     var hub: DataFrame = nodes.withColumn("h", lit(1.0) / n)
     var auth: DataFrame = null
@@ -1274,18 +1265,7 @@ object RdfOps {
     var rounds = 0
     var done = m == 0L
     while (!done && rounds < maxRounds) {
-      val alive0 = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-      // Price the semi-join build side with the round's EXACT edge count
-      // (the Closure broadcast-hint discipline): |alive| ≤ distinct src ≤
-      // m, so a small remaining graph broadcasts — both per-round
-      // semi-joins then stream the edge blocks with no shuffle — instead
-      // of trusting AQE to convert mid-loop.
-      val alive = if (m <= 500000L) broadcast(alive0) else alive0
-      val pruned = edges
-        .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
+      val pruned = kCorePrune(edges, m, k)
         .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: ONE job per round (count materializes)
       val m2 = pruned.count()
       // pruned is a materialized leaf now — the superseded round's blocks
@@ -1303,6 +1283,36 @@ object RdfOps {
     edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
   }
 
+  /** One [[kCore]] peeling round over the symmetrized edge set `edges`
+    * of exactly `m` rows: keep the edges whose both endpoints have degree
+    * ≥ k. The surviving-node side of both semi-joins is priced by `m`
+    * ([[graft.plans.Closure.hintIf]]): |alive| ≤ distinct src ≤ m, so a
+    * small remaining graph broadcasts — both semi-joins then stream the
+    * edge blocks with no shuffle — instead of trusting AQE to convert
+    * mid-loop. */
+  private[graft] def kCorePrune(edges: DataFrame, m: Long, k: Int): DataFrame = {
+    val alive = Closure.hintIf(edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k).select(col("src").as("node")), m)
+    edges
+      .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
+      .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src"), col("dst"))
+  }
+
+  /** The nation/region/segment entity graph with both orientations of
+    * every edge — the undirected graph q230, q241 and q242 walk —
+    * `decorate`d (q242 adds its weight column) and localCheckpointed: a
+    * leaf plan for the per-round joins. */
+  private def undirectedEntityEdges(sp: SparkSession, dir: String,
+                                    decorate: DataFrame => DataFrame = identity): DataFrame = {
+    val fwd = TripleStore.triples(sp, dir)
+      .filter(col("p").isin("nation", "region", "segment"))
+      .select(col("s").as("src"), col("o").as("dst"))
+    Materialize.localCheckpoint(decorate(fwd
+      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()))
+  }
+
   /** Min-hop BFS from a seed entity over the UNDIRECTED entity graph
     * (nation/region/segment edges) — the shortest-path companion to the
     * reachability closure (J4) and PageRank (q198): closure asks "which",
@@ -1317,12 +1327,7 @@ object RdfOps {
     * CTE taking min(hop) per node. */
   def q230BfsHops(sp: SparkSession, dir: String): DataFrame = {
     import sp.implicits._
-    val fwd = TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region", "segment"))
-      .select(col("s").as("src"), col("o").as("dst"))
-    val e = fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().transform(Materialize.localCheckpoint(_)) // leaf plan for the per-round joins
+    val e = undirectedEntityEdges(sp, dir)
 
     var visited = Materialize.localCheckpoint(Seq(("R1", 0L)).toDF("node", "hop"))
     var frontier = visited.select("node")
@@ -1350,12 +1355,7 @@ object RdfOps {
     * LPA splits a connected graph along density, components only along
     * reachability. */
   def q241LabelPropagation(sp: SparkSession, dir: String): DataFrame = {
-    val fwd = TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region", "segment"))
-      .select(col("s").as("src"), col("o").as("dst"))
-    val e = fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().transform(Materialize.localCheckpoint(_)) // leaf plan for the per-round joins
+    val e = undirectedEntityEdges(sp, dir)
 
     var lbl = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
@@ -1382,14 +1382,8 @@ object RdfOps {
     * round cuts the lineage exactly as the closure/PageRank loops do. */
   def q242WeightedSssp(sp: SparkSession, dir: String): DataFrame = {
     import sp.implicits._
-    val fwd = TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region", "segment"))
-      .select(col("s").as("src"), col("o").as("dst"))
-    val e = fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .withColumn("w", (length(col("src")) * 7 + length(col("dst")) * 13) % 5 + 1)
-      .transform(Materialize.localCheckpoint(_)) // leaf plan for the per-round joins
+    val e = undirectedEntityEdges(sp, dir,
+      _.withColumn("w", (length(col("src")) * 7 + length(col("dst")) * 13) % 5 + 1))
 
     var dist = Materialize.localCheckpoint(Seq(("R1", 0L)).toDF("node", "dist"))
     (1 to 4).foreach { _ =>

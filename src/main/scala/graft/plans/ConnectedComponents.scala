@@ -41,12 +41,6 @@ import graft.util.Materialize
   */
 object ConnectedComponents {
 
-  private def ckpt(df: DataFrame): DataFrame = Materialize.lineageCut(df, eager = false)
-
-  /** Eager variant for loop-invariant tables (the Closure.ckptEager
-    * rationale: cut per-round re-analysis of a deep input plan). */
-  private def ckptEager(df: DataFrame): DataFrame = Materialize.lineageCut(df, eager = true)
-
   /** Component labels for every node in `nodes`.
     *
     * @param edges (src, dst) pairs in either orientation (symmetrized here)
@@ -109,10 +103,10 @@ object ConnectedComponents {
     * caller's domain, silently breaking keep = (node == component)
     * consumers — and refuses at action time via raise_error, costing
     * zero extra jobs. */
-  /** Debug-gated audit of the [[labels]] uniqueNodes promise (the
-    * Closure GRAFT_*_DEBUG convention): a violated promise silently
-    * DUPLICATES output rows via the full-outer domain join, so verify
-    * runs can opt into failing loudly at two counting jobs' cost. */
+  /** Debug-gated audit of the [[labels]] uniqueNodes promise: a violated
+    * promise silently DUPLICATES output rows via the full-outer domain
+    * join, so verify runs can opt into failing loudly at two counting
+    * jobs' cost. */
   private def debugCc = sys.env.contains("GRAFT_CC_DEBUG")
 
   private def attachDomain(lab: DataFrame, nodes: DataFrame,
@@ -141,18 +135,18 @@ object ConnectedComponents {
                                   switchAfter: Option[Int] = None,
                                   uniqueNodes: Boolean = false): DataFrame = {
     // Eagerly checkpointed, not persisted: the symmetrized table is
-    // probed every round, and each round's lazy ckpt re-ANALYZES its
+    // probed every round, and each round's lazy cut re-ANALYZES its
     // whole logical plan — for a caller handing raw pair-pipeline edges
     // (q203's band self-join) that is repeated driver-side planning for
     // nothing; a checkpointed table plans as one leaf (same
     // materialize-once economics).
-    val sym = ckptEager(
+    val sym = Materialize.lineageCut(
       edges.select(col("src"), col("dst"))
         .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
+        .distinct(), eager = true)
     // Both orientations are present, so src alone covers every touched node.
-    var lab = ckpt(sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("component")))
+    var lab = Materialize.lineageCut(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("component")), eager = false)
     // Exact fixpoint tests, one action per round either way. INTEGRAL
     // labels: the label-table SUM (DECIMAL(38), exact) is strictly
     // monotone because labels only decrease — "sum unchanged" == "no
@@ -185,8 +179,8 @@ object ConnectedComponents {
     while (i < maxIters && !converged) {
       val viaEdges = sym.join(lab, sym("src") === lab("node"))
         .select(sym("dst").as("node"), col("component"))
-      val next = ckpt(viaEdges.unionByName(lab.select(col("node"), col("component")))
-        .groupBy(col("node")).agg(min(col("component")).as("component")))
+      val next = Materialize.lineageCut(viaEdges.unionByName(lab.select(col("node"), col("component")))
+        .groupBy(col("node")).agg(min(col("component")).as("component")), eager = false)
       if (integralLabels) {
         val curSum = labelSum(next)
         converged = (curSum, prevSum) match {
@@ -247,7 +241,7 @@ object ConnectedComponents {
     // for nothing (the uniqueNodes rationale, applied to edges).
     val base = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    var e = ckpt(if (preDeduped) base else base.distinct())
+    var e = Materialize.lineageCut(if (preDeduped) base else base.distinct(), eager = false)
     def largeStar(in: DataFrame): DataFrame = {
       val sym = in.unionByName(
         in.select(col("dst").as("src"), col("src").as("dst")))
@@ -271,7 +265,7 @@ object ConnectedComponents {
     var count = e.count()
     var converged = count == 0L // an edgeless graph is already contracted
     while (i < maxIters && !converged) {
-      val next = ckpt(smallStar(largeStar(e)))
+      val next = Materialize.lineageCut(smallStar(largeStar(e)), eager = false)
       val nextCount = next.count()
       // set equality: same cardinality and nothing new on one side
       converged = nextCount == count && next.except(e).isEmpty

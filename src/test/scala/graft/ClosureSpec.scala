@@ -98,6 +98,14 @@ class ClosureSpec extends SparkSpec {
         twoHopAfterRounds = switch).as[(String, String)].collect().toSeq
       assert(pFun.toSet == pGen, s"pairs, chain length $n, switch $switch")
       assert(pFun.size == pFun.distinct.size, s"pairs distinct, $n/$switch")
+      if (switch == -1) { // rootLabels strides at the default switch only
+        val lGen = Closure.rootLabels(edges, seeds).as[(String, String)].collect().toSet
+        val lFun = Closure.rootLabels(edges, seeds, functionalEdges = true)
+          .as[(String, String)].collect().toSeq
+        assert(lGen == (0 until n).map(i => (s"v$i", s"v$n")).toSet, s"labels, $n")
+        assert(lFun.toSet == lGen, s"labels, chain length $n")
+        assert(lFun.size == lFun.distinct.size, s"labels distinct, $n")
+      }
     }
   }
 
@@ -121,7 +129,14 @@ class ClosureSpec extends SparkSpec {
         maxIters = 6, functionalEdges = true, twoHopAfterRounds = switch)
         .as[String].collect().toSeq
       assert(got.toSet == Set("a", "b") && got.size == 2, s"switch $switch")
+      val pairs = Closure.ancestorPairs(edges, maxIters = 6, functionalEdges = true,
+        twoHopAfterRounds = switch).as[(String, String)].collect().toSeq
+      assert(pairs.toSet == Set(("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")) &&
+        pairs.size == 4, s"pairs, switch $switch")
     }
+    val labels = Closure.rootLabels(edges, Seq("a").toDF("node"), maxIters = 6,
+      functionalEdges = true).as[(String, String)].collect().toSeq
+    assert(labels.toSet == Set(("b", "a"), ("a", "a")) && labels.size == 2)
   }
 
   test("isFunctional probes forests vs fan-out") {

@@ -8,7 +8,8 @@
 # Usage: tools/gate.sh [sfDir]   (default /root/testdata/sf0.01)
 #
 # Steps (each must exit 0):
-#   0. tools/readme_check.py + tools/lifecycle_check.py (source lints)
+#   0. tools/readme_check.py + tools/lifecycle_check.py + tools/env_check.py
+#      (source lints)
 #   1. sbt compile
 #   2. sbt test (full ScalaTest suite)
 #   3. graft.Verify + tools/check.py at the gate SF (oracle hash-match)
@@ -34,6 +35,9 @@ step "readme"   python3 tools/readme_check.py
 # every persist/checkpoint goes through graft.util.Materialize, whose
 # query scope (Watchdog.run) releases it — no direct lifecycle calls
 step "lifecycle" python3 tools/lifecycle_check.py
+# src/main reads only the allowlisted env variables, each in its owner
+# file — no new env hatch slips in unnamed
+step "env"      python3 tools/env_check.py
 step "compile"  sbt -batch compile
 step "test"     sbt -batch test
 step "verify"   sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify"
