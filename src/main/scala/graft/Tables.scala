@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -13,8 +19,51 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Reads `dir/name.parquet` with the schema [[schemaOf]] remembers, so
+    * only the first read of a path pays Spark's schema-inference job. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaOf(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  private type Fingerprint = Seq[(String, Long, Long)]
+
+  /** (qualified path, inference confs) → (fingerprint, schema) */
+  private val schemas =
+    new ConcurrentHashMap[(String, Map[String, String]), (Fingerprint, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per path.
+    * A plain read runs a one-task footer-reading job each time, and a
+    * long-lived session reads the same few tables in every query. The memo
+    * is keyed on the qualified path and on the session confs that steer
+    * inference ([[events]] flips `nanosAsLong`), and it holds the (name,
+    * length, mtime) of every file under the path, so a rewritten path is
+    * inferred again. None for a missing path: the plain read reports it. */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(p)
+    if (!fs.exists(qualified)) None
+    else {
+      val files = ArrayBuffer.empty[(String, Long, Long)]
+      val it = fs.listFiles(qualified, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val fingerprint: Fingerprint = files.sorted.toSeq
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }
+      val key = (qualified.toString, confs)
+      Option(schemas.get(key)).collect { case (`fingerprint`, s) => s }.orElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (fingerprint, s))
+        Some(s)
+      }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

@@ -1197,36 +1197,38 @@ object RdfOps {
     * (the q186/q198 round-before-use convention), so the whole
     * trajectory replays bit-identically as chained CTEs in DuckDB.
     *
-    * Scale shape per round: one contribution aggregation keyed on the
-    * edge DESTINATION and one on the SOURCE (both map-side-partial
-    * shuffles over the edge list), two 1-row norm broadcasts, and a
-    * localCheckpoint lineage cut. Edges and the node frame persist
-    * across rounds. Top-20 under (authority desc, node) via
-    * TakeOrderedAndProject. */
+    * Scale shape per half-round: one contribution aggregation (keyed on
+    * the edge DESTINATION for authorities, on the SOURCE for hubs; a
+    * map-side-partial shuffle over the edge list) whose raw sums are the
+    * half-round's one lazy lineage cut, plus its 1-row L1-norm broadcast.
+    * The NEXT half-round divides and rounds inline as it joins the edges,
+    * so no half-round joins the node frame: a node with no in-edges (out-
+    * edges) has score 0 and only ever adds +0.0 to a sum, so it is left
+    * out until the one terminal node join fills both columns. Edges and
+    * the node frame persist across rounds. Top-20 under (authority desc,
+    * node) via TakeOrderedAndProject. */
   def q249Hits(sp: SparkSession, dir: String): DataFrame = {
     val (e, nodes) = entityGraph(sp, dir)
     val n = nodes.count()
-    var hub: DataFrame = nodes.withColumn("h", lit(1.0) / n)
+    // (node, v) scores summed over the edges from `from` to `to`: the raw
+    // sums are cut (lazy: the norm's broadcast materializes them), and the
+    // normalized, rounded scores are a projection over the cut
+    def half(scores: DataFrame, from: String, to: String): DataFrame = {
+      val raw = scores.join(e, scores("node") === e(from))
+        .groupBy(col(to).as("node")).agg(sum(col("v")).as("r"))
+        .transform(Materialize.localCheckpoint(_, eager = false))
+      raw.crossJoin(broadcast(raw.agg(sum(col("r")).as("z"))))
+        .select(col("node"), round(col("r") / col("z"), 10).as("v"))
+    }
+    var hub: DataFrame = nodes.withColumn("v", lit(1.0) / n)
     var auth: DataFrame = null
     (1 to 3).foreach { _ =>
-      val aRaw = hub.join(e, hub("node") === e("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
-      val aNorm = aRaw.agg(sum(col("ar")).as("an"))
-      auth = nodes.join(aRaw, nodes("node") === aRaw("dst"), "left")
-        .crossJoin(broadcast(aNorm))
-        .select(nodes("node"),
-          round(coalesce(col("ar"), lit(0.0)) / col("an"), 10).as("a"))
-        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: hRaw's norm agg materializes
-      val hRaw = auth.join(e, auth("node") === e("dst"))
-        .groupBy(col("src")).agg(sum(col("a")).as("hr"))
-      val hNorm = hRaw.agg(sum(col("hr")).as("hn"))
-      hub = nodes.join(hRaw, nodes("node") === hRaw("src"), "left")
-        .crossJoin(broadcast(hNorm))
-        .select(nodes("node"),
-          round(coalesce(col("hr"), lit(0.0)) / col("hn"), 10).as("h"))
-        .transform(Materialize.localCheckpoint(_, eager = false)) // lazy: next round / terminal join materializes
+      auth = half(hub, "src", "dst")
+      hub = half(auth, "dst", "src")
     }
-    auth.join(hub, Seq("node"))
+    nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
+      .select(nodes("node"), coalesce(auth("v"), lit(0.0)).as("a"),
+        coalesce(hub("v"), lit(0.0)).as("h"))
       .orderBy(round(col("a"), 8).desc, col("node").asc).limit(20)
       .select(col("node"), round(col("a"), 8).as("authority"),
         round(col("h"), 8).as("hub"))

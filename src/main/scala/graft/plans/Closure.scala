@@ -48,8 +48,9 @@ import graft.util.Materialize
   *    blow up (hub fan-out graphs can square; that is why the general
   *    rules stay single-hop). [[reachingTo]] and [[ancestorPairs]] keep a
   *    per-round `distinct` under the forest rules too (it absorbs
-  *    duplicate input edges); [[rootLabels]] does not, so its forest
-  *    rounds run without any exchange.
+  *    duplicate input edges); [[rootLabels]] deduplicates its edges once,
+  *    in their eager cut, instead, so its forest rounds run without any
+  *    exchange.
   */
 object Closure {
 
@@ -175,14 +176,18 @@ object Closure {
     *   last column is the endpoint, the others are carried. Part of the
     *   answer.
     * @param dedupForest keep the per-round `distinct` under the forest
-    *   rules (the general rules always deduplicate)
+    *   rules (the general rules always deduplicate); without it the edge
+    *   cut is deduplicated instead
     */
   private def walk(edges: DataFrame, start: DataFrame => DataFrame,
                    maxIters: Int, forest: Boolean, broadcastMaxRows: Long,
                    twoHopAfterRounds: Int,
                    dedupForest: Boolean = true): DataFrame = {
     val strideAfter = if (twoHopAfterRounds >= 0) twoHopAfterRounds else TwoHopSwitch
-    val e = Materialize.lineageCut(edges, eager = true)
+    // without per-round dedup a doubled edge would double every frontier
+    // row through it, hop after hop: dedup the edges once, in the cut
+    val e = Materialize.lineageCut(
+      if (forest && !dedupForest) edges.distinct() else edges, eager = true)
     lazy val edgeRows = e.count() // only once a frontier outgrows the cap
     lazy val e2 = Materialize.persist(twoHop(e)) // built on the first stride round
     var acc = Materialize.lineageCut(start(e).distinct(), eager = false)

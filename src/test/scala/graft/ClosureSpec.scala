@@ -84,9 +84,14 @@ class ClosureSpec extends SparkSpec {
     // chains around and past the adaptive switch (default 6 rounds), plus
     // forced immediate striding (twoHopAfterRounds = 0) — the stride-2
     // walk must land exactly on both parities, including the boundary
-    // case where the frontier empties exactly at the switch round
-    for (n <- Seq(4, 5, 6, 7, 8, 9); switch <- Seq(-1, 0, 1)) {
-      val edges = (0 until n).map(i => (s"v$i", s"v${i + 1}")).toDF("src", "dst")
+    // case where the frontier empties exactly at the switch round. The
+    // last input, at the default switch only, is a 20-node chain with
+    // every edge given twice: each walk must absorb the duplicates,
+    // including rootLabels' forest walk, which has no per-round distinct
+    val chains = Seq(4, 5, 6, 7, 8, 9).flatMap(n => Seq(-1, 0, 1).map((n, 1, _))) :+ ((20, 2, -1))
+    for ((n, copies, switch) <- chains) {
+      val edges = (0 until n).flatMap(i => Seq.fill(copies)((s"v$i", s"v${i + 1}")))
+        .toDF("src", "dst")
       val seeds = Seq(s"v$n").toDF("node")
       val gen = Closure.reachingTo(edges, seeds).as[String].collect().toSet
       val fun = Closure.reachingTo(edges, seeds, functionalEdges = true,
