@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -17,6 +18,8 @@ import graft.util.Session
   * cartesian products. `PlanPostureSpec` pins the five fixed queries;
   * this main sweeps the WHOLE board so a new query with a regressed
   * posture is one `runMain graft.Audit <sfDir>` away from being named.
+  * It also fails any query that leaves the session changed: its conf, its
+  * function names or its temporary views ([[sessionState]]).
   *
   * Usage: runMain graft.Audit [sfDir] [name substrings...]
   */
@@ -107,6 +110,19 @@ object Audit {
     walk(root, onlyWrappersAbove = true)
   }
 
+  /** What a query must leave as it found it: every conf entry, function
+    * name and temporary view of the session, as entry -> value. */
+  def sessionState(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.map { case (k, v) => s"conf $k" -> v } ++
+      spark.catalog.listFunctions().collect().map(f => s"function ${f.name}" -> "present") ++
+      spark.catalog.listTables().collect().filter(_.isTemporary)
+        .map(t => s"temp view ${t.name}" -> "present")
+
+  /** One line per entry that differs between two [[sessionState]]s. */
+  def sessionChanges(before: Map[String, String], after: Map[String, String]): Seq[String] =
+    (before.keySet ++ after.keySet).toSeq.sorted.filter(k => before.get(k) != after.get(k))
+      .map(k => s"$k: ${before.getOrElse(k, "<absent>")} -> ${after.getOrElse(k, "<absent>")}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1).toSeq
@@ -128,7 +144,9 @@ object Audit {
     var unexemptTotal = 0
     var globalSortTotal = 0
     var failures = 0
+    var changedSession = 0
     sel.foreach { case (name, fn) =>
+      val before = sessionState(spark)
       plans.clear()
       try {
         // bounded await (round 13: the audit could never complete because
@@ -181,17 +199,22 @@ object Audit {
           failures += 1
           println(s"AUDIT $name FAILED: ${e.getMessage}")
       }
+      val changes = sessionChanges(before, sessionState(spark))
+      if (changes.nonEmpty) {
+        changedSession += 1
+        println(s"AUDIT $name SESSION CHANGED: ${changes.mkString("; ")}")
+      }
     }
     println(s"== audit: ${sel.length} queries, $flagged flagged, " +
       s"$unexemptTotal unexempt windows, $globalSortTotal mid-plan " +
-      s"global sorts, $failures failures ==")
+      s"global sorts, $failures failures, $changedSession changed the session ==")
     spark.listenerManager.unregister(listener)
     spark.stop()
-    // hard gate: an unpartitioned window over per-row data (or a query
-    // that crashes under audit) fails the build; bounded-frame loop flags
-    // and mid-plan global sorts stay report-only (the documented
-    // broadcast-query classes / sink-ordering exemptions — see
-    // docs/SCALING.md "Global-sort audit")
-    if (unexemptTotal > 0 || failures > 0) sys.exit(1)
+    // hard gate: an unpartitioned window over per-row data, a query that
+    // crashes under audit or one that changes the session fails the
+    // build; bounded-frame loop flags and mid-plan global sorts stay
+    // report-only (the documented broadcast-query classes / sink-ordering
+    // exemptions — see docs/SCALING.md "Global-sort audit")
+    if (unexemptTotal > 0 || failures > 0 || changedSession > 0) sys.exit(1)
   }
 }

@@ -4,14 +4,18 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions injector — the production deployment path for the
-  * engine's native Catalyst expressions: a cluster adds
-  * `spark.sql.extensions=graft.GraftExtensions` and `cosine_sim` /
-  * `hamming_dist` resolve in plain SQL on every session, no per-session
-  * `register(...)` calls (those remain for ad-hoc/test sessions).
+import graft.functions.{AHash64, CosineSimilarity, HammingDistance, MinHashSigs, NfcNormalize, SimHash16}
+
+/** SparkSessionExtensions injector: the SQL names of the engine's native
+  * Catalyst expressions. The engine itself never looks a native up by name
+  * (each companion's `apply` builds its expression as a Column directly);
+  * these names are for SQL text. [[graft.util.Session.local]] installs them
+  * on every session it builds, and a cluster gets them by adding
+  * `spark.sql.extensions=graft.GraftExtensions`. `unigram_viterbi` has no
+  * entry: its vocabulary is part of the expression, not a SQL argument.
   *
   * This is the extension-point ladder of SURVEY.md §4.2 made concrete:
-  * builtins compose the bulk of the engine; the two fused-loop expressions
+  * builtins compose the bulk of the engine; the fused-loop expressions
   * ride the injection hook; no custom Rule/Strategy is needed because every
   * operator shape lowers to Catalyst-visible plans.
   */
@@ -25,28 +29,22 @@ object GraftExtensions {
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def arity(name: String, n: Int)(build: Seq[Expression] => Expression)
-      : Seq[Expression] => Expression = es => {
-    // A proper arity error from the analyzer, not an IndexOutOfBounds from
-    // inside the builder.
-    if (es.length != n) throw new IllegalArgumentException(
-      s"$name requires exactly $n argument(s), got ${es.length}")
-    build(es)
-  }
+  /** `name` bound to `build`, refusing a wrong argument count with a proper
+    * analyzer error rather than an IndexOutOfBounds from inside `build`. */
+  private def fn(name: String, cls: Class[_], n: Int)
+                (build: Seq[Expression] => Expression): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), es => {
+      if (es.length != n) throw new IllegalArgumentException(
+        s"$name requires exactly $n argument(s), got ${es.length}")
+      build(es)
+    })
 
-  /** The injectable function set (also usable to bulk-register on an
-    * existing session's FunctionRegistry). */
+  /** The injectable function set: every native with a fixed builder. */
   val functions: Seq[FunctionDescription] = Seq(
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSimilarity].getName, "cosine_sim"),
-      arity("cosine_sim", 2)(es => graft.functions.CosineSimilarity(es(0), es(1)))),
-    (FunctionIdentifier("hamming_dist"),
-      new ExpressionInfo(classOf[graft.functions.HammingDistance].getName, "hamming_dist"),
-      arity("hamming_dist", 2)(es => graft.functions.HammingDistance(es(0), es(1)))),
-    (FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[graft.functions.SimHash16].getName, "simhash16"),
-      arity("simhash16", 1)(es => graft.functions.SimHash16(es(0)))),
-    (FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSigs].getName, "minhash_sigs"),
-      arity("minhash_sigs", 1)(es => graft.functions.MinHashSigs(es(0)))))
+    fn("cosine_sim", classOf[CosineSimilarity], 2)(es => CosineSimilarity(es(0), es(1))),
+    fn("hamming_dist", classOf[HammingDistance], 2)(es => HammingDistance(es(0), es(1))),
+    fn("simhash16", classOf[SimHash16], 1)(es => SimHash16(es(0))),
+    fn("minhash_sigs", classOf[MinHashSigs], 1)(es => MinHashSigs(es(0))),
+    fn("ahash64", classOf[AHash64], 1)(es => AHash64(es(0))),
+    fn("nfc_normalize", classOf[NfcNormalize], 1)(es => NfcNormalize(es(0))))
 }

@@ -2,7 +2,9 @@ package graft
 import graft.util.Session
 
 /** Repeat one query in a warm session to separate JIT/codegen warmup from
-  * steady-state cost: `runMain graft.Profile <sfDir> <queryName> [reps]`. */
+  * steady-state cost: `runMain graft.Profile <sfDir> <queryName> [reps]`.
+  * To profile under another conf, start the JVM with `-Dspark.<key>=<value>`:
+  * Spark reads it into the SparkConf the session is built from. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -10,9 +12,6 @@ object Profile {
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-    })
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)
     // each rep is one query scope, so no rep inherits another's cache

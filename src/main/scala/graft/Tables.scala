@@ -36,7 +36,7 @@ object Tables {
     * A plain read runs a one-task footer-reading job each time, and a
     * long-lived session reads the same few tables in every query. The memo
     * is keyed on the qualified path and on the session confs that steer
-    * inference ([[events]] flips `nanosAsLong`), and it holds the (name,
+    * inference (`nanosAsLong` among them), and it holds the (name,
     * length, mtime) of every file under the path, so a rewritten path is
     * inferred again. None for a missing path: the plain read reports it. */
   private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
@@ -73,14 +73,13 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark 4
-    * refuses by default — read as long via nanosAsLong) and, in newer
-    * generator runs, as a plain microsecond TIMESTAMP. [[deriveEventTime]]
+    * refuses by default; [[graft.util.Session.local]] builds every session
+    * with `nanosAsLong`, so it reads as a long) and, in newer generator
+    * runs, as a plain microsecond TIMESTAMP. [[deriveEventTime]]
     * normalizes either file schema to the same two columns, so every query
     * and oracle is generator-version-independent. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     deriveEventTime(apply(s, d, "events"))
-  }
 
   /** Shared ts derivation for batch and streaming reads of the events
     * files, normalizing both on-disk generations to the same shape:

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,9 +76,5 @@ object AHash64 {
     UTF8String.fromBytes(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    Natives.registerOnce(spark, "ahash64")(exprs => AHash64(exprs(0)))
-
-  def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("ahash64", c)
+  def apply(c: Column): Column = NativeColumn(c)(es => AHash64(es(0)))
 }

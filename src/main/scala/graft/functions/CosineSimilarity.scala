@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,15 +83,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register as a SQL function so `expr("cosine_sim(a, b)")` works in any
-    * session (mirrors the reference's dispatch-by-name registry shape). */
-  def register(spark: SparkSession): Unit =
-    Natives.registerOnce(spark, "cosine_sim")(exprs => CosineSimilarity(exprs(0), exprs(1)))
-
-  /** Column-side handle. Requires [[register]] on the session first (the
-    * Column companion that would lift an Expression directly is
-    * private[sql] in Spark 4, so resolution goes through the function
-    * registry instead). */
   def apply(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
+    NativeColumn(a, b)(es => CosineSimilarity(es(0), es(1)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -65,9 +66,5 @@ case class HammingDistance(left: Expression, right: Expression)
 }
 
 object HammingDistance {
-  def register(spark: SparkSession): Unit =
-    Natives.registerOnce(spark, "hamming_dist")(exprs => HammingDistance(exprs(0), exprs(1)))
-
-  def apply(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("hamming_dist", a, b)
+  def apply(a: Column, b: Column): Column = NativeColumn(a, b)(es => HammingDistance(es(0), es(1)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,9 +95,5 @@ object MinHashSigs {
     if (!seen) null else new GenericArrayData(mins)
   }
 
-  def register(spark: SparkSession): Unit =
-    Natives.registerOnce(spark, "minhash_sigs")(exprs => MinHashSigs(exprs(0)))
-
-  def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("minhash_sigs", c)
+  def apply(c: Column): Column = NativeColumn(c)(es => MinHashSigs(es(0)))
 }

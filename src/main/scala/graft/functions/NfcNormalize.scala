@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,9 +55,5 @@ object NfcNormalize {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit =
-    Natives.registerOnce(spark, "nfc_normalize")(exprs => NfcNormalize(exprs(0)))
-
-  def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("nfc_normalize", c)
+  def apply(c: Column): Column = NativeColumn(c)(es => NfcNormalize(es(0)))
 }

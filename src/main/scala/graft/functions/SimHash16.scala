@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,9 +82,5 @@ object SimHash16 {
     UTF8String.fromBytes(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    Natives.registerOnce(spark, "simhash16")(exprs => SimHash16(exprs(0)))
-
-  def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash16", c)
+  def apply(c: Column): Column = NativeColumn(c)(es => SimHash16(es(0)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -114,13 +115,8 @@ object UnigramViterbi {
     UTF8String.fromString(parts.reverseIterator.mkString("|"))
   }
 
-  /** Registers `unigram_viterbi` bound to THIS vocabulary (query-scoped —
-    * the vocab is constructor data, so each corpus build re-registers). */
-  def register(spark: SparkSession, pieces: Seq[String], costs: Seq[Long]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unigram_viterbi", exprs => UnigramViterbi(exprs(0), pieces, costs),
-      "scala_udf")
-
-  def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("unigram_viterbi", c)
+  /** Segments `c` against this vocabulary; the vocabulary rides the
+    * expression, so each call carries its own. */
+  def apply(c: Column, pieces: Seq[String], costs: Seq[Long]): Column =
+    NativeColumn(c)(es => UnigramViterbi(es(0), pieces, costs))
 }

@@ -79,10 +79,8 @@ object Multimodal {
     * [[graft.functions.AHash64]] — one fused loop inside whole-stage
     * codegen, replacing the earlier 64-lambda HOF formulation that never
     * codegen'd (docs/SCALING.md q202 postmortem). */
-  def aHash(media: DataFrame): DataFrame = {
-    graft.functions.AHash64.register(media.sparkSession)
+  def aHash(media: DataFrame): DataFrame =
     media.withColumn("ahash", graft.functions.AHash64(col("payload")))
-  }
 
   /** RESIZE stub — the downsample step of an image pipeline (a real
     * build decodes the container and block-averages the pixel buffer at

@@ -92,11 +92,10 @@ object ComposeOps {
   /** Explicit GROUPING SETS (beyond cube/rollup): per-priority totals,
     * per-status totals, and the grand total in one pass. */
   def q74GroupingSets(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("orders_gs")
-    s.sql("""SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-                    round(sum(o_totalprice), 2) AS total
-             FROM orders_gs
-             GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())""")
+    val (prio, status) = (col("o_orderpriority"), col("o_orderstatus"))
+    Tables.orders(s, dir)
+      .groupingSets(Seq(Seq(prio), Seq(status), Seq()), prio, status)
+      .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
   }
 
   /** Multimodal frame sampling ([[graft.multimodal.Multimodal.sampleFrames]]):
@@ -215,7 +214,7 @@ object ComposeOps {
   /** aHash groups over the events-derived media table: (ahash, n_media,
     * rep_media), materialized once — the full media scan behind it runs
     * exactly one time per caller. Shared by q202 and q203. */
-  private def ahashGroups(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def ahashGroups(s: SparkSession, dir: String): DataFrame = {
     // richer stub payload than the q45/q75 props-only table: the media
     // bytes concatenate the event's fields, so grids vary per row.
     // The hash stage is the native codegen AHash64 expression (one fused
@@ -233,8 +232,7 @@ object ComposeOps {
 
   /** Near-dup hash pairs over the DISTINCT-hash table: 16-bit band keys,
     * Hamming ≤ 6 verification (native codegen'd expression). */
-  private def ahashPairs(s: SparkSession, groups: DataFrame): DataFrame = {
-    graft.functions.HammingDistance.register(s)
+  private def ahashPairs(groups: DataFrame): DataFrame = {
     val bands = groups.select(col("ahash"), col("n_media"),
       explode(expr("transform(sequence(0, 3), " +
         "j -> struct(j AS band, substring(ahash, j * 16 + 1, 16) AS key))"))
@@ -254,7 +252,7 @@ object ComposeOps {
   }
 
   def q202MediaAhash(s: SparkSession, dir: String): DataFrame =
-    ahashPairs(s, ahashGroups(s, dir))
+    ahashPairs(ahashGroups(s, dir))
       .select(col("hash_a"), col("hash_b"), col("dist"),
         col("n_a"), col("n_b"))
 
@@ -267,7 +265,7 @@ object ComposeOps {
     * table — cluster work never touches the corpus again. */
   def q203MediaClusters(s: SparkSession, dir: String): DataFrame = {
     val groups = ahashGroups(s, dir)
-    val pairs = ahashPairs(s, groups)
+    val pairs = ahashPairs(groups)
     graft.plans.ConnectedComponents.labels(
         pairs.select(col("hash_a").as("src"), col("hash_b").as("dst")),
         groups.select(col("ahash").as("node")),

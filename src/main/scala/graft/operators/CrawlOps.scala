@@ -99,7 +99,6 @@ object CrawlOps {
     * isNormalized short-circuit serves), the rest carry combining marks
     * (e + U+0301, i + U+0308) that NFC composes to single codepoints. */
   def q221NfcNormalize(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     val m3 = col("doc_id") % 3
     val raw = when(m3 === 0, substring(col("text"), 1, 24))
       .when(m3 === 1,

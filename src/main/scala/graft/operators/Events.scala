@@ -25,7 +25,6 @@ object Events {
     // file generation (epoch-nanos INT64 vs µs timestamp — see
     // Tables.deriveEventTime). Cutoff = 2024-01-25T00:00:00Z.
     val cutoffSec = 1706140800L
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = Tables(s, dir, "events")
     val pred = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

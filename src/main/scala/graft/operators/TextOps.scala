@@ -70,7 +70,6 @@ object TextOps {
     * traversed it 8×). Pure transformation — callers own
     * repartition/persist decisions. */
   private[graft] def minhashBands(docsWithToks: DataFrame): DataFrame = {
-    graft.functions.MinHashSigs.register(docsWithToks.sparkSession)
     val sig = docsWithToks
       .withColumn("shingles", expr(shingles3))
       .withColumn("sigs", graft.functions.MinHashSigs(col("shingles")))
@@ -181,7 +180,6 @@ object TextOps {
     * `aggregate(toks, ...)` formulation runs 16 interpreted passes with 16
     * digests per token (PropertySpec pins the equivalence). */
   def q35Simhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SimHash16.register(s)
     // The native expression is null-in/null-out; the 16-arm SQL formulation
     // (and the DuckDB oracle) yield all-'0' for a NULL token array (each
     // NULL counter takes the otherwise-'0' branch) — coalesce restores that
@@ -1028,7 +1026,6 @@ object TextOps {
     * into 4-bit chunks, join on any equal chunk) rather than this bounded
     * cross-pair demo. */
   def q56SimhashPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HammingDistance.register(s)
     val sigs = q35Simhash(s, dir).filter(col("doc_id") < 300)
     sigs.as("a").join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -3286,10 +3283,10 @@ object TextOps {
     val fallback = ('a' to 'z').map(ch => (ch.toString, 20000000L))
     val vocab = (fromCorpus ++ fallback).groupBy(_._1).view
       .mapValues(_.map(_._2).min).toSeq.sortBy(_._1)
-    graft.functions.UnigramViterbi.register(s, vocab.map(_._1), vocab.map(_._2))
     docs(s, dir).select(col("doc_id"),
         graft.functions.UnigramViterbi(
-          regexp_replace(substring(col("text"), 1, 60), " ", "")).as("seg"))
+          regexp_replace(substring(col("text"), 1, 60), " ", ""),
+          vocab.map(_._1), vocab.map(_._2)).as("seg"))
       .withColumn("n_pieces",
         when(col("seg") === "", 0L)
           .otherwise(size(split(col("seg"), "\\|")).cast("long")))
@@ -3548,7 +3545,6 @@ object TextOps {
     * sees O(N²). At 100 TB the sample rides a q58-style hash bucket; the
     * winning scheme then runs corpus-wide with measured expectations. */
   def q163LshCalibration(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.MinHashSigs.register(s)
     val sub = docs(s, dir).filter(col("doc_id") < 300)
       .withColumn("shingles", expr(shingles3))
       .withColumn("sdist", expr("array_distinct(shingles)"))

@@ -27,11 +27,9 @@ import graft.util.Materialize
   */
 object VectorOps {
 
-  /** embeddings with double-cast vector; registers the native cosine
-    * expression on the session. private[graft] for the PlanDump
+  /** embeddings with double-cast vector. private[graft] for the PlanDump
     * internal-plan inspector. */
   private[graft] def vecs(s: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(s)
     Tables.embeddings(s, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
   }
@@ -1095,7 +1093,6 @@ object VectorOps {
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"),
         col("label"))
-    CosineSimilarity.register(s)
     val q = e.filter(col("vec_id") < 100)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("label").as("q_label"))
@@ -1130,7 +1127,6 @@ object VectorOps {
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"),
         col("label"))
-    CosineSimilarity.register(s)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("label").as("q_label"))

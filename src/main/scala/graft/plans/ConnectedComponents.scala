@@ -67,9 +67,8 @@ object ConnectedComponents {
     *   terminal domain join then skips its defensive `distinct()` — at
     *   corpus scale that distinct is a full extra exchange of the node
     *   set for nothing. Identical output for unique inputs; a violated
-    *   promise duplicates output rows instead of deduplicating them —
-    *   set GRAFT_CC_DEBUG to make a violation fail loudly instead
-    *   (two extra counting jobs, so verify/debug runs only).
+    *   promise duplicates output rows instead of deduplicating them
+    *   (`ConnectedComponentsSpec` checks every caller's promise).
     * @return (node, component) — component = min node id reachable over
     *         the undirected pair graph, deterministic under re-runs
     */
@@ -103,21 +102,8 @@ object ConnectedComponents {
     * caller's domain, silently breaking keep = (node == component)
     * consumers — and refuses at action time via raise_error, costing
     * zero extra jobs. */
-  /** Debug-gated audit of the [[labels]] uniqueNodes promise: a violated
-    * promise silently DUPLICATES output rows via the full-outer domain
-    * join, so verify runs can opt into failing loudly at two counting
-    * jobs' cost. */
-  private def debugCc = sys.env.contains("GRAFT_CC_DEBUG")
-
   private def attachDomain(lab: DataFrame, nodes: DataFrame,
                            uniqueNodes: Boolean): DataFrame = {
-    if (uniqueNodes && debugCc) {
-      val n = nodes.select(col("node"))
-      val (rows, distinctRows) = (n.count(), n.distinct().count())
-      require(rows == distinctRows,
-        s"ConnectedComponents.labels: uniqueNodes promised but nodes has " +
-          s"$rows rows / $distinctRows distinct — output would duplicate")
-    }
     (if (uniqueNodes) nodes.select(col("node"))
      else nodes.select(col("node")).distinct())
       .select(col("node"), lit(true).as("__known"))

@@ -63,39 +63,32 @@ object Sinks {
     val exists = new java.io.File(targetPath, "_SUCCESS").exists() ||
       new java.io.File(targetPath).list() != null &&
         new java.io.File(targetPath).list().exists(_.startsWith(s"$partCol="))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val merged =
-        if (!exists) source
-        else {
-          // Partition pruning: only the touched partitions are scanned —
-          // the isin filter on the partition column prunes at planning
-          // time (collect of the distinct partition values is bounded by
-          // the partition count, not data size).
-          val touched = source.select(col(partCol)).distinct()
-            .collect().map(_.get(0)).toSeq
-          // Read with the SOURCE's schema: partition-column type inference
-          // would otherwise re-type numeric-looking string partition values
-          // ("01" → 1) and silently rewrite them on merge. An explicit
-          // schema sidesteps inference without touching session-global
-          // conf (which would race concurrent reads on the same session).
-          val current = spark.read.schema(source.schema).parquet(targetPath)
-            .filter(col(partCol).isin(touched: _*))
-          // Materialize BEFORE the write: the merged plan reads the same
-          // files the dynamic overwrite is about to replace — an eager
-          // checkpoint cuts that lineage (a table format gets this for
-          // free from snapshot isolation).
-          graft.plans.Merge.upsert(
-            current.select(source.columns.map(col): _*), source, keyCols)
-            .transform(Materialize.localCheckpoint(_))
-        }
-      merged.write.mode("overwrite").partitionBy(partCol).parquet(targetPath)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val merged =
+      if (!exists) source
+      else {
+        // Partition pruning: only the touched partitions are scanned —
+        // the isin filter on the partition column prunes at planning
+        // time (collect of the distinct partition values is bounded by
+        // the partition count, not data size).
+        val touched = source.select(col(partCol)).distinct()
+          .collect().map(_.get(0)).toSeq
+        // Read with the SOURCE's schema: partition-column type inference
+        // would otherwise re-type numeric-looking string partition values
+        // ("01" → 1) and silently rewrite them on merge. An explicit
+        // schema sidesteps inference without touching session-global
+        // conf (which would race concurrent reads on the same session).
+        val current = spark.read.schema(source.schema).parquet(targetPath)
+          .filter(col(partCol).isin(touched: _*))
+        // Materialize BEFORE the write: the merged plan reads the same
+        // files the dynamic overwrite is about to replace — an eager
+        // checkpoint cuts that lineage (a table format gets this for
+        // free from snapshot isolation).
+        graft.plans.Merge.upsert(
+          current.select(source.columns.map(col): _*), source, keyCols)
+          .transform(Materialize.localCheckpoint(_))
       }
-    }
+    // dynamic overwrite as a write option, so the session conf is untouched
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(targetPath)
   }
 }

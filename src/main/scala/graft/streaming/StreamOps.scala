@@ -94,7 +94,6 @@ object StreamOps {
     * re-derived exactly as in [[graft.Tables.deriveEventTime]], which
     * normalizes either generation to the same two columns. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
     // FileStreamSource needs a directory base path; events.parquet is a
     // single file at test scale, so stream the parent dir with a glob that

@@ -134,4 +134,37 @@ class ConnectedComponentsSpec extends SparkSpec {
       Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
     assert(messages(ex).exists(_.contains("edge endpoint absent from nodes")))
   }
+
+  test("every uniqueNodes = true caller hands labels a distinct node frame") {
+    // A broken promise duplicates output rows instead of failing, so each
+    // caller's node frame is rebuilt here exactly as the caller builds it.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val dir = "/root/testdata/sf0.001"
+    def assertDistinct(what: String, nodes: DataFrame): Unit = {
+      val n = nodes.select(col("node"))
+      val (rows, distinctRows) = (n.count(), n.distinct().count())
+      assert(rows > 0 && rows == distinctRows, s"$what: $rows rows, $distinctRows distinct")
+    }
+    graft.util.Materialize.scoped {
+      // dedupClustersFromPairs and q212's first call
+      val docs = Tables.documents(spark, dir).select(col("doc_id").as("node"))
+      assertDistinct("documents", docs)
+      // q212's recluster: the survivors of the deletion-touched components
+      val pairs = operators.TextOps.q34MinhashLsh(spark, dir)
+      val full = ConnectedComponents.labels(
+          pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), docs,
+          uniqueNodes = true)
+        .withColumn("deleted", col("node") % 17 === 0)
+      val affected = full.filter(col("deleted")).select(col("component")).distinct()
+      assertDistinct("q212 affNodes", full.filter(!col("deleted"))
+        .join(affected, Seq("component"), "left_semi").select(col("node")))
+      // q265's part-name catalog
+      assertDistinct("q265 names", Tables.part(spark, dir)
+        .select(col("p_name").as("name")).distinct().select(col("name").as("node")))
+      // q203's media groups
+      assertDistinct("q203 groups",
+        operators.ComposeOps.ahashGroups(spark, dir).select(col("ahash").as("node")))
+    }
+  }
 }

@@ -105,7 +105,6 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("minhash_sigs: native fused loop ≡ the HOF hex formulation") {
-    graft.functions.MinHashSigs.register(spark)
     val df = Tables.documents(spark, dir).limit(50)
       .selectExpr("doc_id", "split(text, ' ') AS toks")
       .selectExpr("doc_id",
@@ -671,7 +670,6 @@ class CorpusOpsSpec extends SparkSpec {
     def mk(seed: Int): Seq[Double] =
       (0 until 64).map(i => math.sin(seed * 64 + i * 0.7) + (seed % 4) * 3.0)
     val e = (0 until 40).map(i => (i.toLong, mk(i))).toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark) // assignCells scoring
     val assigned = operators.VectorOps.assignCells(e)
     val books = operators.VectorOps.trainPqCodebooks(e)
     assert(books.count() == 16) // 4 subspaces x 4 codewords

@@ -16,7 +16,6 @@ class CosineSimilaritySpec extends SparkSpec {
   ).toDF("id", "a", "b")
 
   test("values: identical/orthogonal/opposite/zero-norm") {
-    CosineSimilarity.register(spark)
     val got = df.select($"id", round(CosineSimilarity($"a", $"b"), 9).as("c"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     assert(got(1L) == 1.0)
@@ -26,20 +25,17 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null input propagates") {
-    CosineSimilarity.register(spark)
     val d = Seq((Some(Seq(1.0)), Option.empty[Seq[Double]])).toDF("a", "b")
     assert(d.select(CosineSimilarity($"a", $"b")).collect()(0).isNullAt(0))
   }
 
   test("SQL registration: usable via expr()") {
-    CosineSimilarity.register(spark)
     val got = df.where($"id" === 3)
       .select(expr("cosine_sim(a, b)").as("c")).collect()(0).getDouble(0)
     assert(math.abs(got - (-1.0)) < 1e-12)
   }
 
   test("codegen and interpreted paths agree") {
-    CosineSimilarity.register(spark)
     val vals = (1 to 64).map(_.toDouble)
     val d = Seq((vals, vals.reverse)).toDF("a", "b")
     val codegen = d.select(CosineSimilarity($"a", $"b")).collect()(0).getDouble(0)

@@ -73,7 +73,6 @@ class CrawlOpsSpec extends SparkSpec {
       "propagates null, and stays inside whole-stage codegen") {
     val spark2 = spark
     import spark2.implicits._
-    graft.functions.NfcNormalize.register(spark)
     val df = Seq(
       Some("Cafe\u0301"),   // e + combining acute
       Some("nai\u0308ve"),  // i + combining diaeresis

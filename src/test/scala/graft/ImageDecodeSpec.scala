@@ -44,7 +44,6 @@ class ImageDecodeSpec extends SparkSpec {
     // (299v+587v+114v)/1000 = v exactly: decode is lossless for gray
     assert(decoded.toSeq === g.toSeq)
     // expression path over the same bytes (len 64 -> tiling is identity)
-    graft.functions.AHash64.register(spark)
     val spark2 = spark
     import spark2.implicits._
     val exprHash = Seq(g.map(_.toByte)).toDF("payload")

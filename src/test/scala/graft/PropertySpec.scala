@@ -134,7 +134,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("native simhash16 equals the 16-arm SQL aggregate formulation") {
-    graft.functions.SimHash16.register(spark)
     val sqlBits = (0 until 16).map { j =>
       val nib = j / 4 + 1
       val bp = 3 - (j % 4)

@@ -54,7 +54,6 @@ class Round17OpsSpec extends SparkSpec {
     def mk(j: Int): Seq[Double] =
       (0 until 64).map(i => math.sin(j * 64 + i * 0.7) + (j % 4) * 2.0)
     val e = (0 until 80).map(j => (j.toLong, mk(j))).toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark)
     val cents = operators.VectorOps.trainCentroids(e) // k=8 < 64: literal
     val lit0 = operators.VectorOps.assignCells(e, cents).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -80,7 +79,6 @@ class Round17OpsSpec extends SparkSpec {
       (0 until 8).map(i => math.sin(j * 8 + i * 0.37) + (j % 5) * 1.5)
     val rows = (0 until 4900).map(j => (j.toLong, mk(j)))
     val e = rows.toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark)
     val cents = operators.VectorOps.trainCentroids(e)
     assert(cents.length === 70)
     val assigned = operators.VectorOps.assignCells(e, cents).collect()
@@ -110,7 +108,6 @@ class Round17OpsSpec extends SparkSpec {
         (if (i % 3 == cluster) 5.0 else 0.1) + 0.01 * math.sin(j * 64 + i))
     val rows = (0 until 60).map(j => (j.toLong, mk(j % 3, j)))
     val e = rows.toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark)
     val c1 = operators.VectorOps.trainCentroids(e)
     val c2 = operators.VectorOps.trainCentroids(e)
     assert(c1.toSeq.map { case (id, v) => (id, v.toList) } ===
@@ -150,7 +147,6 @@ class Round17OpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val e = Tables.embeddings(spark, dir).select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-    graft.functions.CosineSimilarity.register(spark)
     operators.VectorOps.rankedCells(
         e, operators.VectorOps.trainCentroids(e), maxRn = 2)
       .select(col("vec_id"), col("cent_id"), col("rn")).collect()

@@ -322,8 +322,6 @@ class Round18OpsSpec extends SparkSpec {
 
   test("native function registration is idempotent per session: " +
       "re-registering neither fails nor re-binds (no registry WARN spam)") {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
     val out = Seq((Seq(1.0, 0.0), Seq(1.0, 0.0))).toDF("a", "b")
       .select(expr("cosine_sim(a, b)").as("c")).collect()
     assert(out.head.getDouble(0) === 1.0)

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared session for the whole forked test JVM (never stopped — the
-  * JVM exit tears it down; stopping mid-run would break later suites). */
+/** One shared session for the whole forked test JVM, built with the engine's
+  * own session policy (never stopped — the JVM exit tears it down; stopping
+  * mid-run would break later suites). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      new java.io.File("target/tmp/warehouse").getAbsolutePath)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.util.Session.local("4",
+    warehouseDir = Some(new java.io.File("target/tmp/warehouse").getAbsolutePath))
 }
 
 abstract class SparkSpec extends AnyFunSuite {

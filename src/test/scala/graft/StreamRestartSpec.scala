@@ -477,7 +477,6 @@ class StreamRestartSpec extends SparkSpec {
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
     try {
       val sfDir = "/root/testdata/sf0.001"
-      graft.functions.CosineSimilarity.register(spark)
       val cents = graft.operators.VectorOps.coarseCentroids(spark, sfDir)
       val full = graft.Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"))
@@ -516,7 +515,6 @@ class StreamRestartSpec extends SparkSpec {
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
     try {
       val sfDir = "/root/testdata/sf0.001"
-      graft.functions.CosineSimilarity.register(spark)
       val cents = graft.operators.VectorOps.coarseCentroids(spark, sfDir)
       val cbs = graft.operators.VectorOps.pqCodebookRows(spark, sfDir,
         residual = false)

@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Environment-read gate: the engine reads only the environment variables
-named below, each in the one file that owns it. An env hatch anywhere else
-under src/main/scala/graft — a debug switch, a refuted experiment kept
-alive — fails this check, so a new one has to be added here, by name, on
-purpose. `sys.env` and `System.getenv` reads count; a read whose name is
+"""Environment-read gate: the engine reads only the four environment
+variables named below (the core count, the query timeout and Bench's two
+inputs), each in the one file that owns it. Any other env read under
+src/main/scala/graft — a debug switch, a refuted experiment kept alive, a
+conf passed around SparkConf — fails this check, so a new one has to be
+added here, by name, on purpose. A Spark conf needs no env variable:
+`-Dspark.<key>=<value>` on the JVM already reaches SparkConf. `sys.env` and `System.getenv` reads count; a read whose name is
 not a string literal fails too. Comments are ignored.
 
     python3 tools/env_check.py
@@ -21,9 +23,6 @@ ALLOWED = {
     "GRAFT_QUERY_TIMEOUT_SEC": "util/Watchdog.scala",
     "SPARK_GRAFT_SF_DIR": "Bench.scala",
     "SPARK_GRAFT_BENCH_OUT": "Bench.scala",
-    # debug/profiling hatches still to be reviewed (ROADMAP item 4)
-    "GRAFT_CC_DEBUG": "plans/ConnectedComponents.scala",
-    "GRAFT_PROFILE_CONF": "Profile.scala",
 }
 
 read = re.compile(r"\bsys\.env\b|\bSystem\.getenv\b")
