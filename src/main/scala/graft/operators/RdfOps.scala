@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.Tables
 import graft.plans.{Closure, SparqlAlgebra, TripleStore}
 import graft.util.Materialize
@@ -1086,16 +1090,18 @@ object RdfOps {
       TripleStore.triples(sp, dir), TripleStore.langLabels(sp, dir))
 
   /** The directed nation/region entity graph the link-analysis loops
-    * (q198, q298, q249) walk: the (src, dst) edges and their node set.
-    * The edges are localCheckpointed (eager), not persisted: the loop's
-    * lazy per-round checkpoints re-analyze this table's logical plan
-    * every round, and the TripleStore union behind it is a deep tree —
-    * checkpointed it plans as one leaf (same one-pass materialization as
-    * persist+count). */
-  private def entityGraph(sp: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = Materialize.localCheckpoint(TripleStore.triples(sp, dir)
-      .filter(col("p").isin("nation", "region"))
-      .select(col("s").as("src"), col("o").as("dst")))
+    * (q198, q298, q249) walk: its (src, dst) edges, lazy. */
+  private[graft] def entityEdges(sp: SparkSession, dir: String): DataFrame =
+    TripleStore.triples(sp, dir).filter(col("p").isin("nation", "region"))
+      .select(col("s").as("src"), col("o").as("dst"))
+
+  /** A distributed loop's edges and their node set. The edges are
+    * localCheckpointed (eager), not persisted: the loop's lazy per-round
+    * checkpoints re-analyze this table's logical plan every round, and
+    * the TripleStore union behind it is a deep tree — checkpointed it
+    * plans as one leaf (same one-pass materialization as persist+count). */
+  private def cutGraph(edges: DataFrame): (DataFrame, DataFrame) = {
+    val e = Materialize.localCheckpoint(edges)
     (e, Materialize.persist(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()))
   }
@@ -1116,7 +1122,7 @@ object RdfOps {
     * across iterations. Top-20 under the total (pr desc, node) order
     * via TakeOrderedAndProject. */
   def q198Pagerank(sp: SparkSession, dir: String): DataFrame = {
-    val (e, nodes) = entityGraph(sp, dir)
+    val (e, nodes) = cutGraph(entityEdges(sp, dir))
     val n = nodes.count()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
     var pr: DataFrame = nodes.withColumn("pr", lit(1.0) / n)
@@ -1156,7 +1162,7 @@ object RdfOps {
     * round to 10dp before reuse; the top-20 sorts on the 8dp emitted
     * key (q198's round-before-use cut). */
   def q298PersonalizedPagerank(sp: SparkSession, dir: String): DataFrame = {
-    val (e, nodes) = entityGraph(sp, dir)
+    val (e, nodes) = cutGraph(entityEdges(sp, dir))
     val seeds = Materialize.localCheckpoint(e.filter(col("dst") === "R1")
       .select(col("src").as("node")).distinct())
     val ns = seeds.count().toDouble
@@ -1206,9 +1212,27 @@ object RdfOps {
     * edges) has score 0 and only ever adds +0.0 to a sum, so it is left
     * out until the one terminal node join fills both columns. Edges and
     * the node frame persist across rounds. Top-20 under (authority desc,
-    * node) via TakeOrderedAndProject. */
-  def q249Hits(sp: SparkSession, dir: String): DataFrame = {
-    val (e, nodes) = entityGraph(sp, dir)
+    * node) via TakeOrderedAndProject, over [[hits]]' scores. */
+  def q249Hits(sp: SparkSession, dir: String): DataFrame =
+    hits(entityEdges(sp, dir))
+      .orderBy(round(col("a"), 8).desc, col("node").asc).limit(20)
+      .select(col("node"), round(col("a"), 8).as("authority"),
+        round(col("h"), 8).as("hub"))
+
+  /** q249's three HITS rounds over the (src, dst) `edges`: (node, a, h)
+    * for every node, each score rounded to 10dp. An edge table of at most
+    * `localMaxRows` rows ([[graft.plans.Closure.LocalMaxRows]]) is
+    * collected once and the rounds replay on the driver; a larger one
+    * runs the distributed half-rounds. */
+  private[graft] def hits(edges: DataFrame,
+                          localMaxRows: Int = Closure.LocalMaxRows): DataFrame =
+    Closure.collectUpTo(edges, localMaxRows) match {
+      case Some(rows) => hitsLocal(edges, rows)
+      case None => hitsDistributed(edges)
+    }
+
+  private def hitsDistributed(edges: DataFrame): DataFrame = {
+    val (e, nodes) = cutGraph(edges)
     val n = nodes.count()
     // (node, v) scores summed over the edges from `from` to `to`: the raw
     // sums are cut (lazy: the norm's broadcast materializes them), and the
@@ -1229,9 +1253,39 @@ object RdfOps {
     nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
       .select(nodes("node"), coalesce(auth("v"), lit(0.0)).as("a"),
         coalesce(hub("v"), lit(0.0)).as("h"))
-      .orderBy(round(col("a"), 8).desc, col("node").asc).limit(20)
-      .select(col("node"), round(col("a"), 8).as("authority"),
-        round(col("h"), 8).as("hub"))
+  }
+
+  /** [[hitsDistributed]] replayed on the collected edge rows, in the same
+    * order: a null `from` key never joins, a null `to` key is one group
+    * whose sum counts into the norm `z` (as `groupBy` does), and the
+    * rounding is Spark's `round` on a double (`BigDecimal.valueOf`, HALF_UP). */
+  private def hitsLocal(edges: DataFrame, rows: Array[Row]): DataFrame = {
+    val es = rows.map(r => (r.get(0), r.get(1)))
+    val nodes = es.flatMap { case (s, d) => Seq(s, d) }.distinct
+    def round10(x: Double): Double =
+      java.math.BigDecimal.valueOf(x).setScale(10, java.math.RoundingMode.HALF_UP).doubleValue
+    def half(scores: Map[Any, Double], from: ((Any, Any)) => Any,
+             to: ((Any, Any)) => Any): Map[Any, Double] = {
+      val raw = mutable.LinkedHashMap.empty[Any, Double]
+      es.foreach { e =>
+        val k = from(e)
+        if (k != null) scores.get(k).foreach(v => raw(to(e)) = raw.get(to(e)).fold(v)(_ + v))
+      }
+      val z = raw.values.sum
+      raw.view.mapValues(r => round10(r / z)).toMap
+    }
+    var hub = nodes.map(_ -> 1.0 / nodes.length).toMap
+    var auth = Map.empty[Any, Double]
+    (1 to 3).foreach { _ =>
+      auth = half(hub, _._1, _._2)
+      hub = half(auth, _._2, _._1)
+    }
+    def score(m: Map[Any, Double], k: Any): Double =
+      if (k == null) 0.0 else m.getOrElse(k, 0.0)
+    edges.sparkSession.createDataFrame(
+      nodes.toSeq.map(k => Row(k, score(auth, k), score(hub, k))).asJava,
+      StructType(Seq(StructField("node", edges.schema("src").dataType),
+        StructField("a", DoubleType), StructField("h", DoubleType))))
   }
 
   /** k-core decomposition by iterative peeling over the bipartite

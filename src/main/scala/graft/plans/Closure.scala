@@ -1,7 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.util.Materialize
 
@@ -51,6 +55,11 @@ import graft.util.Materialize
   *    duplicate input edges); [[rootLabels]] deduplicates its edges once,
   *    in their eager cut, instead, so its forest rounds run without any
   *    exchange.
+  *  - '''Small graphs finish on the driver.''' Before any round, one
+  *    bounded collect ([[collectUpTo]]) fetches the edge table. When it
+  *    holds at most [[LocalMaxRows]] rows, the same rounds run on the
+  *    driver ([[walkLocal]]) and the answer comes back as a local
+  *    relation; a larger table takes the distributed loop above.
   */
 object Closure {
 
@@ -64,6 +73,26 @@ object Closure {
   private[graft] def hintIf(df: DataFrame, rows: Long,
                             cap: Long = BroadcastMaxRows): DataFrame =
     if (rows <= cap) broadcast(df) else df
+
+  /** The row cap under which a fixpoint finishes on the driver: the walk
+    * (and q249's HITS) collects its edge table once and iterates locally
+    * when the table has at most this many rows, and the walk also stays
+    * local only while its accumulated answer does. Each distributed round
+    * costs a scheduled job or two whatever its size, so at this scale the
+    * round trips, not the rows, are the cost. Driver memory bounds the
+    * cap: 100 000 edges of two short strings are about 20–30 MB as
+    * collected `Row`s, and the answer, its hash set and the local
+    * relation built from it are of the same order, well inside the 2 GB
+    * smallest driver heap in use. */
+  private[graft] val LocalMaxRows = 100000
+
+  /** `df`'s rows when it has at most `cap`, else None. One bounded
+    * collect (`limit(cap + 1)`) both sizes and fetches the table, so the
+    * choice follows the rows actually there, never a scale factor. */
+  private[graft] def collectUpTo(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length <= cap) Some(rows) else None
+  }
 
   /** One-job probe: true iff every src has at most one distinct dst (the
     * edge relation is a forest/functional relation). Lets callers that
@@ -88,14 +117,17 @@ object Closure {
     *   caller cannot promise.
     * @param twoHopAfterRounds forest-rule rounds before the two-hop stride
     *   (negative: [[TwoHopSwitch]])
+    * @param localMaxRows the driver-side cap (see [[LocalMaxRows]]); 0
+    *   always takes the distributed loop
     * @return DataFrame with column (node), distinct
     */
   def reachingTo(edges: DataFrame, seeds: DataFrame, maxIters: Int = 50,
                  functionalEdges: Boolean = false,
                  broadcastMaxRows: Long = BroadcastMaxRows,
-                 twoHopAfterRounds: Int = -1): DataFrame =
+                 twoHopAfterRounds: Int = -1,
+                 localMaxRows: Int = LocalMaxRows): DataFrame =
     walk(reversed(edges), _ => seeds.select(col("node")), maxIters,
-      functionalEdges, broadcastMaxRows, twoHopAfterRounds)
+      functionalEdges, broadcastMaxRows, twoHopAfterRounds, localMaxRows)
 
   /** (node, root) for every node from which some root is reachable by a
     * non-empty path: DOWNWARD label propagation from the root set instead
@@ -108,12 +140,13 @@ object Closure {
     * huge root set is never forced into a broadcast. */
   def rootLabels(edges: DataFrame, roots: DataFrame, maxIters: Int = 50,
                  functionalEdges: Boolean = false,
-                 broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+                 broadcastMaxRows: Long = BroadcastMaxRows,
+                 localMaxRows: Int = LocalMaxRows): DataFrame = {
     val r = roots.select(col("node").as("root"))
     walk(reversed(edges),
       e => e.join(r, e("src") === r("root")).select(r("root"), e("dst").as("node")),
       maxIters, functionalEdges, broadcastMaxRows, twoHopAfterRounds = -1,
-      dedupForest = false)
+      localMaxRows, dedupForest = false)
       .select(col("node"), col("root"))
   }
 
@@ -128,10 +161,11 @@ object Closure {
   def ancestorPairs(edges: DataFrame, maxIters: Int = 50,
                     functionalEdges: Boolean = false,
                     broadcastMaxRows: Long = BroadcastMaxRows,
-                    twoHopAfterRounds: Int = -1): DataFrame =
+                    twoHopAfterRounds: Int = -1,
+                    localMaxRows: Int = LocalMaxRows): DataFrame =
     walk(edges.select(col("src"), col("dst")),
       e => e.select(col("src").as("node"), col("dst").as("anc")), maxIters,
-      functionalEdges, broadcastMaxRows, twoHopAfterRounds)
+      functionalEdges, broadcastMaxRows, twoHopAfterRounds, localMaxRows)
 
   /** The forest rules' periodic cycle guard. The forest rules skip the
     * per-round anti-join because forest frontiers never revisit — but
@@ -169,21 +203,90 @@ object Closure {
       .select(e("src").as("src"), col("__dst2").as("dst"))
   }
 
-  /** The one semi-naive round loop (see the object doc).
+  /** The one semi-naive round loop (see the object doc): on the driver
+    * when the edge table and the answer fit under `localMaxRows`, else
+    * distributed.
     *
     * @param edges the oriented (src, dst) table the walk follows
-    * @param start the first frontier, built from the cut edge table; its
-    *   last column is the endpoint, the others are carried. Part of the
-    *   answer.
+    * @param start the first frontier, built from the (cut or collected)
+    *   edge table; its last column is the endpoint, the others are
+    *   carried. Part of the answer.
     * @param dedupForest keep the per-round `distinct` under the forest
     *   rules (the general rules always deduplicate); without it the edge
     *   cut is deduplicated instead
     */
   private def walk(edges: DataFrame, start: DataFrame => DataFrame,
                    maxIters: Int, forest: Boolean, broadcastMaxRows: Long,
-                   twoHopAfterRounds: Int,
+                   twoHopAfterRounds: Int, localMaxRows: Int,
                    dedupForest: Boolean = true): DataFrame = {
     val strideAfter = if (twoHopAfterRounds >= 0) twoHopAfterRounds else TwoHopSwitch
+    walkLocal(edges, start, maxIters, forest, strideAfter, localMaxRows)
+      .getOrElse(walkDistributed(edges, start, maxIters, forest,
+        broadcastMaxRows, strideAfter, dedupForest))
+  }
+
+  /** [[walk]] on the driver, row for row what the distributed loop returns
+    * for the same `maxIters` (see [[localRounds]]). None when the edge
+    * table, the start rows or the accumulated answer outgrow `cap`, or
+    * when the start endpoint and the edges differ in type (Spark would
+    * compare them after a cast). */
+  private def walkLocal(edges: DataFrame, start: DataFrame => DataFrame,
+                        maxIters: Int, forest: Boolean, strideAfter: Int,
+                        cap: Int): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    for {
+      rows <- collectUpTo(edges, cap)
+      first = start(spark.createDataFrame(rows.toSeq.asJava, edges.schema))
+      if edges.schema.forall(_.dataType == first.schema.last.dataType)
+      starts <- collectUpTo(first, cap)
+      answer <- localRounds(rows, starts, maxIters, forest, strideAfter, cap)
+    } yield spark.createDataFrame(answer.map(Row.fromSeq).asJava,
+      StructType(first.schema.map(_.copy(nullable = true))))
+  }
+
+  /** The distributed rounds replayed over collected (src, dst) `edges`
+    * from the `starts` rows: the same cycle-guard rounds and stride
+    * schedule (a stride round emits the one-hop layer and moves the
+    * frontier two hops), with Spark's null semantics (a null endpoint
+    * never joins an edge, and a row holding a null never matches the
+    * accumulator in the anti-join). Rounds work on sets: every multiset
+    * the distributed forest rounds carry ends in the terminal `distinct`,
+    * and a duplicate row only ever derives duplicates. None once the
+    * accumulated answer outgrows `cap`. */
+  private def localRounds(edges: Array[Row], starts: Array[Row], maxIters: Int,
+                          forest: Boolean, strideAfter: Int,
+                          cap: Int): Option[Seq[Vector[Any]]] = {
+    type R = Vector[Any]
+    val succ: Map[Any, Seq[Any]] = edges.toSeq.filter(!_.isNullAt(0))
+      .groupMap(_.get(0))(_.get(1)).view.mapValues(_.distinct).toMap
+    lazy val succ2 = succ.view.mapValues(_.flatMap(succ.getOrElse(_, Nil)).distinct).toMap
+    val acc = mutable.ArrayBuffer.empty[R]
+    val seen = mutable.HashSet.empty[R]
+    def add(rs: Seq[R]): Unit = { acc ++= rs; seen ++= rs }
+    var frontier: Seq[R] = starts.toSeq.map(_.toSeq.toVector).distinct
+    add(frontier)
+    var i = 0
+    while (i < maxIters && frontier.nonEmpty && acc.size <= cap) {
+      val antiJoin = !forest || i % CycleGuardEvery == CycleGuardEvery - 1
+      def hop(rel: Map[Any, Seq[Any]]): Seq[R] =
+        frontier.flatMap(r => rel.getOrElse(r.last, Nil).map(r.init :+ _)).distinct
+          .filter(r => !antiJoin || r.contains(null) || !seen(r))
+      val stride = forest && i >= strideAfter
+      val one = hop(succ)
+      val two = if (stride) hop(succ2) else Nil
+      add(one)
+      add(two)
+      frontier = if (stride) two else one
+      i += 1
+    }
+    if (acc.size > cap) None else Some(if (forest) acc.distinct.toSeq else acc.toSeq)
+  }
+
+  /** [[walk]]'s distributed loop. */
+  private def walkDistributed(edges: DataFrame, start: DataFrame => DataFrame,
+                              maxIters: Int, forest: Boolean,
+                              broadcastMaxRows: Long, strideAfter: Int,
+                              dedupForest: Boolean): DataFrame = {
     // without per-round dedup a doubled edge would double every frontier
     // row through it, hop after hop: dedup the edges once, in the cut
     val e = Materialize.lineageCut(

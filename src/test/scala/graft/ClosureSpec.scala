@@ -1,34 +1,65 @@
 package graft
 
-import graft.plans.Closure
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{col, concat, lit}
 
-/** J4 fixpoint semantics: reflexivity, transitivity, cycle termination. */
+import graft.plans.{Closure, TripleStore}
+
+/** J4 fixpoint semantics: reflexivity, transitivity, cycle termination.
+  * Each case runs the walk both ways: at `localMaxRows = 0` (the
+  * distributed loop) and at the default cap (small inputs finish on the
+  * driver), and both must return the same rows. */
 class ClosureSpec extends SparkSpec {
   import spark.implicits._
+
+  private def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+
+  private def sameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
+    val (x, y) = (a.collect().toSeq, b.collect().toSeq)
+    assert(x.diff(y).isEmpty && y.diff(x).isEmpty, s"$what: $x vs $y")
+  }
+
+  /** `run` at cap 0 and at the default cap: the first must take the
+    * distributed loop, the second the driver, and both return the same
+    * rows (as a multiset). Returns the driver-side result. */
+  private def bothPaths(run: Int => DataFrame): DataFrame = {
+    val distributed = run(0)
+    val local = run(Closure.LocalMaxRows)
+    assert(!onDriver(distributed), "cap 0 must take the distributed loop")
+    assert(onDriver(local), "a small input must finish on the driver")
+    sameRows(local, distributed, "driver vs distributed")
+    local
+  }
 
   test("reachingTo: reflexive + transitive over a chain") {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("src", "dst")
     val seeds = Seq("d").toDF("node")
-    val got = Closure.reachingTo(edges, seeds).as[String].collect().toSet
+    val got = bothPaths(c => Closure.reachingTo(edges, seeds, localMaxRows = c))
+      .as[String].collect().toSet
     assert(got == Set("a", "b", "c", "d"))
   }
 
   test("reachingTo: diamond converges without duplicates") {
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d")).toDF("src", "dst")
-    val got = Closure.reachingTo(edges, Seq("d").toDF("node")).as[String].collect()
+    val got = bothPaths(c => Closure.reachingTo(edges, Seq("d").toDF("node"),
+      localMaxRows = c)).as[String].collect()
     assert(got.length == got.distinct.length)
     assert(got.toSet == Set("a", "b", "c", "d"))
   }
 
   test("reachingTo: cycles terminate") {
     val edges = Seq(("a", "b"), ("b", "a"), ("b", "c")).toDF("src", "dst")
-    val got = Closure.reachingTo(edges, Seq("c").toDF("node")).as[String].collect().toSet
+    val got = bothPaths(c => Closure.reachingTo(edges, Seq("c").toDF("node"),
+      localMaxRows = c)).as[String].collect().toSet
     assert(got == Set("a", "b", "c"))
   }
 
   test("ancestorPairs: full transitive pairs on a chain") {
     val edges = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
-    val got = Closure.ancestorPairs(edges).as[(String, String)].collect().toSet
+    val got = bothPaths(c => Closure.ancestorPairs(edges, localMaxRows = c))
+      .as[(String, String)].collect().toSet
     assert(got == Set(("a", "b"), ("a", "c"), ("b", "c")))
   }
 
@@ -36,8 +67,8 @@ class ClosureSpec extends SparkSpec {
     val edges = Seq(("o1", "c1"), ("o2", "c2"), ("c1", "n1"), ("c2", "n1"),
       ("n1", "r1"), ("n2", "r2")).toDF("src", "dst")
     val roots = Seq("r1", "r2").toDF("node")
-    val got = Closure.rootLabels(edges, roots, functionalEdges = true)
-      .as[(String, String)].collect().toSet
+    val got = bothPaths(c => Closure.rootLabels(edges, roots, functionalEdges = true,
+      localMaxRows = c)).as[(String, String)].collect().toSet
     assert(got == Set(("n1", "r1"), ("c1", "r1"), ("c2", "r1"),
       ("o1", "r1"), ("o2", "r1"), ("n2", "r2")))
   }
@@ -45,8 +76,8 @@ class ClosureSpec extends SparkSpec {
   test("rootLabels: general graph — a diamond reaches both roots exactly once") {
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "r1"), ("c", "r2"))
       .toDF("src", "dst")
-    val got = Closure.rootLabels(edges, Seq("r1", "r2").toDF("node"))
-      .as[(String, String)].collect()
+    val got = bothPaths(c => Closure.rootLabels(edges, Seq("r1", "r2").toDF("node"),
+      localMaxRows = c)).as[(String, String)].collect()
     assert(got.length == got.distinct.length)
     assert(got.toSet == Set(("a", "r1"), ("a", "r2"), ("b", "r1"), ("c", "r2")))
   }
@@ -54,12 +85,13 @@ class ClosureSpec extends SparkSpec {
   test("rootLabels: matches ancestorPairs-then-filter on the forest shape") {
     val edges = Seq(("o1", "c1"), ("c1", "n1"), ("n1", "r1"), ("n2", "r1"))
       .toDF("src", "dst")
-    val viaPairs = Closure.ancestorPairs(edges, functionalEdges = true)
+    val viaPairs = bothPaths(c => Closure.ancestorPairs(edges, functionalEdges = true,
+        localMaxRows = c))
       .filter($"anc".startsWith("r"))
       .select($"node", $"anc".as("root"))
       .as[(String, String)].collect().toSet
-    val viaLabels = Closure.rootLabels(edges, Seq("r1").toDF("node"),
-      functionalEdges = true).as[(String, String)].collect().toSet
+    val viaLabels = bothPaths(c => Closure.rootLabels(edges, Seq("r1").toDF("node"),
+      functionalEdges = true, localMaxRows = c)).as[(String, String)].collect().toSet
     assert(viaLabels == viaPairs)
   }
 
@@ -67,8 +99,8 @@ class ClosureSpec extends SparkSpec {
     // a→b→r1→a is functional (one dst per src) but cyclic: the frontier
     // never empties on its own — the periodic guard must terminate it
     val edges = Seq(("a", "b"), ("b", "r1"), ("r1", "a")).toDF("src", "dst")
-    val got = Closure.rootLabels(edges, Seq("r1").toDF("node"),
-      functionalEdges = true, maxIters = 20)
+    val got = bothPaths(c => Closure.rootLabels(edges, Seq("r1").toDF("node"),
+      functionalEdges = true, maxIters = 20, localMaxRows = c))
       .as[(String, String)].collect()
     assert(got.length == got.distinct.length)
     assert(got.toSet == Set(("a", "r1"), ("b", "r1"), ("r1", "r1")))
@@ -76,7 +108,8 @@ class ClosureSpec extends SparkSpec {
 
   test("idempotence: closing a closed graph adds nothing") {
     val edges = Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("src", "dst")
-    val got = Closure.ancestorPairs(edges).as[(String, String)].collect().toSet
+    val got = bothPaths(c => Closure.ancestorPairs(edges, localMaxRows = c))
+      .as[(String, String)].collect().toSet
     assert(got == Set(("a", "b"), ("a", "c"), ("b", "c")))
   }
 
@@ -93,20 +126,23 @@ class ClosureSpec extends SparkSpec {
       val edges = (0 until n).flatMap(i => Seq.fill(copies)((s"v$i", s"v${i + 1}")))
         .toDF("src", "dst")
       val seeds = Seq(s"v$n").toDF("node")
-      val gen = Closure.reachingTo(edges, seeds).as[String].collect().toSet
-      val fun = Closure.reachingTo(edges, seeds, functionalEdges = true,
-        twoHopAfterRounds = switch).as[String].collect().toSeq
+      val gen = bothPaths(c => Closure.reachingTo(edges, seeds, localMaxRows = c))
+        .as[String].collect().toSet
+      val fun = bothPaths(c => Closure.reachingTo(edges, seeds, functionalEdges = true,
+        twoHopAfterRounds = switch, localMaxRows = c)).as[String].collect().toSeq
       assert(fun.toSet == gen, s"chain length $n, switch $switch")
       assert(fun.size == fun.distinct.size, s"distinct contract, $n/$switch")
-      val pGen = Closure.ancestorPairs(edges).as[(String, String)].collect().toSet
-      val pFun = Closure.ancestorPairs(edges, functionalEdges = true,
-        twoHopAfterRounds = switch).as[(String, String)].collect().toSeq
+      val pGen = bothPaths(c => Closure.ancestorPairs(edges, localMaxRows = c))
+        .as[(String, String)].collect().toSet
+      val pFun = bothPaths(c => Closure.ancestorPairs(edges, functionalEdges = true,
+        twoHopAfterRounds = switch, localMaxRows = c)).as[(String, String)].collect().toSeq
       assert(pFun.toSet == pGen, s"pairs, chain length $n, switch $switch")
       assert(pFun.size == pFun.distinct.size, s"pairs distinct, $n/$switch")
       if (switch == -1) { // rootLabels strides at the default switch only
-        val lGen = Closure.rootLabels(edges, seeds).as[(String, String)].collect().toSet
-        val lFun = Closure.rootLabels(edges, seeds, functionalEdges = true)
-          .as[(String, String)].collect().toSeq
+        val lGen = bothPaths(c => Closure.rootLabels(edges, seeds, localMaxRows = c))
+          .as[(String, String)].collect().toSet
+        val lFun = bothPaths(c => Closure.rootLabels(edges, seeds, functionalEdges = true,
+          localMaxRows = c)).as[(String, String)].collect().toSeq
         assert(lGen == (0 until n).map(i => (s"v$i", s"v$n")).toSet, s"labels, $n")
         assert(lFun.toSet == lGen, s"labels, chain length $n")
         assert(lFun.size == lFun.distinct.size, s"labels distinct, $n")
@@ -120,8 +156,8 @@ class ClosureSpec extends SparkSpec {
     val edges = Seq(("a", "r"), ("b", "a"), ("c", "a"), ("d", "b")).toDF("src", "dst")
     val seeds = Seq("r", "a").toDF("node")
     for (switch <- Seq(-1, 0)) {
-      val fun = Closure.reachingTo(edges, seeds, functionalEdges = true,
-        twoHopAfterRounds = switch).as[String].collect().toSeq
+      val fun = bothPaths(c => Closure.reachingTo(edges, seeds, functionalEdges = true,
+        twoHopAfterRounds = switch, localMaxRows = c)).as[String].collect().toSeq
       assert(fun.toSet == Set("a", "b", "c", "d", "r"), s"switch $switch")
       assert(fun.size == fun.distinct.size, s"switch $switch")
     }
@@ -130,18 +166,123 @@ class ClosureSpec extends SparkSpec {
   test("functional two-hop: cycles terminate under maxIters with set output") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     for (switch <- Seq(-1, 0)) {
-      val got = Closure.reachingTo(edges, Seq("a").toDF("node"),
-        maxIters = 6, functionalEdges = true, twoHopAfterRounds = switch)
-        .as[String].collect().toSeq
+      val got = bothPaths(c => Closure.reachingTo(edges, Seq("a").toDF("node"),
+        maxIters = 6, functionalEdges = true, twoHopAfterRounds = switch,
+        localMaxRows = c)).as[String].collect().toSeq
       assert(got.toSet == Set("a", "b") && got.size == 2, s"switch $switch")
-      val pairs = Closure.ancestorPairs(edges, maxIters = 6, functionalEdges = true,
-        twoHopAfterRounds = switch).as[(String, String)].collect().toSeq
+      val pairs = bothPaths(c => Closure.ancestorPairs(edges, maxIters = 6,
+        functionalEdges = true, twoHopAfterRounds = switch, localMaxRows = c))
+        .as[(String, String)].collect().toSeq
       assert(pairs.toSet == Set(("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")) &&
         pairs.size == 4, s"pairs, switch $switch")
     }
-    val labels = Closure.rootLabels(edges, Seq("a").toDF("node"), maxIters = 6,
-      functionalEdges = true).as[(String, String)].collect().toSeq
+    val labels = bothPaths(c => Closure.rootLabels(edges, Seq("a").toDF("node"),
+      maxIters = 6, functionalEdges = true, localMaxRows = c))
+      .as[(String, String)].collect().toSeq
     assert(labels.toSet == Set(("b", "a"), ("a", "a")) && labels.size == 2)
+  }
+
+  test("driver walk: a cyclic functional ring longer than the hop budget " +
+      "truncates exactly where the distributed rounds do") {
+    // 25-node ring, 10 rounds: two single hops, then eight stride rounds
+    // of two hops each (18 hops in all), the cycle guard on round 7; the
+    // general rules walk one hop per round
+    val n = 25
+    val edges = (0 until n).map(i => (s"v$i", s"v${(i + 1) % n}")).toDF("src", "dst")
+    val seed = Seq("v0").toDF("node")
+    val reach = bothPaths(c => Closure.reachingTo(edges, seed, maxIters = 10,
+      functionalEdges = true, twoHopAfterRounds = 2, localMaxRows = c)).collect()
+    assert(reach.length == 19)
+    val reachGen = bothPaths(c => Closure.reachingTo(edges, seed, maxIters = 10,
+      localMaxRows = c)).collect()
+    assert(reachGen.length == 11)
+    val pairs = bothPaths(c => Closure.ancestorPairs(edges, maxIters = 10,
+      functionalEdges = true, twoHopAfterRounds = 2, localMaxRows = c)).collect()
+    assert(pairs.length == n * 19)
+    // rootLabels strides after the default 6 rounds: 1 + 6 + 2 * 4 hops
+    val labels = bothPaths(c => Closure.rootLabels(edges, seed, maxIters = 10,
+      functionalEdges = true, localMaxRows = c)).collect()
+    assert(labels.length == 15)
+  }
+
+  test("driver walk: doubled edges through rootLabels stay one row per label") {
+    val forest = Seq(("o1", "c1"), ("o2", "c1"), ("c1", "n1"), ("c2", "n1"),
+      ("n1", "r1"), ("n2", "r2"))
+    val edges = (forest ++ forest).toDF("src", "dst")
+    val roots = Seq("r1", "r2").toDF("node")
+    val want = Set(("o1", "r1"), ("o2", "r1"), ("c1", "r1"), ("c2", "r1"),
+      ("n1", "r1"), ("n2", "r2"))
+    for (functional <- Seq(true, false)) {
+      val got = bothPaths(c => Closure.rootLabels(edges, roots,
+        functionalEdges = functional, localMaxRows = c)).as[(String, String)].collect()
+      assert(got.toSet == want && got.length == want.size, s"functional = $functional")
+    }
+  }
+
+  test("driver walk: null endpoints never join, on both paths") {
+    val edges = Seq[(String, String)](("a", "b"), (null, "b"), ("b", null), ("c", "a"))
+      .toDF("src", "dst")
+    val reach = bothPaths(c => Closure.reachingTo(edges, Seq("b").toDF("node"),
+      localMaxRows = c)).as[String].collect().toSet
+    assert(reach == Set("b", "a", null, "c"))
+    val pairs = bothPaths(c => Closure.ancestorPairs(edges, localMaxRows = c))
+      .as[(String, String)].collect().toSet
+    assert(pairs == Set(("a", "b"), (null, "b"), ("b", null), ("c", "a"),
+      ("a", null), (null, null), ("c", "b"), ("c", null)))
+    val labels = bothPaths(c => Closure.rootLabels(edges, Seq("b").toDF("node"),
+      functionalEdges = true, localMaxRows = c)).as[(String, String)].collect().toSet
+    assert(labels == Set(("a", "b"), (null, "b"), ("c", "b")))
+    // a null-carrying row never matches the accumulator in the anti-join,
+    // so on a cycle it is re-derived every round until maxIters: the
+    // driver walk must return the same duplicates
+    val cyclic = Seq[(String, String)]((null, "a"), ("a", "b"), ("b", "a"))
+      .toDF("src", "dst")
+    val dup = bothPaths(c => Closure.ancestorPairs(cyclic, maxIters = 4,
+      localMaxRows = c)).collect()
+    assert(dup.length > dup.distinct.length)
+  }
+
+  test("driver walk: exactly cap edges go local, cap + 1 go distributed, " +
+      "and an answer above the cap goes distributed") {
+    def edges(k: Int) = (0 until k).map(i => (s"a$i", s"b$i")).toDF("src", "dst")
+    val seed = Seq("b0").toDF("node")
+    val atCap = Closure.reachingTo(edges(5), seed, localMaxRows = 5)
+    val overCap = Closure.reachingTo(edges(6), seed, localMaxRows = 5)
+    assert(onDriver(atCap) && !onDriver(overCap))
+    sameRows(atCap, Closure.reachingTo(edges(5), seed, localMaxRows = 0), "cap edges")
+    assert(overCap.as[String].collect().toSet == Set("a0", "b0"))
+    // a 5-edge chain has 15 ancestor pairs: they fit a cap of 15, not of 5
+    val chain = (0 until 5).map(i => (s"v$i", s"v${i + 1}")).toDF("src", "dst")
+    val small = Closure.ancestorPairs(chain, localMaxRows = 5)
+    val fits = Closure.ancestorPairs(chain, localMaxRows = 15)
+    assert(!onDriver(small) && onDriver(fits))
+    sameRows(small, fits, "answer cap")
+    assert(fits.count() == 15L)
+  }
+
+  test("driver walk matches the distributed loop on the query inputs at sf0.001 " +
+      "(q16, q17, q87, q93)") {
+    val dir = "/root/testdata/sf0.001"
+    val regions = Tables.region(spark, dir)
+    val europe = regions.filter(col("r_name") === "EUROPE")
+      .select(concat(lit("R"), col("r_regionkey").cast("string")).as("node"))
+    val roots = regions.select(concat(lit("R"), col("r_regionkey").cast("string")).as("node"))
+    val all = TripleStore.edges(spark, dir)
+    val noLineitems = TripleStore.edges(spark, dir, withLineitems = false)
+    val q16 = bothPaths(c => Closure.reachingTo(all, europe, functionalEdges = true,
+      localMaxRows = c))
+    val q17 = bothPaths(c => Closure.rootLabels(noLineitems, roots,
+      functionalEdges = true, localMaxRows = c))
+    val q87 = bothPaths(c => Closure.reachingTo(noLineitems, Seq("R1").toDF("node"),
+      functionalEdges = Closure.isFunctional(noLineitems), localMaxRows = c))
+    assert(q16.count() > 1L && q17.count() > 1L && q87.count() > 1L)
+    val t = TripleStore.triples(spark, dir)
+    for (p <- Seq("nation", "region")) {
+      val e = t.filter(col("p") === p).select(col("s").as("src"), col("o").as("dst"))
+      val q93 = bothPaths(c => Closure.ancestorPairs(e,
+        functionalEdges = Closure.isFunctional(e), localMaxRows = c))
+      assert(q93.count() > 0L, p)
+    }
   }
 
   test("isFunctional probes forests vs fan-out") {
@@ -154,14 +295,15 @@ class ClosureSpec extends SparkSpec {
   test("reliable checkpoint mode (checkpoint dir set) matches localCheckpoint mode") {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "c")).toDF("src", "dst")
     val seeds = Seq("d").toDF("node")
-    val local = Closure.reachingTo(edges, seeds, functionalEdges = true)
-      .as[String].collect().toSet
+    val local = bothPaths(c => Closure.reachingTo(edges, seeds, functionalEdges = true,
+      localMaxRows = c)).as[String].collect().toSet
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val reliable = Closure.reachingTo(edges, seeds, functionalEdges = true)
-        .as[String].collect().toSet
-      val reliableGen = Closure.reachingTo(edges, seeds).as[String].collect().toSet
+      val reliable = bothPaths(c => Closure.reachingTo(edges, seeds,
+        functionalEdges = true, localMaxRows = c)).as[String].collect().toSet
+      val reliableGen = bothPaths(c => Closure.reachingTo(edges, seeds,
+        localMaxRows = c)).as[String].collect().toSet
       assert(reliable == local && reliableGen == local)
       assert(local == Set("a", "b", "c", "d", "x"))
     } finally {
@@ -182,13 +324,15 @@ class ClosureSpec extends SparkSpec {
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"),
       ("e", "a")).toDF("src", "dst")
     val seeds = Seq("d").toDF("node")
-    val broadcast = Closure.reachingTo(edges, seeds).as[String].collect().toSet
-    val shuffled = Closure.reachingTo(edges, seeds, broadcastMaxRows = 0L)
+    val broadcast = bothPaths(c => Closure.reachingTo(edges, seeds, localMaxRows = c))
       .as[String].collect().toSet
+    val shuffled = bothPaths(c => Closure.reachingTo(edges, seeds, broadcastMaxRows = 0L,
+      localMaxRows = c)).as[String].collect().toSet
     assert(shuffled == broadcast && shuffled == Set("a", "b", "c", "d", "e"))
-    val pairsB = Closure.ancestorPairs(edges).as[(String, String)].collect().toSet
-    val pairsS = Closure.ancestorPairs(edges, broadcastMaxRows = 0L)
+    val pairsB = bothPaths(c => Closure.ancestorPairs(edges, localMaxRows = c))
       .as[(String, String)].collect().toSet
+    val pairsS = bothPaths(c => Closure.ancestorPairs(edges, broadcastMaxRows = 0L,
+      localMaxRows = c)).as[(String, String)].collect().toSet
     assert(pairsS == pairsB)
   }
 
@@ -214,8 +358,8 @@ class ClosureSpec extends SparkSpec {
     try {
       val edges = Seq(("a", "r1"), ("b", "r2"), ("c", "a")).toDF("src", "dst")
       val roots = Seq("r1", "r2").toDF("node")
-      val got = Closure.rootLabels(edges, roots, broadcastMaxRows = 0L)
-        .as[(String, String)].collect().toSet
+      val got = bothPaths(c => Closure.rootLabels(edges, roots, broadcastMaxRows = 0L,
+        localMaxRows = c)).as[(String, String)].collect().toSet
       assert(got == Set(("a", "r1"), ("b", "r2"), ("c", "r1")))
       // listener callbacks are async (the bus drainer is private[spark]) —
       // wait for the plan stream to go quiet before asserting absence

@@ -5,10 +5,13 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
 
+import graft.operators.RdfOps
+import graft.plans.{Closure, TripleStore}
 import graft.streaming.StreamOps
 import graft.util.{Materialize, Watchdog}
 
@@ -79,6 +82,40 @@ class MaterializeSpec extends SparkSpec {
           }
           assert(r.isRight, s"$name failed: ${r.left.map(_.getMessage)}")
         }
+        assert(left == 0L, s"$name left $left cached partitions")
+        assert(files.isEmpty, s"$name left ${files.size} checkpoint files")
+      }
+    }
+  }
+
+  test("the distributed closure and HITS loops (cap 0) leave no cached " +
+      "partitions and no checkpoint files behind under Watchdog.run") {
+    // at sf0.001 the loop-family queries finish on the driver, so force
+    // the distributed loops here to keep their releases covered
+    val sc = spark.sparkContext
+    val edges = TripleStore.edges(spark, dir, withLineitems = false)
+    val roots = Tables.region(spark, dir)
+      .select(concat(lit("R"), col("r_regionkey").cast("string")).as("node"))
+    val loops = Seq[(String, () => DataFrame)](
+      "reachingTo" -> (() => Closure.reachingTo(edges, roots, functionalEdges = true,
+        localMaxRows = 0)),
+      "rootLabels" -> (() => Closure.rootLabels(edges, roots, functionalEdges = true,
+        localMaxRows = 0)),
+      "ancestorPairs" -> (() => Closure.ancestorPairs(edges, localMaxRows = 0)),
+      "hits" -> (() => RdfOps.hits(RdfOps.entityEdges(spark, dir), localMaxRows = 0)))
+    withCheckpointDir { ckpt =>
+      loops.foreach { case (name, loop) =>
+        @volatile var inside = (0L, Set.empty[Path])
+        val (left, files) = residue(ckpt) {
+          val r = Watchdog.run(sc, name, 300L) {
+            inside = residue(ckpt) {
+              loop().write.format("noop").mode("overwrite").save()
+            }
+          }
+          assert(r.isRight, s"$name failed: ${r.left.map(_.getMessage)}")
+        }
+        assert(inside._1 > 0L || inside._2.nonEmpty,
+          s"$name must have cached or checkpointed frames inside its scope")
         assert(left == 0L, s"$name left $left cached partitions")
         assert(files.isEmpty, s"$name left ${files.size} checkpoint files")
       }

@@ -161,4 +161,28 @@ class ModelOpsSpec extends SparkSpec {
     assert(auths.forall(_ >= 0.0) && rows.map(_.getDouble(2)).forall(_ >= 0.0))
     assert(auths.sum <= 1.0 + 1e-6)
   }
+
+  test("q249 HITS: the driver-side rounds return the distributed rounds' " +
+      "scores and the same 20 rows") {
+    import operators.RdfOps.{entityEdges, hits}
+    val e = entityEdges(spark, dir)
+    val (local, distributed) = (hits(e).collect().toSet, hits(e, localMaxRows = 0).collect().toSet)
+    assert(local.size > 20 && local == distributed)
+    val top = hits(e, localMaxRows = 0)
+      .orderBy(round(col("a"), 8).desc, col("node").asc).limit(20)
+      .select(col("node"), round(col("a"), 8).as("authority"), round(col("h"), 8).as("hub"))
+    assert(operators.RdfOps.q249Hits(spark, dir).collect().toSeq == top.collect().toSeq)
+  }
+
+  test("HITS: a null edge target is one group whose sum counts into the norm") {
+    import spark.implicits._
+    // a→b, a→null: the authority norm is 1/3 + 1/3, so b gets 0.5 (1.0 if
+    // the null group were dropped); a hubs alone, and the null node joins
+    // no score
+    val e = Seq[(String, String)](("a", "b"), ("a", null)).toDF("src", "dst")
+    for (cap <- Seq(0, plans.Closure.LocalMaxRows)) {
+      val got = operators.RdfOps.hits(e, cap).as[(String, Double, Double)].collect().toSet
+      assert(got == Set(("a", 0.0, 1.0), ("b", 0.5, 0.0), (null, 0.0, 0.0)), s"cap $cap")
+    }
+  }
 }
