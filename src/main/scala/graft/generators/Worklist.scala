@@ -1,67 +1,58 @@
 package graft.generators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.model.Triple
 
-/** Typed render generators + worklist expansion (SURVEY.md §2.7, §3.2).
+/** Columnar render generators + worklist expansion (SURVEY.md §2.7, §3.2).
   *
   * The reference renders persons, collects referenced-but-unrendered
   * places/institutions in global worklists (get_data_apis_vanilla.py:
   * 1043-1046, 155-161), then runs exactly one expansion round over them
   * (:1249-1275). The engine replaces the mutable shared graph + worklists
-  * with pure dataflow: flatMap generators emit triples, referenced ids are
-  * anti-joined (J8) against rendered subjects, and the second round renders
-  * the frontier — a 2-level semi-naive expansion with a fixed-point shape
-  * identical to [[graft.plans.Closure]] but depth-bounded by the reference's
-  * own behavior.
+  * with pure dataflow: each source row explodes into its `(s, p, o)`
+  * triples in columns (one fused stage, no object round trip), referenced
+  * ids are anti-joined (J8) against rendered subjects, and the second
+  * round renders the frontier — a 2-level semi-naive expansion with a
+  * fixed-point shape identical to [[graft.plans.Closure]] but
+  * depth-bounded by the reference's own behavior.
   */
 object Worklist {
 
-  final case class PersonRow(c_custkey: Long, c_name: String, c_nationkey: Int)
-  final case class PlaceRow(n_nationkey: Int, n_name: String, n_regionkey: Int)
+  /** G2-shaped person render: type/label/nation-reference triples. */
+  private[graft] def renderPersons(customer: DataFrame): DataFrame =
+    render(customer, id("C", "c_custkey"), "E21_Person", col("c_name"),
+      "nation", id("N", "c_nationkey"))
 
-  /** G2-shaped typed person render: type/label/nation-reference triples. */
-  def renderPerson(p: PersonRow): Seq[Triple] = {
-    val s = s"C${p.c_custkey}"
-    Seq(
-      Triple(s, "type", "E21_Person"),
-      Triple(s, "label", p.c_name, oType = "literal"),
-      Triple(s, "nation", s"N${p.c_nationkey}"))
+  /** G10-shaped place render. */
+  private def renderPlaces(nation: DataFrame): DataFrame =
+    render(nation, id("N", "n_nationkey"), "E53_Place", col("n_name"),
+      "region", id("R", "n_regionkey"))
+
+  /** A node IRI: its kind's prefix and the row's key, e.g. `C7`, `N3`. */
+  private def id(prefix: String, key: String): Column =
+    concat(lit(prefix), col(key).cast("string"))
+
+  private def render(rows: DataFrame, s: Column, kind: String, label: Column,
+                     refP: String, ref: Column): DataFrame = {
+    def t(p: String, o: Column) = struct(s.as("s"), lit(p).as("p"), o.as("o"))
+    rows.select(explode(array(t("type", lit(kind)), t("label", label), t(refP, ref))).as("t"))
+      .select(col("t.s"), col("t.p"), col("t.o"))
   }
 
-  /** G10-shaped typed place render. */
-  def renderPlace(n: PlaceRow): Seq[Triple] = {
-    val s = s"N${n.n_nationkey}"
-    Seq(
-      Triple(s, "type", "E53_Place"),
-      Triple(s, "label", n.n_name, oType = "literal"),
-      Triple(s, "region", s"R${n.n_regionkey}"))
+  /** Round 1 (persons) ∪ round 2 (places referenced by round 1 but not
+    * rendered by it), as (s, p, o) rows, not deduplicated. Semi- and
+    * anti-joins never multiply rows, so the frontier needs no `distinct`. */
+  private[graft] def rounds(spark: SparkSession, dir: String): DataFrame = {
+    val round1 = renderPersons(Tables.customer(spark, dir))
+    val place = id("N", "n_nationkey")
+    val frontier = Tables.nation(spark, dir)
+      .join(round1.filter(col("p") === "nation"), place === col("o"), "left_semi")
+      .join(round1.select(col("s")), place === col("s"), "left_anti")
+    round1.unionByName(renderPlaces(frontier))
   }
 
-  /** Round 1 (persons) → referenced-place worklist → round 2 (places),
-    * union, set-dedup (D4). Returns (s, p, o) rows. */
-  def expand(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val persons = Tables.customer(spark, dir)
-      .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-      .as[PersonRow]
-    val round1: Dataset[Triple] = persons.flatMap(renderPerson _)
-
-    // Worklist: referenced nation ids not yet rendered as subjects (J8).
-    val referenced = round1.filter(col("p") === "nation").select(col("o").as("ref"))
-    val rendered = round1.select(col("s").as("ref"))
-    val worklist = referenced.distinct().join(rendered.distinct(), Seq("ref"), "left_anti")
-
-    val places = Tables.nation(spark, dir)
-      .join(worklist, concat(lit("N"), col("n_nationkey").cast("string")) === col("ref"), "left_semi")
-      .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      .as[PlaceRow]
-    val round2: Dataset[Triple] = places.flatMap(renderPlace _)
-
-    round1.unionByName(round2).toDF()
-      .select(col("s"), col("p"), col("o"))
-      .dropDuplicates("s", "p", "o")
-  }
+  /** The 2-round expansion, set-deduplicated (D4). Returns (s, p, o) rows. */
+  def expand(spark: SparkSession, dir: String): DataFrame =
+    rounds(spark, dir).dropDuplicates("s", "p", "o")
 }

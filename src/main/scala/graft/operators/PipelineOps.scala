@@ -7,7 +7,7 @@ import graft.multimodal.Multimodal
 import graft.pipelines.PersonIndex
 import graft.plans.TripleStore
 
-/** End-to-end pipeline queries: typed-Dataset generators with worklist
+/** End-to-end pipeline queries: columnar render generators with worklist
   * expansion (§2.7/§3.2), multimodal feature extraction, and the §3.1
   * flagship person-index document pipeline.
   */
@@ -33,7 +33,7 @@ object PipelineOps {
   }
 
   /** §3.1 person-index pipeline: BGP → distinct → label service → doc
-    * projection → upsert dedup. */
+    * projection (unique per id by construction; the sink upserts). */
   def q46PersonIndex(s: SparkSession, dir: String): DataFrame =
     PersonIndex.documents(s, dir)
 

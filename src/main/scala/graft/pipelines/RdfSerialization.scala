@@ -10,7 +10,11 @@ import graft.sources.RdfIO
   * (get_data_apis_vanilla.py:1159-1291) as pure dataflow —
   * render rounds with worklist expansion → inverse-property rule (R1) →
   * set-dedup (D4) → N-Quads files (K3). The reference's global mutable
-  * graph + thread pool becomes one declarative job.
+  * graph + thread pool becomes one declarative job: every triple and its
+  * inverse is rendered in columns, and one `distinct` deduplicates them
+  * (the sink's own dedup finds its input already partitioned on its keys
+  * and adds no exchange). While the worklist joins broadcast (10 000 customers do), that
+  * `distinct` is the plan's only shuffle.
   */
 object RdfSerialization {
 
@@ -18,13 +22,14 @@ object RdfSerialization {
   def run(spark: SparkSession, dir: String, outPath: String,
           graphName: String = "urn:graph:apis"): Dataset[Quad] = {
     import spark.implicits._
-    val triples = Worklist.expand(spark, dir) // G2/G10 + J8 rounds
     // R1: inverse-property materialization at serialize time
-    // (get_data_apis_vanilla.py:1064-1065).
-    val inverses = triples.filter(col("p") === "nation")
-      .select(col("o").as("s"), lit("has_member").as("p"), col("s").as("o"))
-    val quads = triples.select(col("s"), col("p"), col("o"))
-      .unionByName(inverses)
+    // (get_data_apis_vanilla.py:1064-1065), in the same row as its edge.
+    val fwd = struct(col("s"), col("p"), col("o"))
+    val inv = struct(col("o").as("s"), lit("has_member").as("p"), col("s").as("o"))
+    val quads = Worklist.rounds(spark, dir)
+      .select(explode(when(col("p") === "nation", array(fwd, inv))
+        .otherwise(array(fwd))).as("t"))
+      .select(col("t.s"), col("t.p"), col("t.o"))
       .distinct()
       .select(lit(graphName).as("g"), col("s"), col("p"), col("o"),
         // Term fidelity: label objects are literals, everything else in

@@ -247,12 +247,12 @@ object Closure {
   /** The distributed rounds replayed over collected (src, dst) `edges`
     * from the `starts` rows: the same cycle-guard rounds and stride
     * schedule (a stride round emits the one-hop layer and moves the
-    * frontier two hops), with Spark's null semantics (a null endpoint
-    * never joins an edge, and a row holding a null never matches the
-    * accumulator in the anti-join). Rounds work on sets: every multiset
-    * the distributed forest rounds carry ends in the terminal `distinct`,
-    * and a duplicate row only ever derives duplicates. None once the
-    * accumulated answer outgrows `cap`. */
+    * frontier two hops), with the same null semantics (a null endpoint
+    * never joins an edge; the anti-join against the accumulator is
+    * null-safe, so a row holding a null matches itself). Rounds work on
+    * sets: every multiset the distributed forest rounds carry ends in the
+    * terminal `distinct`, and a duplicate row only ever derives
+    * duplicates. None once the accumulated answer outgrows `cap`. */
   private def localRounds(edges: Array[Row], starts: Array[Row], maxIters: Int,
                           forest: Boolean, strideAfter: Int,
                           cap: Int): Option[Seq[Vector[Any]]] = {
@@ -270,7 +270,7 @@ object Closure {
       val antiJoin = !forest || i % CycleGuardEvery == CycleGuardEvery - 1
       def hop(rel: Map[Any, Seq[Any]]): Seq[R] =
         frontier.flatMap(r => rel.getOrElse(r.last, Nil).map(r.init :+ _)).distinct
-          .filter(r => !antiJoin || r.contains(null) || !seen(r))
+          .filter(r => !antiJoin || !seen(r))
       val stride = forest && i >= strideAfter
       val one = hop(succ)
       val two = if (stride) hop(succ2) else Nil
@@ -280,6 +280,15 @@ object Closure {
       i += 1
     }
     if (acc.size > cap) None else Some(if (forest) acc.distinct.toSeq else acc.toSeq)
+  }
+
+  /** `rows` without those that equal a `seen` row on `cols`, nulls
+    * included (`<=>`): a row holding a null is found in the accumulator
+    * like any other, so a cycle through it ends instead of re-deriving it
+    * every round until `maxIters`. */
+  private def unseen(rows: DataFrame, seen: DataFrame, cols: Seq[String]): DataFrame = {
+    val s = seen.select(cols.map(c => col(c).as(s"__seen_$c")): _*)
+    rows.join(s, cols.map(c => col(c) <=> col(s"__seen_$c")).reduce(_ && _), "left_anti")
   }
 
   /** [[walk]]'s distributed loop. */
@@ -318,7 +327,7 @@ object Closure {
       val deduped = if (forest && !dedupForest) stepped else stepped.distinct()
       val next = Materialize.lineageCut(
         if (forest && i % CycleGuardEvery != CycleGuardEvery - 1) deduped
-        else deduped.join(hintIf(acc, accRows, broadcastMaxRows), cols, "left_anti"),
+        else unseen(deduped, hintIf(acc, accRows, broadcastMaxRows), cols),
         eager = false)
       // One action per round: it materializes the lazy cut AND answers the
       // emptiness question. acc stays a union of already-cut frontiers —

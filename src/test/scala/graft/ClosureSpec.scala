@@ -232,14 +232,15 @@ class ClosureSpec extends SparkSpec {
     val labels = bothPaths(c => Closure.rootLabels(edges, Seq("b").toDF("node"),
       functionalEdges = true, localMaxRows = c)).as[(String, String)].collect().toSet
     assert(labels == Set(("a", "b"), (null, "b"), ("c", "b")))
-    // a null-carrying row never matches the accumulator in the anti-join,
-    // so on a cycle it is re-derived every round until maxIters: the
-    // driver walk must return the same duplicates
+    // the anti-join against the accumulator is null-safe: a null-carrying
+    // row on a cycle is found again and ends, so each pair comes once
     val cyclic = Seq[(String, String)]((null, "a"), ("a", "b"), ("b", "a"))
       .toDF("src", "dst")
-    val dup = bothPaths(c => Closure.ancestorPairs(cyclic, maxIters = 4,
-      localMaxRows = c)).collect()
-    assert(dup.length > dup.distinct.length)
+    val once = bothPaths(c => Closure.ancestorPairs(cyclic, maxIters = 4,
+      localMaxRows = c)).as[(String, String)].collect()
+    assert(once.length == once.distinct.length)
+    assert(once.toSet == Set((null, "a"), ("a", "b"), ("b", "a"), (null, "b"),
+      ("a", "a"), ("b", "b")))
   }
 
   test("driver walk: exactly cap edges go local, cap + 1 go distributed, " +

@@ -1,18 +1,18 @@
 package graft
 
 import graft.generators.Worklist
-import graft.model.Triple
 
-/** Typed generators + worklist expansion (G2/G10 + J8). */
+/** Columnar render generators + worklist expansion (G2/G10 + J8). */
 class GeneratorSpec extends SparkSpec {
   import spark.implicits._
 
   test("renderPerson emits type/label/nation reference") {
-    val t = Worklist.renderPerson(Worklist.PersonRow(7, "Ada", 3))
+    val one = Seq((7L, "Ada", 3)).toDF("c_custkey", "c_name", "c_nationkey")
+    val t = Worklist.renderPersons(one).as[(String, String, String)].collect().toSeq
     assert(t == Seq(
-      Triple("C7", "type", "E21_Person"),
-      Triple("C7", "label", "Ada", oType = "literal"),
-      Triple("C7", "nation", "N3")))
+      ("C7", "type", "E21_Person"),
+      ("C7", "label", "Ada"),
+      ("C7", "nation", "N3")))
   }
 
   test("worklist expansion renders only referenced places (J8 anti-join)") {

@@ -1,11 +1,18 @@
 package graft
 
-import graft.pipelines.{GeonamesPipeline, RdfSerialization}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
+
+import graft.model.Quad
+import graft.pipelines.{GeonamesPipeline, PersonIndex, RdfSerialization}
+import graft.sinks.Sinks
 import graft.sources.RdfIO
 
 /** End-to-end pipeline flows observed at their file outputs. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  private val dir = "/root/testdata/sf0.001"
 
   test("§3.2 RDF serialization: rounds → R1 → dedup → N-Quads files") {
     val out = new java.io.File("target/tmp/apis-nquads").getAbsolutePath
@@ -19,6 +26,46 @@ class PipelineSpec extends SparkSpec {
     assert(nation == members && nation.nonEmpty)
     // All quads carry the named graph.
     assert(back.forall(_.g == "urn:graph:apis"))
+  }
+
+  test("§3.2 RDF serialization: one shuffle, no object render, the typed " +
+      "formulation's quads") {
+    // reference: typed render → worklist round → inverse union → distinct
+    val persons = Tables.customer(spark, dir)
+      .select("c_custkey", "c_name", "c_nationkey").as[(Long, String, Int)].collect()
+    val places = Tables.nation(spark, dir)
+      .select("n_nationkey", "n_name", "n_regionkey").as[(Int, String, Int)].collect()
+    val round1 = persons.toSeq.flatMap { case (k, name, n) =>
+      Seq((s"C$k", "type", "E21_Person"), (s"C$k", "label", name), (s"C$k", "nation", s"N$n"))
+    }
+    val frontier = round1.filter(_._2 == "nation").map(_._3).toSet -- round1.map(_._1)
+    val round2 = places.toSeq.filter(n => frontier(s"N${n._1}")).flatMap { case (k, name, r) =>
+      Seq((s"N$k", "type", "E53_Place"), (s"N$k", "label", name), (s"N$k", "region", s"R$r"))
+    }
+    val triples = (round1 ++ round2).distinct
+    val inverses = triples.filter(_._2 == "nation").map(t => (t._3, "has_member", t._1))
+    val expected = (triples ++ inverses).toSet.map { t: (String, String, String) =>
+      Quad("urn:graph:apis", t._1, t._2, t._3, if (t._2 == "label") "literal" else "iri")
+    }
+    val out = new java.io.File("target/tmp/apis-nquads-plan").getAbsolutePath
+    val plans = capturedPlans { RdfSerialization.run(spark, dir, out) }
+    assert(RdfIO.readQuads(spark, out).collect().toSet == expected)
+    val written = plans.filter(_.toString.contains("InsertIntoHadoopFsRelation"))
+    assert(written.length == 1, s"${plans.length} plans captured")
+    val all = nodes(written.head)
+    assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, written.head.toString)
+    assert(!all.exists(_.nodeName.contains("MapPartitions")), written.head.toString)
+  }
+
+  test("§3.1 person index: documents are unique per id, and the JSONL sink " +
+      "writes them as they are") {
+    val docs = PersonIndex.documents(spark, dir)
+    val rows = docs.collect()
+    assert(rows.nonEmpty && rows.map(_.getAs[String]("id")).distinct.length == rows.length)
+    val out = new java.io.File("target/tmp/person-docs").getAbsolutePath
+    Sinks.writeJsonlDocs(docs, "id", "label", out)
+    val back = spark.read.json(out).select(docs.columns.toSeq.map(col): _*).collect()
+    assert(back.toSet == rows.toSet && back.length == rows.length)
   }
 
   test("§3.3 TTL harvest: pages → named graph → N-Quads files") {

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{TextOps, VectorOps}
 
@@ -24,45 +22,6 @@ import graft.operators.{TextOps, VectorOps}
 class PlanPostureSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  /** All physical nodes, descending through AQE wrappers: query stages
-    * and reused exchanges are LeafExecNodes whose real subtree hangs off
-    * a non-children field — a naive TreeNode walk never sees inside. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        Seq(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        Seq(r.child)
-      case other => other.children
-    }
-    Seq(p) ++ kids.flatMap(nodes)
-  }
-
-  /** Runs `body`, returning every physical plan any of its jobs executed
-    * (listener callbacks are async — waits for the stream to go quiet). */
-  private def capturedPlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val n = plans.size()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
-  }
 
   private def unpartitioned(p: SparkPlan): Seq[WindowExec] =
     nodes(p).collect { case w: WindowExec if w.partitionSpec.isEmpty => w }

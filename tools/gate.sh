@@ -11,6 +11,8 @@
 #   0. tools/readme_check.py + tools/lifecycle_check.py + tools/env_check.py
 #      (source lints)
 #   1. sbt compile
+#   1b. perfbench/run.py --selftest (the benchmark harness builds against
+#      the engine and attributes jobs to operations)
 #   2. sbt test (full ScalaTest suite)
 #   3. graft.Verify + tools/check.py at the gate SF (oracle hash-match)
 #   4. graft.Bench at the gate SF (one timed pass; writes bench_latest.json)
@@ -39,6 +41,9 @@ step "lifecycle" python3 tools/lifecycle_check.py
 # file — no new env hatch slips in unnamed
 step "env"      python3 tools/env_check.py
 step "compile"  sbt -batch compile
+# the benchmark compiles the engine from source and attributes each job to
+# its operation by job group: an engine change that breaks either fails here
+step "perfbench" python3 perfbench/run.py --selftest
 step "test"     sbt -batch test
 step "verify"   sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify"
 step "oracle"   python3 tools/check.py "$SF_DIR" "$OUT_DIR/verify"
