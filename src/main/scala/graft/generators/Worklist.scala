@@ -42,13 +42,15 @@ object Worklist {
 
   /** Round 1 (persons) ∪ round 2 (places referenced by round 1 but not
     * rendered by it), as (s, p, o) rows, not deduplicated. Semi- and
-    * anti-joins never multiply rows, so the frontier needs no `distinct`. */
+    * anti-joins never multiply rows, so the frontier needs no `distinct`.
+    * Every render emits one `type` triple per subject, so the rendered
+    * subjects are those triples' `s`: one row per subject. */
   private[graft] def rounds(spark: SparkSession, dir: String): DataFrame = {
     val round1 = renderPersons(Tables.customer(spark, dir))
     val place = id("N", "n_nationkey")
     val frontier = Tables.nation(spark, dir)
       .join(round1.filter(col("p") === "nation"), place === col("o"), "left_semi")
-      .join(round1.select(col("s")), place === col("s"), "left_anti")
+      .join(round1.filter(col("p") === "type").select(col("s")), place === col("s"), "left_anti")
     round1.unionByName(renderPlaces(frontier))
   }
 

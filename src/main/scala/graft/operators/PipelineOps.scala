@@ -32,8 +32,9 @@ object PipelineOps {
         .repartition(s.sparkContext.defaultParallelism)).toDF()
   }
 
-  /** §3.1 person-index pipeline: BGP → distinct → label service → doc
-    * projection (unique per id by construction; the sink upserts). */
+  /** §3.1 person-index pipeline: the BGP core read as one customer scan →
+    * broadcast label pick → doc projection (unique per id by construction;
+    * the sink upserts). */
   def q46PersonIndex(s: SparkSession, dir: String): DataFrame =
     PersonIndex.documents(s, dir)
 

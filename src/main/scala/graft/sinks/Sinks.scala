@@ -13,7 +13,9 @@ import graft.util.Materialize
   * foreachPartition HTTP bulk import against the search backend with the
   * same upstream dedup.
   *
-  * K2 (geonames_place_index.py:45-53) is a plain JSON file side-output.
+  * K2 (geonames_place_index.py:45-53) is a plain JSON file side-output:
+  * [[graft.pipelines.GeonamesPipeline]] writes it partitioned, one part file
+  * per task; `JsonlSinkProvider` is the commit-protocol path.
   */
 object Sinks {
 
@@ -33,12 +35,6 @@ object Sinks {
   def writeJsonlDocs(df: DataFrame, idCol: String, versionCol: String,
                      path: String): Unit =
     upsertDedup(df, idCol, versionCol).write.mode("overwrite").json(path)
-
-  /** K2: single-file JSON side-output (test-scale only — the coalesce(1)
-    * single-writer path is deliberately quarantined here and not used by any
-    * scale-path operator). */
-  def writeJsonSideOutput(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(path)
 
   /** Copy-on-write MERGE into a partitioned parquet table — the file-level
     * half of [[graft.plans.Merge]]: only partitions the source actually

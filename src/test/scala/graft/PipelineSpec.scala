@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit}
 
+import graft.functions.Registry
 import graft.model.Quad
 import graft.pipelines.{GeonamesPipeline, PersonIndex, RdfSerialization}
+import graft.plans.{SparqlAlgebra, TripleStore}
 import graft.sinks.Sinks
-import graft.sources.RdfIO
+import graft.sources.{GeonamesTsv, RdfIO}
 
 /** End-to-end pipeline flows observed at their file outputs. */
 class PipelineSpec extends SparkSpec {
@@ -68,6 +70,37 @@ class PipelineSpec extends SparkSpec {
     assert(back.toSet == rows.toSet && back.length == rows.length)
   }
 
+  test("§3.1 person index: one customer scan equals the BGP formulation, " +
+      "and the sink's write runs one shuffle") {
+    // reference: triple patterns → BGP join → DISTINCT → label service
+    for (sf <- Seq(dir, s"${new java.io.File(dir).getParent}/sf0.01")) {
+      val t = TripleStore.triples(spark, sf)
+      val core = SparqlAlgebra.bgp(Seq(
+        SparqlAlgebra.patternConstO(t, "type", "Person", "c"),
+        SparqlAlgebra.pattern(t, "nation", "c", "n"),
+        SparqlAlgebra.pattern(t, "label", "c", "name"))).distinct()
+      val expected = SparqlAlgebra.labelService(core, TripleStore.langLabels(spark, sf),
+          "n", "country", Seq("de", "en"))
+        .select(
+          Registry.normalizeId(concat(lit("http://raw.example/item/"), col("c")),
+            "http://ex.org/entity/").as("id"),
+          col("name"), col("country"),
+          Registry.labelPlace(col("name"), col("country"), col("n")).as("label"))
+        .collect()
+      val docs = PersonIndex.documents(spark, sf).collect()
+      assert(expected.nonEmpty && docs.toSet == expected.toSet, sf)
+      assert(docs.length == expected.length, sf)
+    }
+    val out = new java.io.File("target/tmp/person-docs-plan").getAbsolutePath
+    val plans = capturedPlans {
+      Sinks.writeJsonlDocs(PersonIndex.documents(spark, dir), "id", "label", out)
+    }
+    val written = plans.filter(_.toString.contains("InsertIntoHadoopFsRelation"))
+    assert(written.length == 1, s"${plans.length} plans captured")
+    val all = nodes(written.head)
+    assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, written.head.toString)
+  }
+
   test("§3.3 TTL harvest: pages → named graph → N-Quads files") {
     // First chunk is real Turtle (prefixes + ';' continuation), second is a
     // bare N-Triples line — both arrive through the same turtle parse.
@@ -103,5 +136,31 @@ class PipelineSpec extends SparkSpec {
     val vienna = docs.collect()(0)
     assert(vienna.getAs[String]("id") == "https://sws.geonames.org/2761369/")
     assert(vienna.getAs[String]("label") == "Vienna (AT) - PPLC")
+  }
+
+  test("§7.2 slice 1: GeoNames writes one part file per input split, " +
+      "with no single-writer coalesce") {
+    val in = new java.io.File("target/tmp/geonames-splits").getAbsolutePath
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
+    for (f <- 0 until 3) {
+      val rows = (0 until 4).map { r =>
+        val id = 1000 * f + r
+        Seq(id.toString, s"Place $id", s"Place $id", "", s"4$f.$r", s"1$r.$f",
+          "P", "PPL", if (r % 2 == 0) "AT" else "", "", "09", "", "", "",
+          s"${100 * id}", "", "193", "Europe/Vienna", "2022-10-04").mkString("\t")
+      }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/part-$f.tsv"),
+        rows.mkString("", "\n", "\n"))
+    }
+    val out = new java.io.File("target/tmp/geonames-split-docs").getAbsolutePath
+    val plans = capturedPlans { GeonamesPipeline.run(spark, in, out) }
+    val written = plans.filter(_.toString.contains("InsertIntoHadoopFsRelation"))
+    assert(written.length == 1, s"${plans.length} plans captured")
+    assert(!nodes(written.head).exists(_.nodeName.contains("Coalesce")), written.head.toString)
+    val parts = new java.io.File(out).list().filter(_.startsWith("part-"))
+    assert(parts.length > 1, parts.mkString(", "))
+    val expected = GeonamesTsv.toDocuments(GeonamesTsv.read(spark, in))
+    val back = spark.read.schema(expected.schema).json(out).collect()
+    assert(back.length == 12 && back.toSet == expected.collect().toSet)
   }
 }

@@ -10,6 +10,11 @@ scope releases (or free one behind the scope's back). Exempt:
 util/Materialize.scala. Calls spelled `Materialize.<method>(` are the
 sanctioned form.
 
+Single writers: a `.coalesce(1)` or `.repartition(1)` funnels a whole
+frame through one task, so its scan, projection and write run on one core
+whatever the input's splits. Sinks write partitioned, one file per task.
+Exempt: Verify.scala, whose oracle dump writes one parquet file per query.
+
 Session state: `graft.util.Session.local` installs the session policy once,
 at build time, and is the only `SparkSession.builder`. Outside
 util/Session.scala, a `.conf.set(` / `.conf.unset(`, a `functionRegistry`
@@ -47,6 +52,8 @@ RULES = [
      re.compile(r"\.create(OrReplace)?(Global)?TempView\("), session),
     ("session builder (build through graft.util.Session.local)",
      re.compile(r"\bSparkSession\.builder\b"), session),
+    ("single-writer repartition (write partitioned, one file per task)",
+     re.compile(r"\.(coalesce|repartition)\(\s*1\s*\)"), graft / "Verify.scala"),
 ]
 
 bad = []
@@ -65,4 +72,5 @@ if bad:
     sys.exit(1)
 print("lifecycle-check: no direct persist/cache/checkpoint/unpersist outside "
       "util/Materialize.scala; no conf write, function registration, temp view "
-      "or session builder outside util/Session.scala")
+      "or session builder outside util/Session.scala; no coalesce(1)/"
+      "repartition(1) outside Verify.scala")
